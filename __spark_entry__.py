@@ -73,7 +73,7 @@ def _reg(spark: SparkSession, sf_dir: str, *names: str) -> None:
 # spatial flagship helpers (deterministic synthetic inputs; no external data)
 # ---------------------------------------------------------------------------
 
-_LAYER_CACHE: dict[str, list] = {}
+_LAYER_CACHE: dict[str, DataFrame] = {}
 
 
 def _polygon_layer(spark: SparkSession) -> DataFrame:
@@ -81,7 +81,11 @@ def _polygon_layer(spark: SparkSession) -> DataFrame:
     Vienna-shaped fixture (cached per session)."""
     from osm_public_space_mapper_spark.fixtures.elements import BBOX_4326, elements_to_spark
     from osm_public_space_mapper_spark.operators.overlay_core import OverlayConfig
-    from osm_public_space_mapper_spark.plans.pipeline import projected_bbox_ring, run_pipeline
+    from osm_public_space_mapper_spark.plans.pipeline import (
+        projected_bbox_ring,
+        release_overlay_records,
+        run_pipeline,
+    )
 
     import os
     import tempfile
@@ -91,17 +95,17 @@ def _polygon_layer(spark: SparkSession) -> DataFrame:
     if key not in _LAYER_CACHE:
         # deterministic fixture layer → persist once per machine (content is
         # a pure function of the seed/config; benches reuse across sessions).
-        # Cache key includes a fingerprint of the geometry-pipeline sources so
-        # code changes invalidate it; OSPM_LAYER_CACHE=0 disables entirely.
+        # Cache key is a fingerprint of every engine source file so any code
+        # change invalidates it; OSPM_LAYER_CACHE=0 disables entirely.
         import hashlib
 
         pkg = os.path.join(os.path.dirname(os.path.abspath(__file__)), "osm_public_space_mapper_spark")
         hasher = hashlib.sha1()
-        for rel in ("operators/overlay_core.py", "plans/pipeline.py", "geo/raster.py",
-                    "geo/kernels.py", "geo/laea.py", "geo/offset.py", "fixtures/elements.py",
-                    "functions/classify.py", "functions/predicates.py", "operators/barriers.py"):
-            with open(os.path.join(pkg, rel), "rb") as fh:
-                hasher.update(fh.read())
+        for d, _, files in sorted(os.walk(pkg)):
+            for fn in sorted(files):
+                if fn.endswith(".py"):
+                    with open(os.path.join(d, fn), "rb") as fh:
+                        hasher.update(os.path.relpath(os.path.join(d, fn), pkg).encode() + fh.read())
         tag = hasher.hexdigest()[:10]
         cache_path = os.path.join(tempfile.gettempdir(), f"ospm_layer_{tag}.parquet")
         if os.environ.get("OSPM_LAYER_CACHE", "1") == "0":
@@ -115,9 +119,15 @@ def _polygon_layer(spark: SparkSession) -> DataFrame:
             layer = run_pipeline(elements_to_spark(spark), cfg, overlay_res=8)
             if cache_path:
                 layer.write.mode("overwrite").parquet(cache_path)
+                # the re-read layer no longer needs the records' checkpoints;
+                # without a cache path the cached layer still recomputes
+                # from them if evicted, so they stay pinned
+                release_overlay_records(layer)
                 layer = spark.read.parquet(cache_path)
             layer = layer.cache()
         layer.count()
+        # frames of an earlier (stopped) session are dead: keep only this one
+        _LAYER_CACHE.clear()
         _LAYER_CACHE[key] = layer
     return _LAYER_CACHE[key]
 
@@ -133,6 +143,7 @@ def _tiles(spark: SparkSession) -> DataFrame:
     if key not in _TILES_CACHE:
         t = tiling.rasterize_tiles(_polygon_layer(spark), tile_res=10, px=0.25).cache()
         t.count()
+        _TILES_CACHE.clear()
         _TILES_CACHE[key] = t
     return _TILES_CACHE[key]
 

@@ -1,36 +1,32 @@
-"""Geometry pandas UDFs — Arrow-vectorized, one numpy call per batch.
+"""Geometry column functions: Arrow-vectorized pandas UDFs where the maths
+needs numpy, pure Catalyst expressions where it does not.
 
 st_project / st_unproject: EPSG:4326 ↔ EPSG:3035
   (reference clean_data.py:117-126, export_data.py:33-39 via pyproj)
-st_bbox: per-row bbox struct — sargable prefilter for bbox crop / cell cover
+bbox_expr: per-row bbox struct, Catalyst array_min/array_max over the
+  flattened points — sargable prefilter for bbox crop / cell cover
   (reference clean_data.py:366-370)
 st_area: shoelace area (reference significance thresholds,
   analyse_access.py:247-248,331)
-cell_of_point / cells_of_bbox: cell-index encode for join bucketing.
+cell_expr / cover_expr: Catalyst cell-index encode of a point / of every
+  cell a bbox covers, for join bucketing (same ids as cells.grid).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from ..cells.grid import encode_cells
-from ..geo.arrowgeom import flat_to_list, row_point_offsets, series_to_flat
+from ..cells.grid import cell_side, encode_cells
+from ..geo.arrowgeom import flat_to_list, series_to_flat
 from ..geo.laea import laea_forward, laea_inverse
 from ..geo.kernels import ring_signed_area
 
 GEOM_TYPE = T.ArrayType(T.ArrayType(T.ArrayType(T.DoubleType())))
-BBOX_TYPE = T.StructType(
-    [
-        T.StructField("xmin", T.DoubleType()),
-        T.StructField("ymin", T.DoubleType()),
-        T.StructField("xmax", T.DoubleType()),
-        T.StructField("ymax", T.DoubleType()),
-    ]
-)
 
 
 @pandas_udf(GEOM_TYPE)
@@ -57,12 +53,20 @@ def st_unproject(geom: pd.Series) -> pd.Series:
     return res
 
 
-@pandas_udf(BBOX_TYPE)
-def st_bbox(geom: pd.Series) -> pd.DataFrame:
-    from ..geo.arrowgeom import row_bbox
-
-    bb = row_bbox(geom)
-    return pd.DataFrame({"xmin": bb[:, 0], "ymin": bb[:, 1], "xmax": bb[:, 2], "ymax": bb[:, 3]}, index=geom.index)
+def bbox_expr(geom: Column) -> Column:
+    """geom → struct(xmin, ymin, xmax, ymax), in Catalyst: array_min /
+    array_max over the flattened point list. The fields are NULL for a NULL
+    or empty-parts geometry, so its `cover_expr` is NULL too and explodes to
+    zero rows."""
+    pts = F.flatten(geom)
+    xs = F.transform(pts, lambda p: p[0])
+    ys = F.transform(pts, lambda p: p[1])
+    return F.struct(
+        F.array_min(xs).alias("xmin"),
+        F.array_min(ys).alias("ymin"),
+        F.array_max(xs).alias("xmax"),
+        F.array_max(ys).alias("ymax"),
+    )
 
 
 @pandas_udf(T.DoubleType())
@@ -102,38 +106,33 @@ def st_area(geom: pd.Series) -> pd.Series:
     return pd.Series(out, index=geom.index)
 
 
-def cell_udf(res: int):
-    """Point cell-encode UDF factory: (x, y) LAEA metres → int64 cell id."""
+_IX_MASK = (1 << 29) - 1
 
-    @pandas_udf(T.LongType())
-    def _cell(x: pd.Series, y: pd.Series) -> pd.Series:
-        return pd.Series(encode_cells(x.to_numpy(), y.to_numpy(), res), index=x.index)
 
-    return _cell
+def _cell_id(res: int, ix: Column, iy: Column) -> Column:
+    """int64 cell id from long grid indices: the [res:6][ix:29][iy:29]
+    two's-complement layout of cells.grid.encode_cells."""
+    return (
+        F.lit(res << 58)
+        .cast("long")
+        .bitwiseOR(F.shiftleft(ix.bitwiseAND(F.lit(_IX_MASK)), 29))
+        .bitwiseOR(iy.bitwiseAND(F.lit(_IX_MASK)))
+    )
+
+
+def _grid_index(v: Column, res: int) -> Column:
+    return F.floor(v / F.lit(cell_side(res))).cast("long")
 
 
 def cell_expr(res: int):
-    """Pure-Catalyst twin of `cell_udf`: (x, y) LAEA metres → int64 cell id
-    with NO Python boundary. Same arithmetic as cells.grid.encode_cells —
-    FLOOR(double/double) is IEEE-identical in numpy and whole-stage codegen,
-    and the mask/shift layout is the same two's-complement int64 math — so
-    the ids are bit-identical (asserted in tests/test_image_joins.py).
-
-    Replacing the pandas UDF removes an ArrowEvalPython node per call site
-    from the hot join paths; the optimizer had also been duplicating that
-    UDF around join-key null filters (two Python passes per row)."""
-    side = float(2 ** (18 - res))
-    mask = (1 << 29) - 1
+    """(x, y) LAEA metres → int64 cell id with NO Python boundary. Same
+    arithmetic as cells.grid.encode_cells — FLOOR(double/double) is
+    IEEE-identical in numpy and whole-stage codegen, and the mask/shift
+    layout is the same two's-complement int64 math — so the ids are
+    bit-identical (asserted in tests/test_image_joins.py)."""
 
     def _cell(x, y):
-        ix = F.floor(x / F.lit(side)).cast("long")
-        iy = F.floor(y / F.lit(side)).cast("long")
-        return (
-            F.lit(res << 58)
-            .cast("long")
-            .bitwiseOR(F.shiftleft(ix.bitwiseAND(F.lit(mask)), 29))
-            .bitwiseOR(iy.bitwiseAND(F.lit(mask)))
-        )
+        return _cell_id(res, _grid_index(x, res), _grid_index(y, res))
 
     return _cell
 
@@ -149,31 +148,20 @@ def lonlat_cell_udf(res: int):
     return _cell
 
 
-def cells_covering_bbox_udf(res: int, halo: int = 0):
-    """bbox struct fields → array of covering cell ids (explode target).
+def cover_expr(res: int, halo: int = 0):
+    """bbox bounds → array<long> of every cell id at `res` the bbox touches,
+    plus `halo` rings, in Catalyst (explode target).
 
-    Used to fan polygons out onto join cells; halo=1 adds the seam ring so
-    per-cell kernels see cross-boundary geometry (SURVEY.md §4.2.1)."""
+    Same ids and order as cells.grid.cover_bbox: ix in the outer loop, iy in
+    the inner one, like the numpy meshgrid 'ij' ravel. Used to fan polygons
+    out onto join cells; halo=1 adds the seam ring so per-cell kernels see
+    cross-boundary geometry (SURVEY.md §4.2.1). NULL bounds (see
+    `bbox_expr`) give a NULL array."""
 
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def _cover(xmin: pd.Series, ymin: pd.Series, xmax: pd.Series, ymax: pd.Series) -> pd.Series:
-        from ..cells.grid import cell_side
-
-        side = cell_side(res)
-        ix0 = np.floor(xmin.to_numpy() / side).astype(np.int64) - halo
-        ix1 = np.floor(xmax.to_numpy() / side).astype(np.int64) + halo
-        iy0 = np.floor(ymin.to_numpy() / side).astype(np.int64) - halo
-        iy1 = np.floor(ymax.to_numpy() / side).astype(np.int64) + halo
-        out = []
-        mask = (1 << 29) - 1
-        for a0, a1, b0, b1 in zip(ix0, ix1, iy0, iy1):
-            if a1 < a0:  # NaN bbox
-                out.append([])
-                continue
-            gx, gy = np.meshgrid(np.arange(a0, a1 + 1), np.arange(b0, b1 + 1), indexing="ij")
-            ids = (np.int64(res) << 58) | ((gx.ravel() & mask) << 29) | (gy.ravel() & mask)
-            out.append(ids.tolist())
-        return pd.Series(out, index=xmin.index)
+    def _cover(xmin, ymin, xmax, ymax):
+        ixs = F.sequence(_grid_index(xmin, res) - halo, _grid_index(xmax, res) + halo)
+        iys = F.sequence(_grid_index(ymin, res) - halo, _grid_index(ymax, res) + halo)
+        return F.flatten(F.transform(ixs, lambda ix: F.transform(iys, lambda iy: _cell_id(res, ix, iy))))
 
     return _cover
 

@@ -3,9 +3,9 @@
 The engine stores geometry as `array<array<array<double>>>` (parts → points →
 [x, y]). Inside pandas UDFs these arrive as pandas Series of nested lists;
 this module flattens them to one contiguous (N, 2) float64 coordinate block
-plus Arrow list offsets, so projection / bbox / cell-encode kernels run one
-numpy call per *batch*, never per row (BASELINE.json input_hint: "vectorized
-pandas/Arrow UDFs (no per-row Python) throughout").
+plus Arrow list offsets, so projection / area kernels run one numpy call per
+*batch*, never per row (BASELINE.json input_hint: "vectorized pandas/Arrow
+UDFs (no per-row Python) throughout").
 """
 
 from __future__ import annotations
@@ -43,31 +43,6 @@ def flat_to_list(coords: np.ndarray, part_off: np.ndarray, point_off: np.ndarray
     parts = pa.ListArray.from_arrays(pa.array(point_off, type=pa.int32()), pts)
     rows = pa.ListArray.from_arrays(pa.array(part_off, type=pa.int32()), parts)
     return rows.to_pylist()
-
-
-def row_point_offsets(part_off: np.ndarray, point_off: np.ndarray) -> np.ndarray:
-    """Offsets of each row into the flat coords array (len R+1)."""
-    return point_off[part_off]
-
-
-def row_bbox(series: pd.Series) -> np.ndarray:
-    """Per-row bbox (R, 4): xmin, ymin, xmax, ymax. Empty rows → NaN."""
-    coords, part_off, point_off = series_to_flat(series)
-    row_off = row_point_offsets(part_off, point_off)
-    n_rows = len(row_off) - 1
-    out = np.full((n_rows, 4), np.nan)
-    counts = np.diff(row_off)
-    nz = counts > 0
-    if coords.shape[0]:
-        # empty rows contribute no points, so the flat coords array is the
-        # concatenation of non-empty rows' points — reduceat over non-empty
-        # row starts reduces each row's exact point range.
-        starts = row_off[:-1][nz]
-        out[nz, 0] = np.minimum.reduceat(coords[:, 0], starts)
-        out[nz, 1] = np.minimum.reduceat(coords[:, 1], starts)
-        out[nz, 2] = np.maximum.reduceat(coords[:, 0], starts)
-        out[nz, 3] = np.maximum.reduceat(coords[:, 1], starts)
-    return out
 
 
 def parts_of_row(series_values: list, idx: int) -> list[np.ndarray]:

@@ -24,7 +24,7 @@ from pyspark.sql import types as T
 
 from ..cells.grid import RES_FINE
 from ..functions import predicates as P
-from ..functions.geometry import cells_covering_bbox_udf, st_bbox
+from ..functions.geometry import bbox_expr, cover_expr
 from ..geo.kernels import geoms_intersect, point_segment_dist
 
 _EPS = 1e-3  # metres; point-on-barrier tolerance (entrance nodes lie on the way)
@@ -107,10 +107,10 @@ def _resolve_barrier_group(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def interpret_barriers(df: DataFrame, res: int = RES_FINE) -> DataFrame:
     """Returns df with barrier access resolved (first-writer-wins)."""
-    cover = cells_covering_bbox_udf(res, halo=0)
-    cover_halo = cells_covering_bbox_udf(res, halo=1)
+    cover = cover_expr(res, halo=0)
+    cover_halo = cover_expr(res, halo=1)
 
-    base = df.withColumn("_bbox", st_bbox(F.col("geom")))
+    base = df.withColumn("_bbox", bbox_expr(F.col("geom")))
     barriers = (
         base.filter(P.is_barrier())
         .select(

@@ -24,7 +24,7 @@ from pyspark.sql import types as T
 
 from ..cells.grid import RES_FINE
 from ..fixtures.elements import BBOX_4326
-from ..functions.geometry import cells_covering_bbox_udf, st_bbox
+from ..functions.geometry import bbox_expr, cover_expr
 from ..geo.arrowgeom import np_parts
 from ..geo.kernels import points_in_polygon, ring_signed_area
 
@@ -70,11 +70,11 @@ def with_cells(images: DataFrame, res: int = JOIN_RES_DEFAULT, coarse_res: int =
 def explode_layer_to_cells(layer: DataFrame, res: int = JOIN_RES_DEFAULT) -> DataFrame:
     """Polygon layer rows → one row per covering join cell, with a
     deterministic polygon_id (stable across partitionings)."""
-    cover = cells_covering_bbox_udf(res, halo=0)
+    cover = cover_expr(res, halo=0)
     out = layer.withColumn(
         "polygon_id", F.xxhash64(F.col("overlay_cell"), F.col("space_category"), F.col("access"))
     )
-    out = out.withColumn("_bbox", st_bbox(F.col("geom")))
+    out = out.withColumn("_bbox", bbox_expr(F.col("geom")))
     out = out.withColumn(
         "cell",
         F.explode(cover(F.col("_bbox.xmin"), F.col("_bbox.ymin"), F.col("_bbox.xmax"), F.col("_bbox.ymax"))),

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..cells.grid import cell_bbox as cell_bbox_np
-from ..functions.geometry import cells_covering_bbox_udf, st_bbox
+from ..functions.geometry import bbox_expr, cover_expr
 from ..geo.arrowgeom import np_parts
 from ..geo.raster import Grid, mask_area, rasterize_polygon, vectorize_mask
 
@@ -44,8 +44,8 @@ _TILE_SCHEMA = T.StructType(
 
 def rasterize_tiles(layer: DataFrame, tile_res: int = TILE_RES_DEFAULT, px: float = 0.25) -> DataFrame:
     """layer (overlay output) → per-tile class masks."""
-    cover = cells_covering_bbox_udf(tile_res, halo=0)
-    exploded = layer.withColumn("_bbox", st_bbox(F.col("geom"))).withColumn(
+    cover = cover_expr(tile_res, halo=0)
+    exploded = layer.withColumn("_bbox", bbox_expr(F.col("geom"))).withColumn(
         "tile_cell",
         F.explode(cover(F.col("_bbox.xmin"), F.col("_bbox.ymin"), F.col("_bbox.xmax"), F.col("_bbox.ymax"))),
     ).select("tile_cell", "space_category", "access", "geom")

@@ -10,8 +10,11 @@ the reference's nine sequential global overlay passes.
 
 Scale notes (SURVEY.md §3.2): stage boundaries are shuffles on
 `overlay_cell`; elements are exploded onto the cells their buffered bbox
-touches, so the kernel is embarrassingly parallel over cells. Line buffering
-is deferred into the kernel (raster), so no vector buffer op exists anywhere.
+touches, so the kernel is embarrassingly parallel over cells. The bbox and
+the cell cover are Catalyst expressions (functions/geometry.bbox_expr /
+cover_expr), so the only Python in the layer build is `st_project` and the
+per-group kernels (barrier resolve, overlay, tiling). Line buffering is
+deferred into the kernel (raster), so no vector buffer op exists anywhere.
 """
 
 from __future__ import annotations
@@ -26,11 +29,12 @@ from ..cells.grid import cell_bbox as cell_bbox_np
 from ..config import VIENNA, RegionalConfig
 from ..functions import classify
 from ..functions import predicates as P
-from ..functions.geometry import GEOM_TYPE, cells_covering_bbox_udf, st_bbox
+from ..functions.geometry import GEOM_TYPE, bbox_expr, cover_expr
 from ..geo.arrowgeom import np_parts
 from ..geo.laea import laea_forward
 from ..operators import clean
 from ..operators.barriers import interpret_barriers
+from ..operators.graph import _pinned_ids, _release_ids
 from ..operators.overlay_core import ElementRecord, OverlayConfig, run_overlay
 
 OVERLAY_RES_DEFAULT = 10  # 256 m cells
@@ -79,9 +83,9 @@ def build_overlay_records(stages: dict[str, DataFrame], region: RegionalConfig |
     # localCheckpoint per input runs the chain once and makes every branch a
     # leaf scan. At scale this is the same trade: 8 recomputes of the
     # classify chain vs one materialization of the classified dataset.
-    # The pinned RDDs live for the session (or until released via
-    # SparkContext's persistent-RDD registry once the layer itself is
-    # materialized — see graph._release_ids for the pattern).
+    # The three pinned RDDs live until release_overlay_records.
+    sc = stages["dataset"].sparkSession.sparkContext
+    before = _pinned_ids(sc)
     dataset = stages["dataset"].localCheckpoint(eager=True)
     buildings = stages["buildings"].localCheckpoint(eager=True)
 
@@ -178,7 +182,24 @@ def build_overlay_records(stages: dict[str, DataFrame], region: RegionalConfig |
     )
     records = elements.unionByName(bld).unionByName(roads).unionByName(rails) \
         .unionByName(peds).unionByName(platforms).unionByName(passages).unionByName(barrier_lines)
-    return records.withColumnRenamed("access", "access_tags").drop("tags")
+    records = records.withColumnRenamed("access", "access_tags").drop("tags")
+    records._overlay_pinned = [(sc, _pinned_ids(sc) - before)]
+    return records
+
+
+def release_overlay_records(df: DataFrame) -> None:
+    """Release the three eager localCheckpoints behind a
+    `build_overlay_records` frame (or a `run_pipeline` layer built from one).
+
+    Call it only once everything derived from the records has been
+    materialized somewhere that does not read them back (e.g. the layer
+    written to parquet and re-read): the frame and every frame derived
+    from it are unusable afterwards. Even before release, a
+    localCheckpoint lives on executor storage only, so losing an executor
+    loses its blocks and fails the next action on these frames — at
+    cluster scale commit the records to a table instead."""
+    for sc, ids in getattr(df, "_overlay_pinned", []):
+        _release_ids(sc, ids)
 
 
 _OVERLAY_OUT = T.StructType(
@@ -197,8 +218,8 @@ _OVERLAY_OUT = T.StructType(
 def overlay_stage(records: DataFrame, cfg: OverlayConfig, overlay_res: int = OVERLAY_RES_DEFAULT) -> DataFrame:
     """Explode records onto overlay cells, run the kernel per cell."""
     margin = cfg.margin
-    cover = cells_covering_bbox_udf(overlay_res, halo=0)
-    recs = records.withColumn("_bbox", st_bbox(F.col("geom")))
+    cover = cover_expr(overlay_res, halo=0)
+    recs = records.withColumn("_bbox", bbox_expr(F.col("geom")))
     half = F.col("buf_width") / 2.0 + F.lit(margin)
     recs = recs.withColumn(
         "overlay_cell",
@@ -274,4 +295,6 @@ def run_pipeline(
         import dataclasses
 
         cfg = dataclasses.replace(cfg, pedestrian_width=region.pedestrian_way_default_width)
-    return overlay_stage(records, cfg, overlay_res)
+    layer = overlay_stage(records, cfg, overlay_res)
+    layer._overlay_pinned = records._overlay_pinned  # release_overlay_records(layer) works too
+    return layer

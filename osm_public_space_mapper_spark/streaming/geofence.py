@@ -5,8 +5,9 @@ A third J12 implementation (reference PIP semantics:
 see operators/joins.py header for the J-map). The cogroup Arrow kernel in
 ``pip_join_raster`` is the batch throughput lane — masks cross the wire
 once per TILE. This module expresses the same mask bit test entirely in
-Catalyst expressions (``substring``/``hex``/``conv``/``shiftright`` over
-the packed mask bytes), which buys two things:
+Catalyst expressions (``element_at``/``shiftrightunsigned`` over the
+packed mask as 64-bit words, see ``with_mask_words``), which buys two
+things:
 
 * the whole plan is whole-stage-codegen JVM code — no Python in the hot
   path at all, not even Arrow; and
@@ -35,32 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-__all__ = ["mask_bit", "mask_word_bit", "with_mask_words", "pip_join_expr", "geofence_stream"]
-
-
-def mask_bit(
-    mask: str = "mask",
-    x: str = "x",
-    y: str = "y",
-) -> Column:
-    """Bit (0/1 int) of the packed class mask under the point (x, y).
-
-    Expects the mask-row columns ``mask, mask_w, mask_h, ox, oy, px`` in
-    scope.  NULL when the point falls outside the mask window, so a plain
-    ``= 1`` filter drops both misses and out-of-window points.
-    """
-    return F.expr(
-        f"""
-        CASE
-          WHEN _cx >= 0 AND _cx < mask_w AND _cy >= 0 AND _cy < mask_h THEN
-            shiftright(
-              cast(conv(hex(substring({mask}, cast((_cy * mask_w + _cx) DIV 8 AS int) + 1, 1)), 16, 10) AS int),
-              cast(7 - (_cy * mask_w + _cx) % 8 AS int)
-            ) & 1
-          ELSE NULL
-        END
-        """
-    )
+__all__ = ["mask_word_bit", "with_mask_words", "pip_join_expr", "geofence_stream"]
 
 
 def with_mask_words(tiles_sub: DataFrame) -> DataFrame:
@@ -69,11 +45,10 @@ def with_mask_words(tiles_sub: DataFrame) -> DataFrame:
     stream is bit ``63 - i%64`` of word ``i//64``), via ONE Arrow pass over
     the tiny static mask side.
 
-    This trades the per-point byte extraction
-    ``conv(hex(substring(mask, ...)))`` — three string allocations per
-    tested point inside the join condition — for a per-point
-    ``element_at(array<long>) >> k & 1`` that whole-stage codegen compiles
-    to array indexing. The words add zero payload vs the binary mask (same
+    The per-point bit test is then ``element_at(array<long>) >> k & 1``,
+    which whole-stage codegen compiles to array indexing; reading the
+    binary mask directly would need ``conv(hex(substring(mask, ...)))``,
+    three string allocations per tested point. The words add zero payload vs the binary mask (same
     bits, 8-byte granularity) and are computed once per MASK row, not per
     point."""
     import numpy as np
@@ -102,8 +77,12 @@ def with_mask_words(tiles_sub: DataFrame) -> DataFrame:
 
 def mask_word_bit(x: str = "x", y: str = "y") -> Column:
     """Bit (0/1 int) of the class mask under (x, y), reading the
-    ``mask_words`` long-array column (see with_mask_words). NULL outside the
-    mask window — same contract as ``mask_bit``, cheap codegen body."""
+    ``mask_words`` long-array column (see with_mask_words).
+
+    Expects the mask-row columns ``mask_words, mask_w, mask_h`` and the
+    pixel coordinates ``_cx, _cy`` in scope. NULL when the point falls
+    outside the mask window, so a plain ``= 1`` filter drops both misses
+    and out-of-window points."""
     return F.expr(
         f"""
         CASE

@@ -227,7 +227,11 @@ def test_pipeline_road_area_shifts_with_region(spark):
     from osm_public_space_mapper_spark.config import VIENNA
     from osm_public_space_mapper_spark.fixtures.elements import BBOX_4326, elements_to_spark as _els
     from osm_public_space_mapper_spark.operators.overlay_core import OverlayConfig
-    from osm_public_space_mapper_spark.plans.pipeline import projected_bbox_ring, run_pipeline
+    from osm_public_space_mapper_spark.plans.pipeline import (
+        projected_bbox_ring,
+        release_overlay_records,
+        run_pipeline,
+    )
 
     ring = projected_bbox_ring(
         BBOX_4326["left"], BBOX_4326["bottom"], BBOX_4326["right"], BBOX_4326["top"]
@@ -239,6 +243,7 @@ def test_pipeline_road_area_shifts_with_region(spark):
     def traffic_area(region):
         layer = run_pipeline(_els(spark), cfg, overlay_res=8, region=region)
         rows = layer.filter(F.col("space_category") == "traffic area").collect()
+        release_overlay_records(layer)
         return sum(r.area for r in rows)
 
     base = traffic_area(None)  # Vienna default
@@ -260,7 +265,11 @@ def test_pipeline_pedestrian_width_reaches_overlay_kernel(spark):
     from osm_public_space_mapper_spark.config import VIENNA
     from osm_public_space_mapper_spark.fixtures.elements import BBOX_4326, elements_to_spark as _els
     from osm_public_space_mapper_spark.operators.overlay_core import OverlayConfig
-    from osm_public_space_mapper_spark.plans.pipeline import projected_bbox_ring, run_pipeline
+    from osm_public_space_mapper_spark.plans.pipeline import (
+        projected_bbox_ring,
+        release_overlay_records,
+        run_pipeline,
+    )
 
     ring = projected_bbox_ring(
         BBOX_4326["left"], BBOX_4326["bottom"], BBOX_4326["right"], BBOX_4326["top"]
@@ -272,6 +281,7 @@ def test_pipeline_pedestrian_width_reaches_overlay_kernel(spark):
     def traffic_area(region):
         layer = run_pipeline(_els(spark), cfg, overlay_res=8, region=region)
         rows = layer.filter(F.col("space_category") == "traffic area").collect()
+        release_overlay_records(layer)
         return sum(r.area for r in rows)
 
     base = traffic_area(VIENNA)

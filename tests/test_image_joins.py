@@ -284,3 +284,50 @@ def test_cell_expr_matches_encode_cells(spark):
         got = [r.c for r in df.select(cell_expr(res)(F.col("x"), F.col("y")).alias("c")).collect()]
         want = encode_cells(xs, ys, res).tolist()
         assert got == want, f"res {res}"
+
+
+def test_bbox_and_cover_expr_match_numpy(spark):
+    # the Catalyst bbox + cell cover must give exactly the numpy min/max bbox
+    # and cells.grid.cover_bbox ids, in cover_bbox's order — including
+    # bounds on cell edges (k·side), negative and -0.0 coordinates, a single
+    # point, multi-part polygons; an empty-parts geometry covers nothing
+    from osm_public_space_mapper_spark.cells.grid import cover_bbox
+    from osm_public_space_mapper_spark.functions.geometry import bbox_expr, cover_expr
+
+    from pyspark.sql import functions as F
+
+    rng = np.random.RandomState(5)
+    geoms = [
+        [[[1024.0, -2048.0]]],  # single point on an edge at every res
+        [[[-0.0, -0.0], [512.0, -0.0], [512.0, 256.0], [-0.0, -0.0]]],
+        [[[-4096.0, 1024.0], [-3072.0, 1024.0], [-3072.0, 2048.0], [-4096.0, 1024.0]],
+         [[100.0, 100.0], [131.5, 100.0], [131.5, 160.25], [100.0, 100.0]]],
+        [[[63.9999999, -16.0000001], [64.0, -16.0], [64.0000001, -15.9999999]]],
+    ]
+    for _ in range(20):
+        c = rng.uniform(-2e4, 2e4, 2)
+        geoms.append([(c + rng.uniform(-300, 300, (rng.randint(1, 7), 2))).tolist()
+                      for _ in range(rng.randint(1, 4))])
+    geoms.append([])  # empty parts
+    df = spark.createDataFrame(list(enumerate(geoms)), "id long, geom array<array<array<double>>>")
+    df = df.withColumn("b", bbox_expr(F.col("geom")))
+
+    want_bb = {}
+    for i, g in enumerate(geoms):
+        if g:
+            pts = np.concatenate([np.asarray(p, np.float64) for p in g])
+            want_bb[i] = (*pts.min(axis=0), *pts.max(axis=0))
+    got_bb = {r.id: tuple(r.b) for r in df.collect()}
+    assert got_bb == {**want_bb, len(geoms) - 1: (None,) * 4}
+
+    for res in (8, 10, 13, 14):
+        for halo in (0, 1):
+            cover = cover_expr(res, halo)
+            rows = df.select(
+                "id", F.explode(cover(F.col("b.xmin"), F.col("b.ymin"), F.col("b.xmax"), F.col("b.ymax"))).alias("cell")
+            ).collect()
+            got = {}
+            for r in rows:  # explode keeps each row's array order
+                got.setdefault(r.id, []).append(r.cell)
+            want = {i: cover_bbox(*bb, res, halo).tolist() for i, bb in want_bb.items()}
+            assert got == want, (res, halo)

@@ -16,8 +16,16 @@ from osm_public_space_mapper_spark.fixtures.elements import BBOX_4326, elements_
 from osm_public_space_mapper_spark.geo.arrowgeom import np_parts
 from osm_public_space_mapper_spark.geo.kernels import points_in_polygon
 from osm_public_space_mapper_spark.geo.laea import laea_forward
+from osm_public_space_mapper_spark.operators import joins, tiling
 from osm_public_space_mapper_spark.operators.overlay_core import OverlayConfig
-from osm_public_space_mapper_spark.plans.pipeline import projected_bbox_ring, run_pipeline
+from osm_public_space_mapper_spark.plans.pipeline import (
+    build_overlay_records,
+    classify_stage,
+    overlay_stage,
+    projected_bbox_ring,
+    release_overlay_records,
+    run_pipeline,
+)
 
 
 def _frac_to_proj(fx, fy):
@@ -112,3 +120,41 @@ def test_total_area_matches_bbox(layer):
     bbox_area = abs(ring_signed_area(ring))
     total = sum(r.area for r in layer)
     assert abs(total - bbox_area) / bbox_area < 0.002
+
+
+def _overlay_cfg(px):
+    ring = projected_bbox_ring(BBOX_4326["left"], BBOX_4326["bottom"], BBOX_4326["right"], BBOX_4326["top"])
+    env = (float(ring[:, 0].min()), float(ring[:, 1].min()), float(ring[:, 0].max()), float(ring[:, 1].max()))
+    return OverlayConfig(px=px, margin=64.0, bbox=env, bbox_ring=ring)
+
+
+def test_layer_build_plans_have_no_python_eval(spark):
+    """bbox and cell cover are Catalyst: past the checkpointed records, the
+    only Python in the overlay, tiling and PIP-explode plans is their
+    per-group kernels, never a scalar ArrowEvalPython node."""
+    records = build_overlay_records(classify_stage(elements_to_spark(spark)))
+    try:
+        layer = overlay_stage(records, _overlay_cfg(0.5), overlay_res=8)
+        plans = {
+            "overlay_stage": layer,
+            "rasterize_tiles": tiling.rasterize_tiles(layer, tile_res=10, px=0.5),
+            "explode_layer_to_cells": joins.explode_layer_to_cells(layer, 13),
+        }
+        for name, df in plans.items():
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            assert plan.count("ArrowEvalPython") == 0, name
+    finally:
+        release_overlay_records(records)
+
+
+def test_release_overlay_records(spark, tmp_path):
+    """build → materialize → release puts the session back at its pre-build
+    persistent-RDD count; the materialized copy stays readable."""
+    jsc = spark.sparkContext._jsc.sc()
+    base = jsc.getPersistentRDDs().size()
+    layer = run_pipeline(elements_to_spark(spark), _overlay_cfg(1.0), overlay_res=8)
+    assert jsc.getPersistentRDDs().size() == base + 3  # the records' localCheckpoints
+    layer.write.parquet(str(tmp_path / "layer"))
+    release_overlay_records(layer)
+    assert jsc.getPersistentRDDs().size() == base
+    assert spark.read.parquet(str(tmp_path / "layer")).count() > 0

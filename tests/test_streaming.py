@@ -442,10 +442,10 @@ def _geofence_points(spark, n=900, seed=23):
     df = images_to_spark(spark, pdf)
     df = joins.with_geotag(df)
     df = joins.project_points(df)
-    from osm_public_space_mapper_spark.functions.geometry import cell_udf
+    from osm_public_space_mapper_spark.functions.geometry import cell_expr
     from pyspark.sql import functions as F
 
-    return df.withColumn("tile_cell", cell_udf(13)(F.col("x"), F.col("y"))).select(
+    return df.withColumn("tile_cell", cell_expr(13)(F.col("x"), F.col("y"))).select(
         "image_id", "x", "y", "tile_cell"
     )
 
