@@ -21,10 +21,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from ..cells.grid import cell_side, encode_cells
+from ..cells.grid import cell_side
 from ..geo.arrowgeom import flat_to_list, series_to_flat
 from ..geo.laea import laea_forward, laea_inverse
-from ..geo.kernels import ring_signed_area
 
 GEOM_TYPE = T.ArrayType(T.ArrayType(T.ArrayType(T.DoubleType())))
 
@@ -133,17 +132,6 @@ def cell_expr(res: int):
 
     def _cell(x, y):
         return _cell_id(res, _grid_index(x, res), _grid_index(y, res))
-
-    return _cell
-
-
-def lonlat_cell_udf(res: int):
-    """(lon, lat) EPSG:4326 → int64 cell id (projects then encodes)."""
-
-    @pandas_udf(T.LongType())
-    def _cell(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        x, y = laea_forward(lon.to_numpy(), lat.to_numpy())
-        return pd.Series(encode_cells(x, y, res), index=lon.index)
 
     return _cell
 

@@ -22,11 +22,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..cells.grid import RES_FINE
 from ..fixtures.elements import BBOX_4326
 from ..functions.geometry import bbox_expr, cover_expr
 from ..geo.arrowgeom import np_parts
-from ..geo.kernels import points_in_polygon, ring_signed_area
+from ..geo.kernels import points_in_polygon
 
 JOIN_RES_DEFAULT = 12  # 64 m join buckets
 KNN_RES_DEFAULT = 9    # 512 m kNN candidate cells
@@ -130,16 +129,6 @@ def pip_join(images: DataFrame, layer: DataFrame, res: int = JOIN_RES_DEFAULT) -
     return imgs.groupBy("cell").cogroup(polys.groupBy("cell")).applyInPandas(_refine, _PIP_OUT)
 
 
-_PIP_RASTER_OUT = T.StructType(
-    [
-        T.StructField("image_id", T.StringType()),
-        T.StructField("space_category", T.StringType()),
-        T.StructField("access", T.StringType()),
-        T.StructField("tile_cell", T.LongType()),
-    ]
-)
-
-
 def subdivide_tiles(tiles: DataFrame, group_res: int) -> DataFrame:
     """Split per-tile class masks into per-subcell mask slices at `group_res`.
 
@@ -147,8 +136,6 @@ def subdivide_tiles(tiles: DataFrame, group_res: int) -> DataFrame:
     coarse tiles (res 10 = 256 m) would cap it at a handful of tasks on a
     small extent. Slicing each mask to its res-`group_res` descendants keeps
     total payload constant while multiplying group count by 4^(Δres)."""
-    from ..cells.grid import cell_bbox as cell_bbox_np
-
     out_schema = T.StructType(
         [
             T.StructField("tile_cell", T.LongType()),
@@ -208,12 +195,19 @@ def pip_join_raster(
     id_col: str = "image_id",
     tiles_subdivided: bool = False,
 ) -> DataFrame:
-    """J12 fast path: assign images via per-tile class-mask lookup.
+    """J12 batch lane: assign images via per-subcell class-mask lookup.
+
+    Slices the tile masks to ``group_res`` (``subdivide_tiles``), then runs
+    the Catalyst mask-bit join of ``streaming/geofence.py`` shuffle-hash
+    partitioned on ``tile_cell`` — broadcast-free, the ``pip_join_expr``
+    operator distributed the other way. ``salt > 0`` is explicit skew
+    salting (north rule): dense cells split into ``salt`` sub-groups on
+    ``(tile_cell, _salt)``; the small mask slices replicate per salt id.
 
     tiles_subdivided=True declares the mask side is ALREADY at group_res
     granularity (e.g. a stored `subdivide_tiles` output bucketed by
     tile_cell) — the slice kernel is skipped so both sides keep their stored
-    partitioning and the whole join plans with zero Exchange
+    partitioning and the unsalted join plans with zero Exchange
     (tests/test_bucketed.py asserts this).
 
     The tile masks are rasterized from the SAME pixel lattice the vector
@@ -221,103 +215,14 @@ def pip_join_raster(
     any point not exactly on a pixel-edge line (measure zero) — verified
     against both the vector join and the numpy brute force in tests.
 
-    Cost per tile group: unpack each class mask once + O(1) per image —
-    independent of polygon complexity. Shuffle key = tile cell; the mask side
-    is hinted shuffle_hash (broadcast-free)."""
-    from ..functions.geometry import cell_expr
+    Output: ``image_id`` (``id_col`` renamed), ``space_category, access,
+    tile_cell``."""
+    from ..streaming.geofence import _mask_join
 
-    id_type = dict(images.dtypes)[id_col]
-    # x,y are already projected (project_points precondition) — encode the
-    # group cell from them directly instead of re-projecting lon/lat.
-    # A pre-existing tile_cell column is trusted and REUSED: tables bucketed
-    # by tile_cell (tables/bucketed.py) then reach the cogroup with their
-    # bucket partitioning intact → zero Exchange in the plan.
-    if "tile_cell" not in images.columns:
-        images = images.withColumn("tile_cell", cell_expr(group_res)(F.col("x"), F.col("y")))
-    imgs = images.select(
-        F.col(id_col).alias("image_id"), "x", "y", "tile_cell"
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField("image_id", T.LongType() if id_type == "bigint" else T.StringType()),
-            T.StructField("space_category", T.StringType()),
-            T.StructField("access", T.StringType()),
-            T.StructField("tile_cell", T.LongType()),
-        ]
-    )
-    t = (
-        subdivide_tiles(tiles, group_res)
-        if group_res > tile_res and not tiles_subdivided
-        else tiles.select(
-            "tile_cell", "space_category", "access", "mask", "mask_w", "mask_h", "ox", "oy", "px"
-        )
-    )
-    group_keys = ["tile_cell"]
-    if salt > 0:
-        # explicit skew salting (north rule): dense urban cells split into
-        # `salt` uniform sub-groups; mask slices replicate per salt id (small
-        # after subdivision), image rows hash-distribute across salt ids
-        # NB: cast both sides to the same type — cogroup keys of differing
-        # integer widths hash-partition differently and silently fail to meet
-        imgs = imgs.withColumn("_salt", F.pmod(F.xxhash64(F.col("image_id")), F.lit(salt)).cast("int"))
-        t = t.withColumn("_salt", F.explode(F.array(*[F.lit(i).cast("int") for i in range(salt)])))
-        group_keys = ["tile_cell", "_salt"]
-
-    import pyarrow as pa
-
-    def _lookup(key, img_tbl: "pa.Table", mask_tbl: "pa.Table") -> "pa.Table":
-        id_pa_type = pa.int64() if id_type == "bigint" else pa.string()
-        empty = pa.table(
-            {
-                "image_id": pa.array([], id_pa_type),
-                "space_category": pa.array([], pa.string()),
-                "access": pa.array([], pa.string()),
-                "tile_cell": pa.array([], pa.int64()),
-            }
-        )
-        if img_tbl.num_rows == 0 or mask_tbl.num_rows == 0:
-            return empty
-        cell = key[0].as_py()
-        px_arr = img_tbl.column("x").to_numpy(zero_copy_only=False)
-        py_arr = img_tbl.column("y").to_numpy(zero_copy_only=False)
-        ids = img_tbl.column("image_id")  # stays Arrow — no python strings
-        masks = mask_tbl.to_pylist()
-        takes, cats, accs = [], [], []
-        for row in sorted(masks, key=lambda r: (r["space_category"], r["access"])):
-            w, h = int(row["mask_w"]), int(row["mask_h"])
-            mask = np.unpackbits(np.frombuffer(row["mask"], dtype=np.uint8), count=w * h).reshape(h, w)
-            cx = np.floor((px_arr - row["ox"]) / row["px"]).astype(np.int64)
-            cy = np.floor((py_arr - row["oy"]) / row["px"]).astype(np.int64)
-            ok = (cx >= 0) & (cx < w) & (cy >= 0) & (cy < h)
-            hit = np.zeros(len(px_arr), dtype=bool)
-            hit[ok] = mask[cy[ok], cx[ok]] > 0
-            if hit.any():
-                sel = np.nonzero(hit)[0]
-                takes.append(sel)
-                cats.append((row["space_category"], len(sel)))
-                accs.append((row["access"], len(sel)))
-        if not takes:
-            return empty
-        idx = pa.array(np.concatenate(takes))
-        out_ids = ids.take(idx)
-        if isinstance(out_ids, pa.ChunkedArray):
-            out_ids = out_ids.combine_chunks()
-        cat_arr = pa.array(np.repeat([c for c, _ in cats], [n for _, n in cats]))
-        acc_arr = pa.array(np.repeat([a for a, _ in accs], [n for _, n in accs]))
-        cell_arr = pa.array(np.full(len(idx), cell, dtype=np.int64))
-        return pa.table(
-            {"image_id": out_ids, "space_category": cat_arr, "access": acc_arr, "tile_cell": cell_arr}
-        )
-
-    # cogroup, not join: each (tile, class) mask crosses the wire once per
-    # tile group instead of once per image row (which would be O(images) ×
-    # 100KB mask payloads). Arrow-native apply: image ids never materialize
-    # as python objects. Both sides shuffle on the group key — broadcast-free.
-    return (
-        imgs.groupBy(*group_keys)
-        .cogroup(t.groupBy(*group_keys))
-        .applyInArrow(_lookup, out_schema)
-    )
+    if group_res > tile_res and not tiles_subdivided:
+        tiles = subdivide_tiles(tiles, group_res)
+    out = _mask_join(images, tiles, group_res, id_col, (), salt=salt)
+    return out.withColumnRenamed(id_col, "image_id")
 
 
 def project_points(images: DataFrame) -> DataFrame:

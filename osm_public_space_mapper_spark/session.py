@@ -26,8 +26,7 @@ def get_spark(app: str = "osm-public-space-mapper-spark", cores: int | str = "*"
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # 16g: the 96M-image scaling bench at local[32] sits near the GC
-        # ceiling at 8g (GCLocker retry warnings, occasional task OOM) —
-        # Arrow JNI allocation under 32 concurrent cogroup tasks
+        # ceiling at 8g (GCLocker retry warnings, occasional task OOM)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

@@ -1,35 +1,36 @@
-"""Streaming geofence: pure-Catalyst point-in-mask class assignment.
+"""J12 point-in-mask assignment as one Catalyst operator.
 
-A third J12 implementation (reference PIP semantics:
-``data_analysis/analyse_traffic_area.py`` point-in-space classification;
-see operators/joins.py header for the J-map). The cogroup Arrow kernel in
-``pip_join_raster`` is the batch throughput lane — masks cross the wire
-once per TILE. This module expresses the same mask bit test entirely in
-Catalyst expressions (``element_at``/``shiftrightunsigned`` over the
-packed mask as 64-bit words, see ``with_mask_words``), which buys two
-things:
+Reference PIP semantics: ``data_analysis/analyse_traffic_area.py``
+point-in-space classification; see operators/joins.py header for the J-map.
+``_mask_join`` is the single mask-bit lookup behind both fast lanes:
 
-* the whole plan is whole-stage-codegen JVM code — no Python in the hot
-  path at all, not even Arrow; and
-* the plan contains only stateless projections + one stream-static
-  equi-join, so the SAME operator runs unchanged under Structured
-  Streaming: a stream of geo-tagged image rows is geofenced against the
-  classified public-space layer with no state store and no watermark.
+* ``pip_join_expr`` / ``geofence_stream`` broadcast the small subdivided
+  mask side (the latency lane and the streaming front); and
+* ``joins.pip_join_raster`` shuffle-hash joins on ``(tile_cell, _salt)``
+  (the broadcast-free batch lane, zero Exchange on bucketed tables).
+
+The two differ only in how the one join is distributed. The bit test is
+``element_at``/``shiftrightunsigned`` over the packed mask as 64-bit words
+(``with_mask_words``), so:
+
+* the join adds no Python node: over stored inputs the whole plan is
+  whole-stage-codegen JVM code; and
+* the plan holds only stateless projections + one equi-join, so the SAME
+  operator runs unchanged under Structured Streaming: a stream of
+  geo-tagged image rows is geofenced against the classified public-space
+  layer with no state store and no watermark.
 
 Scale shape
 -----------
-The static mask side is subdivided to ``group_res`` (a res-13 subdivided
-mask is tens of bytes) and is broadcast when it fits, shuffle-hash joined
-otherwise.  Each matched point row carries only its OWN cell's mask bytes
-through the join projection — per-row payload is bounded by the subcell
-mask size, independent of polygon complexity.  For batch jobs over huge
-coarse masks prefer ``pip_join_raster`` (per-tile mask transfer); this
-path is the latency lane and the streaming front.
+The mask side is subdivided to ``group_res`` (a res-13 subdivided mask is
+tens of bytes). Each matched point row carries only its OWN cell's mask
+words through the join projection, so per-row payload is bounded by the
+subcell mask size, independent of polygon complexity.
 
-The bit indexing mirrors the Arrow kernel exactly (row-major, MSB-first
-``np.packbits``): ``bit = mask[cy*mask_w + cx]`` with
-``cx = floor((x-ox)/px)``, ``cy = floor((y-oy)/px)`` — asserted equal on
-every fixture image in tests/test_streaming.py.
+The bit indexing is the row-major, MSB-first ``np.packbits`` layout of
+``subdivide_tiles``: ``bit = mask[cy*mask_w + cx]`` with
+``cx = floor((x-ox)/px)``, ``cy = floor((y-oy)/px)``; it is checked against
+the vector ``pip_join`` in tests/test_image_joins.py.
 """
 
 from __future__ import annotations
@@ -38,41 +39,31 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 __all__ = ["mask_word_bit", "with_mask_words", "pip_join_expr", "geofence_stream"]
 
+_MASK_COLS = ("tile_cell", "space_category", "access", "mask", "mask_w", "mask_h", "ox", "oy", "px")
+
 
 def with_mask_words(tiles_sub: DataFrame) -> DataFrame:
     """Attach ``mask_words array<long>``: the packed mask bit stream as
     big-endian 64-bit words (bit i of the row-major MSB-first np.packbits
-    stream is bit ``63 - i%64`` of word ``i//64``), via ONE Arrow pass over
-    the tiny static mask side.
+    stream is bit ``63 - i%64`` of word ``i//64``; a short last word is
+    zero-padded on the right), in one Catalyst projection.
 
     The per-point bit test is then ``element_at(array<long>) >> k & 1``,
     which whole-stage codegen compiles to array indexing; reading the
-    binary mask directly would need ``conv(hex(substring(mask, ...)))``,
-    three string allocations per tested point. The words add zero payload vs the binary mask (same
-    bits, 8-byte granularity) and are computed once per MASK row, not per
-    point."""
-    import numpy as np
-    from pyspark.sql import types as T
-
-    def _words(batches):
-        for pdf in batches:
-            ws = []
-            for m in pdf["mask"]:
-                b = np.frombuffer(m, dtype=np.uint8)
-                pad = (-len(b)) % 8
-                if pad:
-                    b = np.concatenate([b, np.zeros(pad, np.uint8)])
-                # big-endian u64 view → native u64 → reinterpret as two's-
-                # complement int64 (LongType)
-                ws.append(b.view(">u8").astype("u8").view("i8"))
-            pdf = pdf.copy()
-            pdf["mask_words"] = ws
-            yield pdf
-
-    schema = T.StructType(
-        list(tiles_sub.schema) + [T.StructField("mask_words", T.ArrayType(T.LongType()))]
+    binary mask per point would cost three string allocations per test.
+    The words are computed once per MASK row, not per point. An empty mask
+    gives an empty array (``sequence(0, -1)`` would count down)."""
+    return tiles_sub.withColumn(
+        "mask_words",
+        F.expr(
+            """
+            IF(length(mask) = 0, CAST(array() AS array<bigint>),
+               transform(sequence(0, ceil(length(mask) / 8) - 1),
+                         i -> cast(conv(rpad(hex(substring(mask, i * 8 + 1, 8)), 16, '0'), 16, -10)
+                                   AS bigint)))
+            """
+        ),
     )
-    return tiles_sub.mapInPandas(_words, schema)
 
 
 def mask_word_bit(x: str = "x", y: str = "y") -> Column:
@@ -103,15 +94,51 @@ def _with_pixel_coords(joined: DataFrame, x: str, y: str) -> DataFrame:
     ).withColumn("_cy", F.expr(f"cast(floor(({y} - oy) / px) AS int)"))
 
 
+def _mask_join(
+    points: DataFrame,
+    tiles_sub: DataFrame,
+    group_res: int,
+    id_col: str,
+    passthrough: tuple[str, ...],
+    salt: int | None,
+) -> DataFrame:
+    """The J12 mask-bit join: points' ``tile_cell`` (+ ``_salt``) equi-joined
+    to mask rows at ``group_res``, filtered on ``mask_word_bit() == 1``.
+
+    ``salt`` picks the distribution of the one join: ``None`` broadcasts the
+    mask side; an int hints ``shuffle_hash`` and, when > 0, splits every
+    cell into ``salt`` sub-groups (points hash-distribute over ``_salt``,
+    mask rows replicate once per salt id). ``_salt`` is int on both sides.
+    A pre-existing ``tile_cell`` on ``points`` is reused, so tables bucketed
+    by it keep their stored partitioning (zero Exchange when unsalted)."""
+    from ..functions.geometry import cell_expr
+
+    if "tile_cell" not in points.columns:
+        points = points.withColumn("tile_cell", cell_expr(group_res)(F.col("x"), F.col("y")))
+    points = points.select(id_col, "x", "y", "tile_cell", *passthrough)
+    right = with_mask_words(tiles_sub.select(*_MASK_COLS)).drop("mask")
+    keys = ["tile_cell"]
+    if salt is None:
+        right = F.broadcast(right)
+    else:
+        if salt > 0:
+            points = points.withColumn("_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt)).cast("int"))
+            right = right.withColumn("_salt", F.explode(F.array(*[F.lit(i).cast("int") for i in range(salt)])))
+            keys = ["tile_cell", "_salt"]
+        right = right.hint("shuffle_hash")
+    joined = _with_pixel_coords(points.join(right, keys, "inner"), "x", "y")
+    hit = joined.where(mask_word_bit() == 1)
+    return hit.select(id_col, "space_category", "access", "tile_cell", *passthrough)
+
+
 def pip_join_expr(
     points: DataFrame,
     tiles_sub: DataFrame,
     group_res: int = 13,
     id_col: str = "image_id",
     passthrough: tuple[str, ...] = (),
-    broadcast_tiles: bool = True,
 ) -> DataFrame:
-    """Expression-only point-in-mask assignment.
+    """Point-in-mask assignment with the mask side broadcast.
 
     ``points`` needs projected ``x, y`` (``project_points``); ``tile_cell``
     is computed at ``group_res`` if absent.  ``tiles_sub`` must ALREADY be
@@ -124,27 +151,7 @@ def pip_join_expr(
     same contract as ``pip_join_raster`` (layer masks are disjoint, so in
     practice exactly one row per covered point).
     """
-    from ..functions.geometry import cell_expr
-
-    if "tile_cell" not in points.columns:
-        points = points.withColumn("tile_cell", cell_expr(group_res)(F.col("x"), F.col("y")))
-    right = with_mask_words(
-        tiles_sub.select(
-            "tile_cell", "space_category", "access", "mask", "mask_w", "mask_h", "ox", "oy", "px"
-        )
-    ).select(
-        "tile_cell", "space_category", "access", "mask_words", "mask_w", "mask_h", "ox", "oy", "px"
-    )
-    if broadcast_tiles:
-        right = F.broadcast(right)
-    else:
-        right = right.hint("shuffle_hash")
-    joined = points.select(id_col, "x", "y", "tile_cell", *passthrough).join(
-        right, "tile_cell", "inner"
-    )
-    joined = _with_pixel_coords(joined, "x", "y")
-    hit = joined.where(mask_word_bit() == 1)
-    return hit.select(id_col, "space_category", "access", "tile_cell", *passthrough)
+    return _mask_join(points, tiles_sub, group_res, id_col, passthrough, salt=None)
 
 
 def geofence_stream(
@@ -159,15 +166,9 @@ def geofence_stream(
     ``points_stream``: streaming frame with projected ``x, y`` (+ any
     ``passthrough`` columns, e.g. the event time).  ``tiles_sub``: STATIC
     subdivided mask frame (read from a stored table; see pip_join_expr
-    note).  Returns a streaming frame of class assignments — stateless, so
-    any output mode works and batch equality is exact (asserted vs
-    ``pip_join_raster`` through an availableNow memory sink in
-    tests/test_streaming.py).
+    note), broadcast like ``pip_join_expr``.  Returns a streaming frame of
+    class assignments — stateless, so any output mode works and batch
+    equality is exact (asserted vs batch ``pip_join_expr`` through an
+    availableNow memory sink in tests/test_streaming.py).
     """
-    return pip_join_expr(
-        points_stream,
-        tiles_sub,
-        group_res=group_res,
-        id_col=id_col,
-        passthrough=passthrough,
-    )
+    return _mask_join(points_stream, tiles_sub, group_res, id_col, passthrough, salt=None)

@@ -9,7 +9,7 @@ long-running query.
 
   stream (rate / file source with images schema)
     → geotag from phash (JVM expressions)
-    → cell7 bucket (Arrow UDF)
+    → project (Arrow UDF) → cell7 bucket (Catalyst cell_expr)
     → foreachBatch: IceliteTable.commit(batch, "cell7", stage=f"stream-{id}")
 """
 
@@ -18,15 +18,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.joins import with_geotag
-from ..functions.geometry import lonlat_cell_udf
+from ..functions.geometry import cell_expr
+from ..operators.joins import project_points, with_geotag
 from ..tables.icelite import IceliteTable
 
 
 def prepare_stream(images_stream: DataFrame) -> DataFrame:
-    """Attach geotag + coarse cell bucket to a streaming images DataFrame."""
-    out = with_geotag(images_stream)
-    return out.withColumn("cell7", lonlat_cell_udf(7)(F.col("lon"), F.col("lat")))
+    """Attach geotag + coarse cell bucket to a streaming images DataFrame.
+    The projected x/y only feed the cell encode and are dropped again."""
+    out = project_points(with_geotag(images_stream))
+    return out.withColumn("cell7", cell_expr(7)(F.col("x"), F.col("y"))).drop("x", "y")
 
 
 def stream_to_icelite(images_stream: DataFrame, table_path: str, checkpoint_dir: str):

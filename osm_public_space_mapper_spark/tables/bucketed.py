@@ -1,17 +1,17 @@
 """Bucketed table layout for co-located joins (100 TB design).
 
 Writing both sides of the hot join bucketed + sorted on the join key makes
-every downstream cell-keyed operation — equi-joins, groupBy-applyInPandas,
-and the PIP cogroup kernel — consume the stored partitioning directly:
-`HashPartitioning(bucket key)` satisfies the operators' clustered
-distribution, so the physical plan contains NO Exchange at all. At 10^12
-rows this removes the single biggest cost of the join (shuffling the image
-table); the one-time bucketed write amortizes across every later query.
+every downstream cell-keyed operation — equi-joins such as the J12
+shuffle-hash mask join of ``pip_join_raster``, and groupBy-applyInPandas —
+consume the stored partitioning directly: `HashPartitioning(bucket key)`
+satisfies the operators' clustered distribution, so the physical plan
+contains NO Exchange at all. At 10^12 rows this removes the single biggest
+cost of the join (shuffling the image table); the one-time bucketed write
+amortizes across every later query.
 
-Salting composes: adding `_salt` to the group key keeps the requirement
-satisfied (partitioning on a subset of the clustering keys), so skew
-handling survives the zero-shuffle path (verified by the plan assertion in
-tests/test_bucketed.py).
+Salting widens the join key to ``(tile_cell, _salt)``; the bucket layout on
+``tile_cell`` alone does not cover it, so a salted join over bucketed
+tables shuffles again (tests/test_bucketed.py checks the unsalted plan).
 """
 
 from __future__ import annotations

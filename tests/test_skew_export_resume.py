@@ -89,8 +89,8 @@ def test_pipeline_resume_via_icelite(spark, layer, tmp_path):
 
 
 def test_salted_pip_join_equals_unsalted(spark, layer):
-    """Regression: salted cogroup keys must co-locate with mask rows (a
-    bigint/int key-type mismatch silently dropped ~half the groups)."""
+    """Regression: salted join keys must co-locate with mask rows (a
+    bigint/int `_salt` type mismatch silently dropped ~half the groups)."""
     from osm_public_space_mapper_spark.fixtures.images import synth_images_spark
     from osm_public_space_mapper_spark.operators import tiling
 

@@ -451,10 +451,11 @@ def _geofence_points(spark, n=900, seed=23):
 
 
 def test_geofence_expr_matches_raster_batch(spark, fixture_layer, tmp_path):
-    """pip_join_expr (pure-Catalyst mask bit test) must reproduce the Arrow
-    cogroup kernel's assignments exactly — same lattice, same MSB-first
-    packbits indexing — and, fed pre-projected points from storage, its
-    plan must contain no Python eval at all."""
+    """pip_join_expr (the broadcast mask join) must reproduce the
+    shuffle-hash pip_join_raster lane's assignments exactly — same lattice,
+    same MSB-first packbits indexing — and, fed pre-projected points and
+    subdivided masks from storage, its plan must contain no Python node at
+    all (the mask words are a Catalyst projection too)."""
     from osm_public_space_mapper_spark.operators import joins, tiling
     from osm_public_space_mapper_spark.streaming.geofence import pip_join_expr
 
@@ -474,7 +475,33 @@ def test_geofence_expr_matches_raster_batch(spark, fixture_layer, tmp_path):
     }
     assert got == raster and raster
     plan = expr_df._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan  # no Arrow/row Python in the lane
+    python_nodes = ("EvalPython", "MapInPandas", "MapInArrow", "FlatMapCoGroupsIn")
+    assert not [n for n in python_nodes if n in plan], plan[:2000]
+
+
+def test_mask_words_match_numpy_big_endian(spark):
+    """with_mask_words (one Catalyst projection) equals the numpy reference:
+    the packed bytes right-padded to whole 8-byte words and read as
+    big-endian u64, reinterpreted as int64. Covers partial and whole words,
+    an MSB-set word (negative long), all-ones, and a zero-length mask, which
+    must give [] rather than the [0, -1] that sequence(0, -1) returns."""
+    import numpy as np
+
+    from osm_public_space_mapper_spark.streaming.geofence import with_mask_words
+
+    rng = np.random.default_rng(5)
+    masks = [bytes(rng.integers(0, 256, n, dtype=np.uint8)) for n in (1, 7, 8, 9, 17)]
+    masks += [b"\x80" + bytes(7), b"\xff" * 16, b""]
+
+    def numpy_words(m):
+        b = np.frombuffer(m + bytes(-len(m) % 8), dtype=np.uint8)
+        return b.view(">u8").astype("u8").view("i8").tolist()
+
+    df = spark.createDataFrame(list(enumerate(masks)), "i int, mask binary")
+    got = {r.i: r.mask_words for r in with_mask_words(df).collect()}
+    for i, m in enumerate(masks):
+        assert got[i] == numpy_words(m), (len(m), got[i])
+    assert got[5] == [-(1 << 63)] and got[6] == [-1, -1] and got[7] == []
 
 
 def test_geofence_stream_matches_batch(spark, fixture_layer, tmp_path):
