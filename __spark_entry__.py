@@ -119,9 +119,9 @@ def _polygon_layer(spark: SparkSession) -> DataFrame:
             layer = run_pipeline(elements_to_spark(spark), cfg, overlay_res=8)
             if cache_path:
                 layer.write.mode("overwrite").parquet(cache_path)
-                # the re-read layer no longer needs the records' checkpoints;
+                # the re-read layer no longer needs the records' checkpoint;
                 # without a cache path the cached layer still recomputes
-                # from them if evicted, so they stay pinned
+                # from it if evicted, so it stays pinned
                 release_overlay_records(layer)
                 layer = spark.read.parquet(cache_path)
             layer = layer.cache()

@@ -1,8 +1,8 @@
 """Geometry column functions: Arrow-vectorized pandas UDFs where the maths
 needs numpy, pure Catalyst expressions where it does not.
 
-st_project / st_unproject: EPSG:4326 ↔ EPSG:3035
-  (reference clean_data.py:117-126, export_data.py:33-39 via pyproj)
+st_project: EPSG:4326 → EPSG:3035
+  (reference clean_data.py:117-126 via pyproj)
 bbox_expr: per-row bbox struct, Catalyst array_min/array_max over the
   flattened points — sargable prefilter for bbox crop / cell cover
   (reference clean_data.py:366-370)
@@ -23,7 +23,7 @@ from pyspark.sql.functions import pandas_udf
 
 from ..cells.grid import cell_side
 from ..geo.arrowgeom import flat_to_list, series_to_flat
-from ..geo.laea import laea_forward, laea_inverse
+from ..geo.laea import laea_forward
 
 GEOM_TYPE = T.ArrayType(T.ArrayType(T.ArrayType(T.DoubleType())))
 
@@ -34,18 +34,6 @@ def st_project(geom: pd.Series) -> pd.Series:
     if coords.shape[0]:
         x, y = laea_forward(coords[:, 0], coords[:, 1])
         coords = np.stack([x, y], axis=1)
-    out = flat_to_list(coords, po, qo)
-    res = pd.Series(out, index=geom.index)
-    res[geom.isna()] = None
-    return res
-
-
-@pandas_udf(GEOM_TYPE)
-def st_unproject(geom: pd.Series) -> pd.Series:
-    coords, po, qo = series_to_flat(geom)
-    if coords.shape[0]:
-        lon, lat = laea_inverse(coords[:, 0], coords[:, 1])
-        coords = np.stack([lon, lat], axis=1)
     out = flat_to_list(coords, po, qo)
     res = pd.Series(out, index=geom.index)
     res[geom.isna()] = None

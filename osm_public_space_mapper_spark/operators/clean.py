@@ -152,23 +152,6 @@ def drop_road_rail_walking(df: DataFrame) -> DataFrame:
     )
 
 
-def drop_linestring_barriers_and_entrance_points(df: DataFrame) -> DataFrame:
-    """reference clean_data.py:417-423."""
-    return df.filter(
-        ~((P.has("barrier") & P.is_linestring()) | (P.is_entrance() & P.is_point()))
-    )
-
-
-def drop_all_linestrings(df: DataFrame) -> DataFrame:
-    """reference clean_data.py:401-414."""
-    return df.filter(~P.is_linestring())
-
-
-def drop_elements_with_undefined_space_type(df: DataFrame) -> DataFrame:
-    """reference clean_data.py:426-439."""
-    return df.filter(F.col("space_type").isNotNull())
-
-
 def get_and_drop_buildings(df: DataFrame):
     """reference analyse_space_type.py:5-20 — split into (rest, buildings) and
     stamp building attributes. Caller should cache the input."""

@@ -135,7 +135,11 @@ def subdivide_tiles(tiles: DataFrame, group_res: int) -> DataFrame:
     Parallelism of the raster PIP join is bounded by the number of groups;
     coarse tiles (res 10 = 256 m) would cap it at a handful of tasks on a
     small extent. Slicing each mask to its res-`group_res` descendants keeps
-    total payload constant while multiplying group count by 4^(Δres)."""
+    total payload constant while multiplying group count by 4^(Δres).
+
+    Each slice's pixel window is taken from its sub-cell's bounds, so when
+    `px` does not divide the sub-cell side the window also holds the pixels
+    that straddle its edges (they appear in both neighbouring slices)."""
     out_schema = T.StructType(
         [
             T.StructField("tile_cell", T.LongType()),
@@ -151,8 +155,9 @@ def subdivide_tiles(tiles: DataFrame, group_res: int) -> DataFrame:
     )
 
     def _slice(batches):
-        from ..cells.grid import decode_cells
+        from ..cells.grid import cell_side, decode_cells
 
+        side = cell_side(group_res)
         for pdf in batches:
             out = {f.name: [] for f in out_schema.fields}
             for _, row in pdf.iterrows():
@@ -161,10 +166,13 @@ def subdivide_tiles(tiles: DataFrame, group_res: int) -> DataFrame:
                 res, ix, iy = decode_cells(np.array([row["tile_cell"]], dtype=np.int64))
                 shift = group_res - int(res[0])
                 n = 1 << shift  # subcells per axis
-                sw, sh = w // n, h // n
+                edges = [int(np.floor(k * side / row["px"])) for k in range(n)]
+                ends = [int(np.ceil((k + 1) * side / row["px"])) for k in range(n)]
                 for sx in range(n):
+                    x0, x1 = edges[sx], min(w, ends[sx])
                     for sy in range(n):
-                        sub = mask[sy * sh : (sy + 1) * sh, sx * sw : (sx + 1) * sw]
+                        y0, y1 = edges[sy], min(h, ends[sy])
+                        sub = mask[y0:y1, x0:x1]
                         if not sub.any():
                             continue
                         sub_ix = (int(ix[0]) << shift) | sx
@@ -174,10 +182,10 @@ def subdivide_tiles(tiles: DataFrame, group_res: int) -> DataFrame:
                         out["space_category"].append(row["space_category"])
                         out["access"].append(row["access"])
                         out["mask"].append(np.packbits(sub, axis=None).tobytes())
-                        out["mask_w"].append(sw)
-                        out["mask_h"].append(sh)
-                        out["ox"].append(row["ox"] + sx * sw * row["px"])
-                        out["oy"].append(row["oy"] + sy * sh * row["px"])
+                        out["mask_w"].append(x1 - x0)
+                        out["mask_h"].append(y1 - y0)
+                        out["ox"].append(row["ox"] + x0 * row["px"])
+                        out["oy"].append(row["oy"] + y0 * row["px"])
                         out["px"].append(row["px"])
             yield pd.DataFrame(out)
 
@@ -193,7 +201,6 @@ def pip_join_raster(
     group_res: int = 13,
     salt: int = 0,
     id_col: str = "image_id",
-    tiles_subdivided: bool = False,
 ) -> DataFrame:
     """J12 batch lane: assign images via per-subcell class-mask lookup.
 
@@ -204,11 +211,11 @@ def pip_join_raster(
     salting (north rule): dense cells split into ``salt`` sub-groups on
     ``(tile_cell, _salt)``; the small mask slices replicate per salt id.
 
-    tiles_subdivided=True declares the mask side is ALREADY at group_res
-    granularity (e.g. a stored `subdivide_tiles` output bucketed by
-    tile_cell) — the slice kernel is skipped so both sides keep their stored
-    partitioning and the unsalted join plans with zero Exchange
-    (tests/test_bucketed.py asserts this).
+    ``tile_res == group_res`` declares the mask side is ALREADY at
+    ``group_res`` granularity (e.g. a stored ``subdivide_tiles`` output
+    bucketed by tile_cell) — the slice kernel is skipped so both sides keep
+    their stored partitioning and the unsalted join plans with zero
+    Exchange (tests/test_bucketed.py asserts this).
 
     The tile masks are rasterized from the SAME pixel lattice the vector
     layer's rings trace, so a pixel lookup equals the vector PIP answer for
@@ -219,7 +226,7 @@ def pip_join_raster(
     tile_cell``."""
     from ..streaming.geofence import _mask_join
 
-    if group_res > tile_res and not tiles_subdivided:
+    if group_res > tile_res:
         tiles = subdivide_tiles(tiles, group_res)
     out = _mask_join(images, tiles, group_res, id_col, (), salt=salt)
     return out.withColumnRenamed(id_col, "image_id")
@@ -374,19 +381,12 @@ def knn_join(
             )
         return out
 
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def _neighbor_cells(cx: pd.Series, cy: pd.Series) -> pd.Series:
-        from ..cells.grid import encode_cells, neighbors
-
-        base = encode_cells(cx.to_numpy(), cy.to_numpy(), res)
-        neigh = neighbors(base, ring)
-        return pd.Series(list(neigh), index=cx.index).map(lambda a: a.tolist())
-
     from ..functions.geometry import cell_expr
 
-    cands = centroids.withColumn("cell", F.explode(_neighbor_cells(F.col("cx"), F.col("cy"))))
+    # the `ring` neighbourhood of the centroid's cell (cells.grid.neighbors)
+    # is the halo cover of its degenerate point bbox
+    cx, cy = F.col("cx"), F.col("cy")
+    cands = centroids.withColumn("cell", F.explode(cover_expr(res, halo=ring)(cx, cy, cx, cy)))
     imgs = images.withColumn("knn_cell", cell_expr(res)(F.col("x"), F.col("y")))
     # broadcast-free: never let the (potentially 10^12-row) image side be
     # size-estimated into a broadcast; shuffle both sides on the cell key

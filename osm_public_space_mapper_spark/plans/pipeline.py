@@ -67,129 +67,98 @@ def _assume_access_col():
     )
 
 
+def _role_records(df: DataFrame, roles: list[tuple]) -> DataFrame:
+    """One record per (row, role whose condition holds) in one projection.
+
+    A role is (name, condition, space_category, assumed_access, buf_width,
+    cap_style); the last four are literals or columns of `df`."""
+    hits = [
+        F.when(cond, F.struct(
+            F.lit(name).alias("role"),
+            F.lit(category).cast("string").alias("space_category"),
+            F.lit(assumed).cast("string").alias("assumed_access"),
+            F.lit(width).cast("double").alias("buf_width"),
+            F.lit(cap).alias("cap_style"),
+        ))
+        for name, cond, category, assumed, width, cap in roles
+    ]
+    return df.select(
+        "element_id", "geom_kind", "geom", F.col("access").alias("access_tags"),
+        F.explode(F.filter(F.array(*hits), lambda r: r.isNotNull())).alias("_r"),
+    ).select("element_id", "geom_kind", "geom", "access_tags", "_r.*")
+
+
 def build_overlay_records(stages: dict[str, DataFrame], region: RegionalConfig | None = None) -> DataFrame:
     """Emit the kernel input rows: one record per (role, element).
 
     Roles: element | building | road | rail | pedestrian | platform | passage
            | barrier_inacc  (see overlay_core docstring). `region` supplies
-    the street/rail/pedestrian width tables (default Vienna/RSV)."""
+    the street/rail/pedestrian width tables (default Vienna/RSV).
+
+    The classified dataset and the buildings are materialized together by
+    ONE eager localCheckpoint, so the clean→classify chain (and its
+    `st_project` UDF) runs once and stays out of every consuming plan:
+    without it, each of the checkpoint's readers (the two role projections
+    and both sides of the barrier join) re-runs the chain. The
+    barrier join (`interpret_barriers`) is not checkpointed: it runs inside
+    the job that consumes the records, so consume them once (e.g. one
+    `overlay_stage` whose layer is cached) rather than re-reading them per
+    action. The pinned RDD lives until `release_overlay_records`; like any
+    localCheckpoint it sits on executor storage only (see there)."""
     region = region or VIENNA
-    # Truncate the classify plan before fanning out (guide §3.3: very wide
-    # unions re-analyze and re-execute every branch's subtree). The records
-    # frame unions 8 role branches, 6 of which re-derive the FULL
-    # clean→classify chain: without materialization each action re-ran the
-    # chain per branch and Catalyst re-analyzed the giant tree 8× (measured
-    # ~4 s per action on the 25-row fixture, pure plan overhead). One eager
-    # localCheckpoint per input runs the chain once and makes every branch a
-    # leaf scan. At scale this is the same trade: 8 recomputes of the
-    # classify chain vs one materialization of the classified dataset.
-    # The three pinned RDDs live until release_overlay_records.
     sc = stages["dataset"].sparkSession.sparkContext
     before = _pinned_ids(sc)
-    dataset = stages["dataset"].localCheckpoint(eager=True)
-    buildings = stages["buildings"].localCheckpoint(eager=True)
+    classified = (
+        stages["dataset"].withColumn("_building", F.lit(False))
+        .unionByName(stages["buildings"].withColumn("_building", F.lit(True)))
+        .localCheckpoint(eager=True)
+    )
 
     st = F.col("space_type")
-    is_road = st.eqNullSafe("road")
-    is_rail_t = st.eqNullSafe("rail")
-    is_walk = st.eqNullSafe("walking area")
+    line = P.is_linestring()
+    line_or_poly = line | P.is_poly_like()
+    is_road, is_walk = st.eqNullSafe("road"), st.eqNullSafe("walking area")
+    road_w = F.when(line, F.round(classify.road_width(region) / 2.0, 1) * 2.0).otherwise(0.0)
+    rail_half = F.when(P.teq("railway", "tram"), region.tram_width / 2.0).otherwise(region.train_width / 2.0)
+    rail_w = F.when(line, F.round(rail_half, 1) * 2.0).otherwise(0.0)
+    walk_w = region.pedestrian_way_default_width
+    ped_w = F.when(line, F.when(P.teq("highway", "living_street"), 2.0 * walk_w).otherwise(walk_w)).otherwise(0.0)
+    # building passages clip buildings (J3): accessible passage lines,
+    # emitted as well as their road / pedestrian record
+    passage = line & P.is_building_passage() & (F.col("access").isNull() | F.col("access").eqNullSafe("yes"))
+    # traffic layers keep their pre-drop rows (full_data_analysis.py:72-89);
+    # building rows carry space_type 'building', so only `_building` picks them
+    from_classified = _role_records(classified, [
+        ("road", is_road & line_or_poly, "road", None, road_w, "square"),
+        ("rail", st.eqNullSafe("rail") & line_or_poly, "rail", None, rail_w, "flat"),
+        # 'walking area' ∈ SPACE_TYPES_WITH_ACCESS
+        ("pedestrian", is_walk & line_or_poly, "walking area", "yes", ped_w, "square"),
+        ("passage", is_road & passage, "road", None, road_w, "square"),
+        ("passage", is_walk & passage, "walking area", "yes", ped_w, "square"),
+        ("building", F.col("_building"), "building", None, 0.0, "square"),
+    ])
 
-    # traffic layers keep their pre-drop rows (full_data_analysis.py:72-89)
-    roads = dataset.filter(is_road & (P.is_linestring() | P.is_poly_like())).select(
-        "element_id", "geom_kind", "geom", "tags", "access",
-        F.lit("road").alias("role"),
-        F.lit("road").alias("space_category"),
-        F.lit(None).cast("string").alias("assumed_access"),
-        F.when(P.is_linestring(), F.round(classify.road_width(region) / 2.0, 1) * 2.0).otherwise(F.lit(0.0)).alias("buf_width"),
-        F.lit("square").alias("cap_style"),
-    )
-    rails = dataset.filter(is_rail_t & (P.is_linestring() | P.is_poly_like())).select(
-        "element_id", "geom_kind", "geom", "tags", "access",
-        F.lit("rail").alias("role"),
-        F.lit("rail").alias("space_category"),
-        F.lit(None).cast("string").alias("assumed_access"),
-        F.when(
-            P.is_linestring(),
-            F.round(
-                F.when(P.teq("railway", "tram"), F.lit(region.tram_width / 2.0))
-                .otherwise(F.lit(region.train_width / 2.0)),
-                1,
-            )
-            * 2.0,
-        ).otherwise(F.lit(0.0)).alias("buf_width"),
-        F.lit("flat").alias("cap_style"),
-    )
-    peds = dataset.filter(is_walk & (P.is_linestring() | P.is_poly_like())).select(
-        "element_id", "geom_kind", "geom", "tags", "access",
-        F.lit("pedestrian").alias("role"),
-        F.lit("walking area").alias("space_category"),
-        F.lit("yes").alias("assumed_access"),  # 'walking area' ∈ SPACE_TYPES_WITH_ACCESS
-        F.when(
-            P.is_linestring(),
-            F.when(P.teq("highway", "living_street"), F.lit(2.0 * region.pedestrian_way_default_width))
-            .otherwise(F.lit(region.pedestrian_way_default_width)),
-        ).otherwise(F.lit(0.0)).alias("buf_width"),
-        F.lit("square").alias("cap_style"),
-    )
-    # building passages clip buildings (J3): accessible passages only
-    passages = (roads.unionByName(peds)).filter(
-        P.is_building_passage() & (F.col("access").isNull() | F.col("access").eqNullSafe("yes")) & P.is_linestring()
-    ).withColumn("role", F.lit("passage"))
+    # the reference drops traffic rows BEFORE barrier analysis; its main
+    # dataset tail (full_data_analysis.py:122-145) is row-local: poly_like
+    # already excludes the linestrings and entrance points it drops, and
+    # rows whose space type stays undefined drop
+    rest = interpret_barriers(clean.drop_road_rail_walking(classified.filter(~F.col("_building"))))
+    rest = classify.set_space_category(classify.set_missing_space_types(rest))
+    element = P.is_poly_like() & st.isNotNull()
+    from_rest = _role_records(rest, [
+        ("barrier_inacc", P.is_barrier() & F.col("access").eqNullSafe("no") & line, None, None, 0.0, "square"),
+        ("element", element, F.col("space_category"), _assume_access_col(), 0.0, "square"),
+        ("platform", element & st.eqNullSafe("public transport stop"), None, None, 0.0, "square"),
+    ])
 
-    # reference drops traffic rows from the dataset BEFORE barrier analysis
-    rest = clean.drop_road_rail_walking(dataset)
-    # interpret_barriers is itself a deep when-chain reused by two branches
-    # (barrier_lines + the element/platform tail) — truncate it once too
-    rest = interpret_barriers(rest).localCheckpoint(eager=True)
-    barrier_lines = rest.filter(P.is_barrier() & F.col("access").eqNullSafe("no") & P.is_linestring()).select(
-        "element_id", "geom_kind", "geom", "tags", "access",
-        F.lit("barrier_inacc").alias("role"),
-        F.lit(None).cast("string").alias("space_category"),
-        F.lit(None).cast("string").alias("assumed_access"),
-        F.lit(0.0).alias("buf_width"),
-        F.lit("square").alias("cap_style"),
-    )
-
-    # main dataset tail (full_data_analysis.py:122-145)
-    rest = clean.drop_linestring_barriers_and_entrance_points(rest)
-    rest = clean.drop_all_linestrings(rest)
-    rest = classify.set_missing_space_types(rest)
-    rest = clean.drop_elements_with_undefined_space_type(rest)
-    rest = classify.set_space_category(rest)
-    elements = rest.filter(P.is_poly_like()).select(
-        "element_id", "geom_kind", "geom", "tags", "access",
-        F.lit("element").alias("role"),
-        F.col("space_category"),
-        _assume_access_col().alias("assumed_access"),
-        F.lit(0.0).alias("buf_width"),
-        F.lit("square").alias("cap_style"),
-    )
-    platforms = rest.filter(st.eqNullSafe("public transport stop") & P.is_poly_like()).select(
-        "element_id", "geom_kind", "geom", "tags", "access",
-        F.lit("platform").alias("role"),
-        F.lit(None).cast("string").alias("space_category"),
-        F.lit(None).cast("string").alias("assumed_access"),
-        F.lit(0.0).alias("buf_width"),
-        F.lit("square").alias("cap_style"),
-    )
-    bld = buildings.select(
-        "element_id", "geom_kind", "geom", "tags", "access",
-        F.lit("building").alias("role"),
-        F.lit("building").alias("space_category"),
-        F.lit(None).cast("string").alias("assumed_access"),
-        F.lit(0.0).alias("buf_width"),
-        F.lit("square").alias("cap_style"),
-    )
-    records = elements.unionByName(bld).unionByName(roads).unionByName(rails) \
-        .unionByName(peds).unionByName(platforms).unionByName(passages).unionByName(barrier_lines)
-    records = records.withColumnRenamed("access", "access_tags").drop("tags")
+    records = from_classified.unionByName(from_rest)
     records._overlay_pinned = [(sc, _pinned_ids(sc) - before)]
     return records
 
 
 def release_overlay_records(df: DataFrame) -> None:
-    """Release the three eager localCheckpoints behind a
-    `build_overlay_records` frame (or a `run_pipeline` layer built from one).
+    """Release the eager localCheckpoint behind a `build_overlay_records`
+    frame (or a `run_pipeline` layer built from one).
 
     Call it only once everything derived from the records has been
     materialized somewhere that does not read them back (e.g. the layer

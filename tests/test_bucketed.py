@@ -37,7 +37,7 @@ def test_bucketed_pip_join_no_exchange(spark, tiles_df):
     save_bucketed(joins.subdivide_tiles(tiles_df, 13), "bk_tiles", "tile_cell", n_buckets=16)
 
     bi, bt = spark.table("bk_images"), spark.table("bk_tiles")
-    assigned = joins.pip_join_raster(bi, bt, salt=0, tiles_subdivided=True)
+    assigned = joins.pip_join_raster(bi, bt, tile_res=13, salt=0)
     plan = assigned._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan[:2000]
     assert "BroadcastExchange" not in plan, plan[:2000]

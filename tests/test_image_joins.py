@@ -79,6 +79,24 @@ def test_pip_raster_equals_vector(spark, layer_df, images_df):
     assert raster == vector
 
 
+@pytest.mark.parametrize("px", [0.3, 0.25])
+def test_subdivided_raster_join_equals_unsubdivided(spark, layer_df, images_df, px):
+    """Slicing the tile masks to res-13 sub-cells loses and adds no
+    assignment, also when px does not divide the 32 m sub-cell side
+    (0.3 m: 106.67 pixels per sub-cell)."""
+    tiles = tiling.rasterize_tiles(layer_df, tile_res=10, px=px).cache()
+    try:
+        def assigned(**kw):
+            out = joins.pip_join_raster(images_df, tiles, **kw).select("image_id", "space_category", "access")
+            return sorted(tuple(r) for r in out.collect())
+
+        whole = assigned(tile_res=10, group_res=10)
+        assert len(whole) > 0.99 * N_IMAGES
+        assert assigned(tile_res=10, group_res=13) == whole
+    finally:
+        tiles.unpersist()
+
+
 def test_pip_assignment_distribution(spark, layer_df, images_df):
     assigned = joins.pip_join(images_df, layer_df)
     counts = {(r.space_category, r.access): r.n for r in
@@ -290,8 +308,10 @@ def test_bbox_and_cover_expr_match_numpy(spark):
     # the Catalyst bbox + cell cover must give exactly the numpy min/max bbox
     # and cells.grid.cover_bbox ids, in cover_bbox's order — including
     # bounds on cell edges (k·side), negative and -0.0 coordinates, a single
-    # point, multi-part polygons; an empty-parts geometry covers nothing
-    from osm_public_space_mapper_spark.cells.grid import cover_bbox
+    # point, multi-part polygons; an empty-parts geometry covers nothing.
+    # The halo cover of a point's degenerate bbox is cells.grid.neighbors of
+    # its cell, in the same order (the kNN candidate cells)
+    from osm_public_space_mapper_spark.cells.grid import cover_bbox, encode_cells, neighbors
     from osm_public_space_mapper_spark.functions.geometry import bbox_expr, cover_expr
 
     from pyspark.sql import functions as F
@@ -320,14 +340,17 @@ def test_bbox_and_cover_expr_match_numpy(spark):
     got_bb = {r.id: tuple(r.b) for r in df.collect()}
     assert got_bb == {**want_bb, len(geoms) - 1: (None,) * 4}
 
+    def covers(cover, *bounds):
+        rows = df.select("id", F.explode(cover(*(F.col(f"b.{c}") for c in bounds))).alias("cell")).collect()
+        got = {}
+        for r in rows:  # explode keeps each row's array order
+            got.setdefault(r.id, []).append(r.cell)
+        return got
+
     for res in (8, 10, 13, 14):
-        for halo in (0, 1):
+        for halo in (0, 1, 2):
             cover = cover_expr(res, halo)
-            rows = df.select(
-                "id", F.explode(cover(F.col("b.xmin"), F.col("b.ymin"), F.col("b.xmax"), F.col("b.ymax"))).alias("cell")
-            ).collect()
-            got = {}
-            for r in rows:  # explode keeps each row's array order
-                got.setdefault(r.id, []).append(r.cell)
             want = {i: cover_bbox(*bb, res, halo).tolist() for i, bb in want_bb.items()}
-            assert got == want, (res, halo)
+            assert covers(cover, "xmin", "ymin", "xmax", "ymax") == want, (res, halo)
+            want = {i: neighbors(encode_cells([bb[0]], [bb[1]], res), halo)[0].tolist() for i, bb in want_bb.items()}
+            assert covers(cover, "xmin", "ymin", "xmin", "ymin") == want, (res, halo, "point")

@@ -153,8 +153,27 @@ def test_release_overlay_records(spark, tmp_path):
     jsc = spark.sparkContext._jsc.sc()
     base = jsc.getPersistentRDDs().size()
     layer = run_pipeline(elements_to_spark(spark), _overlay_cfg(1.0), overlay_res=8)
-    assert jsc.getPersistentRDDs().size() == base + 3  # the records' localCheckpoints
+    assert jsc.getPersistentRDDs().size() == base + 1  # the records' localCheckpoint
     layer.write.parquet(str(tmp_path / "layer"))
     release_overlay_records(layer)
     assert jsc.getPersistentRDDs().size() == base
     assert spark.read.parquet(str(tmp_path / "layer")).count() > 0
+
+
+def test_overlay_record_roles(spark):
+    """The fixture's records per role. A building passage keeps its road or
+    pedestrian record, and a platform its element record."""
+    records = build_overlay_records(classify_stage(elements_to_spark(spark)))
+    try:
+        rows = records.select("element_id", "role").collect()
+    finally:
+        release_overlay_records(records)
+    ids = {}
+    for r in rows:
+        ids.setdefault(r.role, []).append(r.element_id)
+    assert {role: len(v) for role, v in ids.items()} == {
+        "barrier_inacc": 5, "building": 5, "element": 31, "passage": 1,
+        "pedestrian": 8, "platform": 1, "rail": 3, "road": 12,
+    }
+    assert set(ids["passage"]) <= set(ids["road"]) | set(ids["pedestrian"])
+    assert set(ids["platform"]) <= set(ids["element"])
