@@ -882,7 +882,7 @@ WITH t AS (
 ),
 c AS (
   SELECT doc_id, n_tokens,
-    COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS tok_start
+    CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS tok_start
   FROM t
 )
 SELECT doc_id, n_tokens, tok_start, tok_start + n_tokens AS tok_end,

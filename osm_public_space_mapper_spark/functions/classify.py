@@ -4,7 +4,7 @@ All pure Catalyst expressions. Write-once ("first-writer-wins") attribute
 semantics from the reference (utils/geometry_element.py:48-73) map to
 `F.coalesce(existing, new)` — stage order IS the precedence rule. The single
 overwrite exception (parking access, analyse_traffic_area.py:22-24 +
-geometry_element.py:61-64) is an unconditional assignment.
+geometry_element.py:61-64) is a plain assignment on every non-building row.
 """
 
 from __future__ import annotations
@@ -83,12 +83,14 @@ def set_traffic_space_type(df: DataFrame) -> DataFrame:
         .when(has("highway") & ~is_point(), "road")
     )
     df = _set_once(df, "space_type", new_type)
-    # the ONLY access overwrite in the pipeline: parking polygons force 'no'
+    # the ONLY access overwrite in the pipeline: parking polygons force 'no';
+    # the reference splits buildings off before this stage, so they keep theirs
+    parking = is_parking_polygon() & ~F.col("space_type").eqNullSafe("building")
     df = df.withColumn(
-        "access", F.when(is_parking_polygon(), "no").otherwise(F.col("access"))
+        "access", F.when(parking, "no").otherwise(F.col("access"))
     ).withColumn(
         "access_derived_from",
-        F.when(is_parking_polygon(), F.coalesce(F.col("access_derived_from"), F.lit("space type"))).otherwise(
+        F.when(parking, F.coalesce(F.col("access_derived_from"), F.lit("space type"))).otherwise(
             F.col("access_derived_from")
         ),
     )

@@ -1,8 +1,8 @@
-"""Geometry column functions: Arrow-vectorized pandas UDFs where the maths
-needs numpy, pure Catalyst expressions where it does not.
+"""Geometry column functions: pure Catalyst expressions where the maths
+allows it, Arrow-vectorized pandas UDFs where it needs numpy.
 
-st_project: EPSG:4326 → EPSG:3035
-  (reference clean_data.py:117-126 via pyproj)
+laea_expr / st_project: EPSG:4326 → EPSG:3035 per point / per vertex in
+  Catalyst (reference clean_data.py:117-126 via pyproj)
 bbox_expr: per-row bbox struct, Catalyst array_min/array_max over the
   flattened points — sargable prefilter for bbox crop / cell cover
   (reference clean_data.py:366-370)
@@ -22,22 +22,42 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..cells.grid import cell_side
-from ..geo.arrowgeom import flat_to_list, series_to_flat
-from ..geo.laea import laea_forward
+from ..geo import laea as L
+from ..geo.arrowgeom import series_to_flat
 
 GEOM_TYPE = T.ArrayType(T.ArrayType(T.ArrayType(T.DoubleType())))
 
 
-@pandas_udf(GEOM_TYPE)
-def st_project(geom: pd.Series) -> pd.Series:
-    coords, po, qo = series_to_flat(geom)
-    if coords.shape[0]:
-        x, y = laea_forward(coords[:, 0], coords[:, 1])
-        coords = np.stack([x, y], axis=1)
-    out = flat_to_list(coords, po, qo)
-    res = pd.Series(out, index=geom.index)
-    res[geom.isna()] = None
-    return res
+def laea_expr(lon: Column, lat: Column) -> Column:
+    """(lon, lat) EPSG:4326 degrees → struct(x, y) EPSG:3035 metres, in
+    Catalyst: geo/laea.laea_forward term for term, its constants folded in
+    as literals. JVM Math and numpy may differ in the last ulp, so the two
+    agree to ~1e-9 m, not bit for bit."""
+    sin_phi = F.sin(F.radians(lat))
+    esin = F.lit(L._E) * sin_phi
+    q = F.lit(1.0 - L._E2) * (
+        sin_phi / (1.0 - F.lit(L._E2) * sin_phi * sin_phi)
+        - F.lit(1.0 / (2.0 * L._E)) * F.log((1.0 - esin) / (1.0 + esin))
+    )
+    beta = F.asin(F.greatest(F.lit(-1.0), F.least(F.lit(1.0), q / F.lit(L._QP))))
+    dlon = F.radians(lon) - F.lit(L._LON0)
+    cos_b, sin_b, cos_l = F.cos(beta), F.sin(beta), F.cos(dlon)
+    b = F.lit(L._RQ) * F.sqrt(2.0 / (1.0 + F.lit(L._SIN_B1) * sin_b + F.lit(L._COS_B1) * cos_b * cos_l))
+    return F.struct(
+        (b * F.lit(L._D) * cos_b * F.sin(dlon) + F.lit(L._FE)).alias("x"),
+        (b / F.lit(L._D) * (F.lit(L._COS_B1) * sin_b - F.lit(L._SIN_B1) * cos_b * cos_l) + F.lit(L._FN)).alias("y"),
+    )
+
+
+def st_project(geom: Column) -> Column:
+    """Project every vertex of a geometry with `laea_expr`. A NULL geom
+    stays NULL and an empty parts array stays empty."""
+
+    def _vertex(p):
+        xy = laea_expr(p[0], p[1])
+        return F.array(xy["x"], xy["y"])
+
+    return F.transform(geom, lambda part: F.transform(part, _vertex))
 
 
 def bbox_expr(geom: Column) -> Column:

@@ -3,8 +3,8 @@
 The engine stores geometry as `array<array<array<double>>>` (parts → points →
 [x, y]). Inside pandas UDFs these arrive as pandas Series of nested lists;
 this module flattens them to one contiguous (N, 2) float64 coordinate block
-plus Arrow list offsets, so projection / area kernels run one numpy call per
-*batch*, never per row (BASELINE.json input_hint: "vectorized pandas/Arrow
+plus Arrow list offsets, so area kernels run one numpy call per *batch*,
+never per row (BASELINE.json input_hint: "vectorized pandas/Arrow
 UDFs (no per-row Python) throughout").
 """
 
@@ -34,20 +34,6 @@ def series_to_flat(series: pd.Series) -> tuple[np.ndarray, np.ndarray, np.ndarra
     flat = np.asarray(lvl3.flatten(), dtype=np.float64)
     coords = flat.reshape(-1, 2)
     return coords, part_off, point_off
-
-
-def flat_to_list(coords: np.ndarray, part_off: np.ndarray, point_off: np.ndarray) -> list:
-    """Rebuild the nested python-list geometry column from flat coords."""
-    xy = pa.array(coords.reshape(-1), type=pa.float64())
-    pts = pa.ListArray.from_arrays(pa.array(np.arange(0, len(coords) * 2 + 1, 2, dtype=np.int32)), xy)
-    parts = pa.ListArray.from_arrays(pa.array(point_off, type=pa.int32()), pts)
-    rows = pa.ListArray.from_arrays(pa.array(part_off, type=pa.int32()), parts)
-    return rows.to_pylist()
-
-
-def parts_of_row(series_values: list, idx: int) -> list[np.ndarray]:
-    """One row's parts as list of (K,2) ndarrays (test/oracle helper)."""
-    return [np.asarray(p, dtype=np.float64) for p in series_values[idx]]
 
 
 def np_parts(geom) -> list[np.ndarray]:

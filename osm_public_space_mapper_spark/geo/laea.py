@@ -7,8 +7,9 @@ Replaces the reference's pyproj usage
 export_data.py:33-39) — pyproj is unavailable in this environment and the
 engine is built from scratch anyway.
 
-Vectorized over numpy arrays; called from Arrow pandas UDFs so the Spark hot
-path never touches per-row Python objects.
+Vectorized over numpy arrays (image points: operators/joins.project_points).
+Geometries are projected by functions/geometry.laea_expr, the same formulas
+as Catalyst maths with the constants below folded in, tested to 1e-6 m.
 """
 
 from __future__ import annotations

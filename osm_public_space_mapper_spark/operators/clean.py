@@ -151,16 +151,3 @@ def drop_road_rail_walking(df: DataFrame) -> DataFrame:
         F.col("space_type").isNull() | ~F.col("space_type").isin("road", "rail", "walking area")
     )
 
-
-def get_and_drop_buildings(df: DataFrame):
-    """reference analyse_space_type.py:5-20 — split into (rest, buildings) and
-    stamp building attributes. Caller should cache the input."""
-    building = P.is_building()
-    buildings = (
-        df.filter(building)
-        .withColumn("space_type", F.lit("building"))
-        .withColumn("access", F.lit("undefined"))
-        .withColumn("access_derived_from", F.lit("undefined"))
-    )
-    rest = df.filter(~building)
-    return rest, buildings

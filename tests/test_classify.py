@@ -12,6 +12,7 @@ import rules_oracle as O
 from osm_public_space_mapper_spark.fixtures.elements import generate_elements, elements_to_spark
 from osm_public_space_mapper_spark.functions import classify
 from osm_public_space_mapper_spark.operators import clean
+from osm_public_space_mapper_spark.plans.pipeline import classify_stage
 
 
 def oracle_pipeline(rows):
@@ -77,14 +78,10 @@ def oracle_pipeline(rows):
 
 @pytest.fixture(scope="module")
 def classified(spark):
-    df = elements_to_spark(spark)
-    df = clean.clean_chain(df)
-    rest, buildings = clean.get_and_drop_buildings(df)
-    rest = classify.interpret_tags(rest)
-    rest = classify.set_traffic_space_type(rest)
-    rest = classify.set_missing_space_types(rest)
-    rest = classify.assume_access_based_on_space_type(rest)
-    both = rest.unionByName(buildings)
+    # building rows carry their stamp; the write-once stages keep it
+    both = classify_stage(elements_to_spark(spark))
+    both = classify.set_missing_space_types(both)
+    both = classify.assume_access_based_on_space_type(both)
     both = classify.set_space_category(both)
     rows = both.select("element_id", "space_type", "access", "space_category").collect()
     return {r.element_id: (r.space_type, r.access, r.space_category) for r in rows}
@@ -121,10 +118,7 @@ def test_barrier_access_provenance(spark):
     from osm_public_space_mapper_spark.functions import predicates as P
     from osm_public_space_mapper_spark.operators.barriers import interpret_barriers
 
-    df = clean.clean_chain(elements_to_spark(spark))
-    rest, _ = clean.get_and_drop_buildings(df)
-    rest = classify.interpret_tags(rest)
-    rest = classify.set_traffic_space_type(rest)
+    rest = classify_stage(elements_to_spark(spark)).filter(~F.col("_building"))
     rest = clean.drop_road_rail_walking(rest)
     before = {r.element_id: (r.access, r.access_derived_from)
               for r in rest.select("element_id", "access", "access_derived_from").collect()}
@@ -156,11 +150,7 @@ def test_warning_side_outputs(spark):
 
 
 def test_road_width_matches_oracle(spark):
-    df = elements_to_spark(spark)
-    df = clean.clean_chain(df)
-    rest, _ = clean.get_and_drop_buildings(df)
-    rest = classify.interpret_tags(rest)
-    rest = classify.set_traffic_space_type(rest)
+    rest = classify_stage(elements_to_spark(spark)).filter(~F.col("_building"))
     widths = {
         r.element_id: r.width
         for r in rest.filter(F.col("space_type") == "road")
@@ -186,11 +176,7 @@ def test_road_width_under_second_region(spark):
     region2 = VIENNA.with_highway_widths({"residential": (9.0, 7.2)})
     assert VIENNA.highway_default_widths["residential"] == (4.5, 3.6)  # default untouched
 
-    df = elements_to_spark(spark)
-    df = clean.clean_chain(df)
-    rest, _ = clean.get_and_drop_buildings(df)
-    rest = classify.interpret_tags(rest)
-    rest = classify.set_traffic_space_type(rest)
+    rest = classify_stage(elements_to_spark(spark)).filter(~F.col("_building"))
     roads = rest.filter(F.col("space_type") == "road")
     both = roads.select(
         "element_id",

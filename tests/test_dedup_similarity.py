@@ -412,6 +412,26 @@ def test_repetition_stats_handcrafted(spark):
     assert d["n_lines"] == 0 and d["dup_line_frac"] == 0.0 and d["dup_line_char_frac"] == 0.0
 
 
+def test_top_bigram_lowercase_matches_jvm_lower(spark):
+    """The bigram kernel lowercases with Python `str.lower`, the word-char
+    sum in the plan with JVM `lower`: they must agree on the Unicode cases
+    where lowercasing is context- or length-changing (dotted capital I,
+    final sigma, titlecase digraph, fullwidth letter, capital sharp s)."""
+    from collections import Counter
+
+    from osm_public_space_mapper_spark.functions.text import _top_bigram_kernel
+
+    texts = ["İSTANBUL İSTANBUL", "ΟΔΟΣ ΟΔΟΣ ΟΔΟΣ", "ǅemal ǅEMAL ǅemal", "ＡＢ ａｂ ＡＢ", "ẞTRASSE ẞ ẞTRASSE ẞ"]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    jvm = [r.lo for r in docs.orderBy("doc_id").select(F.lower("text").alias("lo")).collect()]
+    assert jvm == [t.lower() for t in texts]
+    got = {r.doc_id: (r.bigram, r.cnt) for r in _top_bigram_kernel(docs, "doc_id", "text").collect()}
+    for doc_id, lo in enumerate(jvm):
+        words = lo.split()
+        c = Counter(a + " " + b for a, b in zip(words, words[1:]))
+        assert got[doc_id] == max(c.items(), key=lambda kv: (kv[1], kv[0])), (doc_id, lo)
+
+
 def test_quality_gate_handcrafted(spark):
     """Gate edge cases the synthetic corpus never hits: a doc failing
     multiple rules (reasons alphabetical, comma-joined), a clean doc

@@ -63,12 +63,10 @@ def _cell(v):
 
 
 _KNOWN_DRIVER_DEFECTS = {
-    # Both reproduce r05 driver failures. Their fixes change the declared
-    # query output / the oracle SQL text, which are frozen during the
-    # optimization round, so they stay xfail with the driver-matching
-    # semantics instead of being silently normalized away.
+    # Reproduces an r05 driver failure. Its fix changes the declared query
+    # output, so it stays xfail with the driver-matching semantics instead
+    # of being silently normalized away.
     "pq_codes": "array<int> output column crashes the (pandas) canonicalizer",
-    "concat_chunk_offsets": "DuckDB HUGEINT window sum -> float64 vs Spark long",
 }
 
 _ORACLED = [

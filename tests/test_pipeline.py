@@ -12,7 +12,8 @@ Checks the reference's own verification artifacts, re-expressed:
 import numpy as np
 import pytest
 
-from osm_public_space_mapper_spark.fixtures.elements import BBOX_4326, elements_to_spark
+from osm_public_space_mapper_spark.fixtures.elements import BBOX_4326, elements_to_spark, generate_elements
+from osm_public_space_mapper_spark.functions.geometry import laea_expr, st_project
 from osm_public_space_mapper_spark.geo.arrowgeom import np_parts
 from osm_public_space_mapper_spark.geo.kernels import points_in_polygon
 from osm_public_space_mapper_spark.geo.laea import laea_forward
@@ -128,11 +129,56 @@ def _overlay_cfg(px):
     return OverlayConfig(px=px, margin=64.0, bbox=env, bbox_ring=ring)
 
 
+def test_laea_expr_matches_laea_forward(spark):
+    """The Catalyst projection agrees with the numpy one to 1e-6 m over
+    EPSG:3035's area of use and on every fixture vertex."""
+    lon, lat = np.meshgrid(np.linspace(-35.5, 44.8, 41), np.linspace(24.6, 84.7, 31))
+    pts = np.stack([lon.ravel(), lat.ravel()], axis=1)
+    fixture = [q for r in generate_elements() if r["geom"] for part in r["geom"] for q in part]
+    pts = np.concatenate([pts, np.asarray(fixture, np.float64)])
+    df = spark.createDataFrame([(float(a), float(b)) for a, b in pts], "lon double, lat double")
+    got = np.array([(r.xy.x, r.xy.y) for r in df.select(laea_expr(df.lon, df.lat).alias("xy")).collect()])
+    x, y = laea_forward(pts[:, 0], pts[:, 1])
+    assert np.abs(got - np.stack([x, y], axis=1)).max() <= 1e-6
+
+
+def test_st_project_keeps_null_and_empty(spark):
+    df = spark.createDataFrame(
+        [(1, None), (2, []), (3, [[[10.0, 52.0]]])], "id int, geom array<array<array<double>>>"
+    )
+    rows = {r.id: r.g for r in df.select("id", st_project(df.geom).alias("g")).collect()}
+    assert rows[1] is None and rows[2] == []
+    assert np.allclose(rows[3], [[[4321000.0, 3210000.0]]], rtol=0, atol=1e-6)
+
+
+def test_parking_building_keeps_building_access(spark):
+    """A building tagged amenity=parking is split off before the parking
+    access overwrite in the reference, so it keeps access 'undefined'."""
+    ring = [[16.400, 48.195], [16.401, 48.195], [16.401, 48.196], [16.400, 48.196], [16.400, 48.195]]
+    rows = [
+        {"element_id": 1, "geom_kind": "polygon", "geom": [ring], "tags": {"building": "yes", "amenity": "parking"}},
+        {"element_id": 2, "geom_kind": "polygon", "geom": [ring], "tags": {"amenity": "parking", "access": "yes"}},
+    ]
+    got = {
+        r.element_id: (r._building, r.space_type, r.access, r.access_derived_from)
+        for r in classify_stage(elements_to_spark(spark, rows)).collect()
+    }
+    assert got == {
+        1: (True, "building", "undefined", "undefined"),
+        2: (False, "parking", "no", "tags"),
+    }
+
+
 def test_layer_build_plans_have_no_python_eval(spark):
-    """bbox and cell cover are Catalyst: past the checkpointed records, the
-    only Python in the overlay, tiling and PIP-explode plans is their
-    per-group kernels, never a scalar ArrowEvalPython node."""
-    records = build_overlay_records(classify_stage(elements_to_spark(spark)))
+    """Projection, bbox and cell cover are Catalyst: the classified frame
+    scans the elements once with no Python node, and past the checkpointed
+    records the only Python in the overlay, tiling and PIP-explode plans is
+    their per-group kernels, never a scalar ArrowEvalPython node."""
+    classified = classify_stage(elements_to_spark(spark))
+    plan = classified._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 0
+    assert plan.count("Scan ExistingRDD") == 1
+    records = build_overlay_records(classified)
     try:
         layer = overlay_stage(records, _overlay_cfg(0.5), overlay_res=8)
         plans = {
