@@ -497,7 +497,7 @@ def _ivf_sql_duck(k: int = 5, n_lists: int = 16, nprobe: int = 4) -> str:
     kernel rounds + stable-sorts identically); exact cosine re-rank inside
     the probed lists."""
     # cosine(a_norm, b_norm) == cosine(a, b): the norm form matches
-    # cosine_expr / _ann_duck_ctes arithmetic
+    # similarity.cosine6_udf / _ann_duck_ctes arithmetic
     def cos(a: str, b: str) -> str:
         return (
             f"list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
@@ -1378,7 +1378,8 @@ def _q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ encode with the SQL-expressible seed codebooks (first-16 vectors,
     8 subspaces × 16 codes): every engine step — split, micro-distance,
     argmin with code-asc tie-break — is integer-exact, so DuckDB reproduces
-    the codes bit-for-bit."""
+    the codes bit-for-bit. One (vec_id, s, code) row per subspace, so the
+    output holds scalars only."""
     from osm_public_space_mapper_spark.operators.similarity import (
         pq_encode,
         seed_pq_codebooks,
@@ -1386,7 +1387,7 @@ def _q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     cb = seed_pq_codebooks(emb, m=8, ksub=16)
-    return pq_encode(emb, cb)
+    return pq_encode(emb, cb).select("vec_id", F.posexplode("codes").alias("s", "code"))
 
 
 def _q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1441,7 +1442,7 @@ luts AS (
 
 _PQ_CODES_DUCK = (
     "WITH " + _pq_duck_ctes().strip()
-    + "\nSELECT vec_id, list(code ORDER BY s) AS codes FROM codes GROUP BY vec_id"
+    + "\nSELECT vec_id, s, code FROM codes"
 )
 
 _PQ_TOPK_DUCK = (

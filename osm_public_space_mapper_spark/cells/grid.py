@@ -33,12 +33,18 @@ def cell_side(res: int) -> float:
     return float(2 ** (18 - res))
 
 
+def pack_cells(res, ix, iy) -> np.ndarray:
+    """Resolution and int64 grid indices (scalars or broadcastable arrays)
+    → int64 cell ids in the [res:6][ix:29][iy:29] layout."""
+    return (np.asarray(res, np.int64) << 58) | ((ix & _IX_MASK) << _IX_BITS) | (iy & _IX_MASK)
+
+
 def encode_cells(x: np.ndarray, y: np.ndarray, res: int) -> np.ndarray:
     """(x, y) LAEA metres → int64 cell ids at `res`."""
     side = cell_side(res)
     ix = np.floor(np.asarray(x, np.float64) / side).astype(np.int64)
     iy = np.floor(np.asarray(y, np.float64) / side).astype(np.int64)
-    return (np.int64(res) << 58) | ((ix & _IX_MASK) << _IX_BITS) | (iy & _IX_MASK)
+    return pack_cells(res, ix, iy)
 
 
 def decode_cells(cells: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -66,11 +72,7 @@ def neighbors(cells: np.ndarray, ring: int = 1) -> np.ndarray:
     res, ix, iy = decode_cells(np.asarray(cells, np.int64))
     offs = np.arange(-ring, ring + 1, dtype=np.int64)
     dx, dy = np.meshgrid(offs, offs, indexing="ij")
-    dx = dx.ravel()[None, :]
-    dy = dy.ravel()[None, :]
-    nix = ix[:, None] + dx
-    niy = iy[:, None] + dy
-    return (res[:, None] << 58) | ((nix & _IX_MASK) << _IX_BITS) | (niy & _IX_MASK)
+    return pack_cells(res[:, None], ix[:, None] + dx.ravel(), iy[:, None] + dy.ravel())
 
 
 def cover_bbox(xmin: float, ymin: float, xmax: float, ymax: float, res: int, halo: int = 0) -> np.ndarray:
@@ -87,13 +89,11 @@ def cover_bbox(xmin: float, ymin: float, xmax: float, ymax: float, res: int, hal
     ixs = np.arange(ix0, ix1 + 1, dtype=np.int64)
     iys = np.arange(iy0, iy1 + 1, dtype=np.int64)
     gx, gy = np.meshgrid(ixs, iys, indexing="ij")
-    return (np.int64(res) << 58) | ((gx.ravel() & _IX_MASK) << _IX_BITS) | (gy.ravel() & _IX_MASK)
+    return pack_cells(res, gx.ravel(), gy.ravel())
 
 
 def parent_cells(cells: np.ndarray, parent_res: int) -> np.ndarray:
     """Cell ids → ancestor ids at coarser `parent_res`."""
     res, ix, iy = decode_cells(np.asarray(cells, np.int64))
     shift = (res - parent_res).astype(np.int64)
-    pix = ix >> shift
-    piy = iy >> shift
-    return (np.int64(parent_res) << 58) | ((pix & _IX_MASK) << _IX_BITS) | (piy & _IX_MASK)
+    return pack_cells(parent_res, ix >> shift, iy >> shift)

@@ -162,11 +162,6 @@ def road_width(region: RegionalConfig | None = None) -> Column:
     )
 
 
-def buffer_distance(region: RegionalConfig | None = None) -> Column:
-    """round(width/2, 1) — analyse_traffic_area.py:167."""
-    return F.round(road_width(region) / 2.0, 1)
-
-
 def set_missing_space_types(df: DataFrame) -> DataFrame:
     """construction, else first-present of the ordered key list
     (reference analyse_space_type.py:23-43; key order is the tie-break)."""
@@ -201,18 +196,17 @@ SPACE_TYPES_NO_ACCESS = [
 ]
 
 
-def assume_access_based_on_space_type(df: DataFrame) -> DataFrame:
-    """reference analyse_access.py:348-384 (incl. final 'unknown' fallback)."""
+def assumed_access() -> Column:
+    """Access assumed from the space type (reference analyse_access.py:348-384,
+    incl. the final 'unknown' fallback); NULL for a NULL space type."""
     st = F.col("space_type")
-    new_access = F.when(
+    return F.when(
         st.isNotNull(),
         F.when(st.isin(SPACE_TYPES_WITH_ACCESS), "yes")
         .when(st.isin(SPACE_TYPES_RESTRICTED), "restricted")
         .when(st.isin(SPACE_TYPES_NO_ACCESS), "no")
         .otherwise("unknown"),
     )
-    df = _set_once(df, "access", new_access, F.lit("space type"))
-    return df
 
 
 SPACE_CATEGORIES: dict[str, list[str]] = {
@@ -271,15 +265,3 @@ def unassumed_access_warnings(df: DataFrame) -> DataFrame:
         .withColumn("warning", F.lit("no access categorized"))
     )
 
-
-def recode_categories_post_overlay(df: DataFrame) -> DataFrame:
-    """walking area→open space, inaccessible enclosed→undefined space,
-    rail/road→traffic area (reference clean_data.py:352-358)."""
-    c = F.col("space_category")
-    return df.withColumn(
-        "space_category",
-        F.when(c == "walking area", "open space")
-        .when(c == "inaccessible enclosed area", "undefined space")
-        .when(c.isin("rail", "road"), "traffic area")
-        .otherwise(c),
-    )

@@ -6,10 +6,10 @@ laea_expr / st_project: EPSG:4326 → EPSG:3035 per point / per vertex in
 bbox_expr: per-row bbox struct, Catalyst array_min/array_max over the
   flattened points — sargable prefilter for bbox crop / cell cover
   (reference clean_data.py:366-370)
-st_area: shoelace area (reference significance thresholds,
-  analyse_access.py:247-248,331)
 cell_expr / cover_expr: Catalyst cell-index encode of a point / of every
   cell a bbox covers, for join bucketing (same ids as cells.grid).
+st_buffer_udf: per-geometry buffer, a pandas UDF over the geo/offset band
+  kernel (reference utils/helpers.py:6-22).
 """
 
 from __future__ import annotations
@@ -23,7 +23,6 @@ from pyspark.sql.functions import pandas_udf
 
 from ..cells.grid import cell_side
 from ..geo import laea as L
-from ..geo.arrowgeom import series_to_flat
 
 GEOM_TYPE = T.ArrayType(T.ArrayType(T.ArrayType(T.DoubleType())))
 
@@ -74,43 +73,6 @@ def bbox_expr(geom: Column) -> Column:
         F.array_max(xs).alias("xmax"),
         F.array_max(ys).alias("ymax"),
     )
-
-
-@pandas_udf(T.DoubleType())
-def st_area(geom: pd.Series) -> pd.Series:
-    """Even-odd shoelace area per row (abs of signed ring sum)."""
-    coords, po, qo = series_to_flat(geom)
-    n = len(geom)
-    out = np.zeros(n)
-    if coords.shape[0]:
-        # signed area per part via vectorized shoelace with reduceat
-        x, y = coords[:, 0], coords[:, 1]
-        x2 = np.empty_like(x)
-        y2 = np.empty_like(y)
-        # next-vertex within each part (wrap at part boundaries)
-        for i in range(len(qo) - 1):  # parts loop (parts are few per geom)
-            s, e = qo[i], qo[i + 1]
-            if e - s >= 3:
-                x2[s:e] = np.roll(x[s:e], -1)
-                y2[s:e] = np.roll(y[s:e], -1)
-            else:
-                x2[s:e] = x[s:e]
-                y2[s:e] = y[s:e]
-        cross = x * y2 - x2 * y
-        part_starts = qo[:-1]
-        nonempty_parts = np.diff(qo) > 0
-        part_area = np.zeros(len(part_starts))
-        if nonempty_parts.any():
-            part_area[nonempty_parts] = (
-                np.add.reduceat(cross, part_starts[nonempty_parts]) * 0.5
-            )
-        part_area = np.where(np.diff(qo) >= 3, part_area, 0.0)
-        if len(part_area):
-            idx = np.minimum(po[:-1], len(part_area) - 1)
-            row_sum = np.add.reduceat(part_area, idx)
-            row_sum = np.where(np.diff(po) > 0, row_sum, 0.0)
-            out = np.abs(row_sum[:n])
-    return pd.Series(out, index=geom.index)
 
 
 _IX_MASK = (1 << 29) - 1
@@ -246,40 +208,3 @@ def st_buffer_udf(dist: float, cap_style: str = "round", join_style: str = "roun
         return pd.Series(out, index=geom.index)
 
     return _buf
-
-
-def st_clip_convex_udf(window_ring: "list[list[float]]"):
-    """geom (+ geom_kind) → geometry clipped to a CONVEX window ring at
-    VECTOR precision (Sutherland–Hodgman for rings, Liang–Barsky for
-    polylines — geo/kernels.clip_ring_convex/clip_path_convex). The exact
-    payload-path counterpart of the overlay kernel's raster J10 crop
-    (reference crop_defined_space_to_bounding_box, clean_data.py:365-398):
-    output vertices are input vertices and true edge-intersection points,
-    no raster lattice. Polygon parts are clipped per ring (intersection
-    with a convex set distributes over exterior∖holes); empty parts drop;
-    a fully-clipped geometry becomes an empty parts array."""
-    from ..geo.kernels import clip_path_convex, clip_ring_convex
-
-    win = np.asarray(window_ring, dtype=np.float64)
-
-    @pandas_udf(GEOM_TYPE)
-    def _clip(geom: pd.Series, kind: pd.Series) -> pd.Series:
-        out = []
-        for parts, k in zip(geom, kind):
-            part_list = [] if parts is None else list(parts)
-            res = []
-            is_line = k in ("linestring", "multilinestring")
-            for p in part_list:
-                arr = np.asarray([np.asarray(q, dtype=np.float64) for q in p])
-                if len(arr) < 2:
-                    continue
-                if is_line:
-                    res.extend(sub.tolist() for sub in clip_path_convex(arr, win))
-                else:
-                    c = clip_ring_convex(arr, win)
-                    if len(c):
-                        res.append(c.tolist())
-            out.append(res)
-        return pd.Series(out, index=geom.index)
-
-    return _clip

@@ -2,7 +2,6 @@
 
 These replace the reference's Shapely scalar library (SURVEY.md §2.4):
 area      → shoelace                 (reference: analyse_access.py:247-248, 331)
-bbox      → coordinate min/max
 intersects/contains → even-odd PIP + segment tests
             (reference: analyse_access.py:119,159,230,246; clean_data.py:250,367,382)
 
@@ -39,11 +38,6 @@ def polygon_area(rings: list[np.ndarray]) -> float:
     abs of the signed sum, which is correct for non-overlapping rings.
     """
     return abs(sum(ring_signed_area(r) for r in rings))
-
-
-def bbox_of_parts(parts: list[np.ndarray]) -> tuple[float, float, float, float]:
-    pts = np.concatenate([np.asarray(p, dtype=np.float64).reshape(-1, 2) for p in parts])
-    return float(pts[:, 0].min()), float(pts[:, 1].min()), float(pts[:, 0].max()), float(pts[:, 1].max())
 
 
 def _edges_of_rings(rings: list[np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
@@ -250,97 +244,3 @@ def simplify_ring(ring: np.ndarray, tol: float) -> np.ndarray:
             stack.append((split, hi))
     out = ring[keep]
     return out if len(out) >= 3 else ring
-
-
-def clip_ring_convex(ring: np.ndarray, window: np.ndarray) -> np.ndarray:
-    """Sutherland–Hodgman clip of one ring against a CONVEX window ring →
-    clipped ring ((K,2), possibly empty). Vector-exact: output vertices are
-    original vertices and true edge×window-edge intersection points — no
-    raster lattice anywhere (reference crop_element_to_bounding_box,
-    clean_data.py:365-398, does bbox.intersection(geom) in shapely; the
-    engine's J10 remains raster in the overlay kernel, this is the exact
-    payload-path variant). Window may wind either way; it is normalized to
-    CCW so "inside" is left of every window edge.
-
-    Works per ring: intersecting with a convex set distributes over the
-    even-odd exterior∖holes composition, so callers clip exterior and hole
-    rings independently."""
-    w = np.asarray(window, dtype=np.float64)
-    if len(w) >= 2 and np.array_equal(w[0], w[-1]):
-        w = w[:-1]
-    if ring_signed_area(np.vstack([w, w[:1]])) < 0:
-        w = w[::-1]
-    poly = np.asarray(ring, dtype=np.float64)
-    if len(poly) >= 2 and np.array_equal(poly[0], poly[-1]):
-        poly = poly[:-1]
-    for i in range(len(w)):
-        if len(poly) < 3:
-            return np.zeros((0, 2))
-        a, b = w[i], w[(i + 1) % len(w)]
-        ex, ey = b[0] - a[0], b[1] - a[1]
-        # signed side of every vertex vs this window edge (≥0 = inside)
-        side = (poly[:, 0] - a[0]) * ey - (poly[:, 1] - a[1]) * ex
-        side = -side  # left-of-edge positive for CCW window
-        nxt = np.roll(np.arange(len(poly)), -1)
-        out_pts = []
-        for j in range(len(poly)):
-            cur, suc = poly[j], poly[nxt[j]]
-            cs, ss = side[j], side[nxt[j]]
-            if cs >= -1e-12:
-                out_pts.append(cur)
-                if ss < -1e-12:
-                    t = cs / (cs - ss)
-                    out_pts.append(cur + t * (suc - cur))
-            elif ss >= -1e-12:
-                t = cs / (cs - ss)
-                out_pts.append(cur + t * (suc - cur))
-        poly = np.asarray(out_pts, dtype=np.float64) if out_pts else np.zeros((0, 2))
-    if len(poly) >= 3:
-        return np.vstack([poly, poly[:1]])
-    return np.zeros((0, 2))
-
-
-def clip_path_convex(path: np.ndarray, window: np.ndarray) -> list[np.ndarray]:
-    """Liang–Barsky-style clip of an open polyline against a CONVEX window →
-    list of sub-paths (each (K,2), K ≥ 2). For a convex window each segment
-    clips to at most one sub-segment; consecutive surviving sub-segments
-    that share an endpoint are merged into one path."""
-    w = np.asarray(window, dtype=np.float64)
-    if len(w) >= 2 and np.array_equal(w[0], w[-1]):
-        w = w[:-1]
-    if ring_signed_area(np.vstack([w, w[:1]])) < 0:
-        w = w[::-1]
-    pts = np.asarray(path, dtype=np.float64)
-    edges = [(w[i], w[(i + 1) % len(w)]) for i in range(len(w))]
-    out: list[list[np.ndarray]] = []
-    cur: list[np.ndarray] = []
-    for j in range(len(pts) - 1):
-        p, q = pts[j], pts[j + 1]
-        t0, t1 = 0.0, 1.0
-        ok = True
-        for a, b in edges:
-            ex, ey = b[0] - a[0], b[1] - a[1]
-            sp = -((p[0] - a[0]) * ey - (p[1] - a[1]) * ex)
-            sq = -((q[0] - a[0]) * ey - (q[1] - a[1]) * ex)
-            if sp < 0 and sq < 0:
-                ok = False
-                break
-            if sp < 0:
-                t0 = max(t0, sp / (sp - sq))
-            elif sq < 0:
-                t1 = min(t1, sp / (sp - sq))
-        if not ok or t0 >= t1:
-            if len(cur) >= 2:
-                out.append(cur)
-            cur = []
-            continue
-        s, e = p + t0 * (q - p), p + t1 * (q - p)
-        if cur and np.allclose(cur[-1], s, atol=1e-12):
-            cur.append(e)
-        else:
-            if len(cur) >= 2:
-                out.append(cur)
-            cur = [s, e]
-    if len(cur) >= 2:
-        out.append(cur)
-    return [np.asarray(c) for c in out]

@@ -126,7 +126,6 @@ def clean_chain_with_metrics(df: DataFrame):
     available after any action on the result."""
     from pyspark.sql import Observation
 
-    df = init_attribute_columns(df)
     obs = Observation("clean_metrics")
     df = df.observe(
         obs,
@@ -135,14 +134,7 @@ def clean_chain_with_metrics(df: DataFrame):
         F.sum(F.when(F.col("geom").isNotNull() & (F.size("geom") == 0), 1).otherwise(0)).alias("n_empty"),
         F.sum(F.when(F.size("tags") == 0, 1).otherwise(0)).alias("n_untagged"),
     )
-    df = drop_invalid_geometries(df)
-    df = drop_empty_geometries(df)
-    df = drop_elements_without_tags(df)
-    df = drop_points_apart_from_entrances(df)
-    df = drop_irrelevant_elements_based_on_tags(df)
-    df = clean_geometries(df)
-    df = project_geometries(df)
-    return df, obs
+    return clean_chain(df), obs
 
 
 def drop_road_rail_walking(df: DataFrame) -> DataFrame:

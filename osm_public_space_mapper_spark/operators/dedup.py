@@ -485,14 +485,6 @@ def simhash64(documents: DataFrame, bits: int = 64) -> DataFrame:
     return simhash_kernel_frame(documents, bits)
 
 
-def cosine_expr(a, b):
-    """cosine similarity between two array<float/double> columns (built-ins)."""
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")), F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")))
-    return dot / (na * nb)
-
-
 def embedding_dups(
     embeddings: DataFrame,
     threshold: float = 0.95,
@@ -510,8 +502,6 @@ def embedding_dups(
     the O(N²/P) FLOPs per group are inherent to *exact* low-threshold
     all-pairs and run at matmul speed, not per-pair expression interpretation.
     This mirrors the block approach of mllib's columnSimilarities/DIMSUM.
-    For high thresholds at extreme scale, `embedding_dups_lsh` trades recall
-    for candidate pruning.
 
     n_blocks: callers at scale should size this ≈ N/block_size. When omitted
     it derives from plan metadata only (no `.count()` job): the larger of
@@ -532,7 +522,7 @@ def embedding_dups(
         # wild overestimate (join default is petabytes), and the broadcast
         # block-pair table is O(n_blocks²) rows — 1024 blocks ≈ 525k pairs
         # (~4 MB broadcast) and 1024·block_size rows is already past where
-        # exact all-pairs should yield to embedding_dups_lsh
+        # exact all-pairs should yield to an approximate method
         by_bytes = min(1024, -(-est_bytes // max(1, block_size * row_bytes_hint)))  # ceil div
         n_blocks = max(
             embeddings.rdd.getNumPartitions(),
@@ -595,63 +585,6 @@ def embedding_dups(
         _score, "vec_a long, vec_b long, cosine double"
     )
     return out.select("vec_a", "vec_b", F.round("cosine", 6).alias("cosine"))
-
-
-def embedding_dups_lsh(
-    embeddings: DataFrame,
-    threshold: float = 0.9,
-    n_bits: int = 8,
-    dim: int = 64,
-    multiprobe: int = 2,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate near-dup pairs: sign-random-projection bucket candidates
-    (+ multiprobe) then exact cosine verify. Misses pairs whose LSH bits
-    differ in > `multiprobe` positions — recall is measured in
-    tests/test_dedup_similarity.py; suited to high thresholds where candidate
-    pruning is strong. The exact block-grid path is `embedding_dups`."""
-    from .similarity import _projection_matrix, lsh_bucket_udf
-
-    planes = _projection_matrix(dim, n_bits, seed)
-    e = embeddings.select("vec_id", "embedding").withColumn(
-        "bucket", lsh_bucket_udf(planes)(F.col("embedding"))
-    )
-    probes = [F.col("bucket")]
-    if multiprobe >= 1:
-        probes += [F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(n_bits)]
-    if multiprobe >= 2:
-        probes += [
-            F.col("bucket").bitwiseXOR(F.lit((1 << i) | (1 << j)))
-            for i in range(n_bits)
-            for j in range(i + 1, n_bits)
-        ]
-    probed = e.withColumn("probe", F.explode(F.array(*probes)))
-    # dedup candidate id pairs BEFORE the interpreted cosine (a pair
-    # reachable through m probe buckets would score m times otherwise);
-    # embeddings ride through the dedup aggregate
-    cand = (
-        probed.alias("l")
-        .join(e.alias("r"), F.col("l.probe") == F.col("r.bucket"))
-        .filter(F.col("l.vec_id") < F.col("r.vec_id"))
-        .select(
-            F.col("l.vec_id").alias("vec_a"),
-            F.col("r.vec_id").alias("vec_b"),
-            F.col("l.embedding").alias("emb_a"),
-            F.col("r.embedding").alias("emb_b"),
-        )
-        .dropDuplicates(["vec_a", "vec_b"])
-    )
-    # cosine stays the in-JVM expression here: multiprobe=2 candidate
-    # volume is quadratic-ish and every pair row carries BOTH embeddings —
-    # shipping that through an Arrow/Python scoring stage measured 2× slower
-    # than interpreted eval at 10k vectors (48 s vs 22 s); the per-pair
-    # Python transfer dominates, unlike the top-k paths whose candidate
-    # sets are k-bounded
-    return cand.select(
-        "vec_a",
-        "vec_b",
-        F.round(cosine_expr(F.col("emb_a"), F.col("emb_b")), 6).alias("cosine"),
-    ).filter(F.col("cosine") >= threshold)
 
 
 def hamming_fp_pairs(

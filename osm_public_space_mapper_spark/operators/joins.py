@@ -155,7 +155,7 @@ def subdivide_tiles(tiles: DataFrame, group_res: int) -> DataFrame:
     )
 
     def _slice(batches):
-        from ..cells.grid import cell_side, decode_cells
+        from ..cells.grid import cell_side, decode_cells, pack_cells
 
         side = cell_side(group_res)
         for pdf in batches:
@@ -168,6 +168,8 @@ def subdivide_tiles(tiles: DataFrame, group_res: int) -> DataFrame:
                 n = 1 << shift  # subcells per axis
                 edges = [int(np.floor(k * side / row["px"])) for k in range(n)]
                 ends = [int(np.ceil((k + 1) * side / row["px"])) for k in range(n)]
+                k = np.arange(n, dtype=np.int64)
+                sub_cells = pack_cells(group_res, (ix[0] << shift) | k[:, None], (iy[0] << shift) | k).tolist()
                 for sx in range(n):
                     x0, x1 = edges[sx], min(w, ends[sx])
                     for sy in range(n):
@@ -175,10 +177,7 @@ def subdivide_tiles(tiles: DataFrame, group_res: int) -> DataFrame:
                         sub = mask[y0:y1, x0:x1]
                         if not sub.any():
                             continue
-                        sub_ix = (int(ix[0]) << shift) | sx
-                        sub_iy = (int(iy[0]) << shift) | sy
-                        sub_cell = (group_res << 58) | ((sub_ix & ((1 << 29) - 1)) << 29) | (sub_iy & ((1 << 29) - 1))
-                        out["tile_cell"].append(sub_cell)
+                        out["tile_cell"].append(sub_cells[sx][sy])
                         out["space_category"].append(row["space_category"])
                         out["access"].append(row["access"])
                         out["mask"].append(np.packbits(sub, axis=None).tobytes())
@@ -243,7 +242,11 @@ def project_points(images: DataFrame) -> DataFrame:
         x, y = laea_forward(lon.to_numpy(), lat.to_numpy())
         return pd.DataFrame({"x": x, "y": y}, index=lon.index)
 
-    out = images.withColumn("_xy", _proj(F.col("lon"), F.col("lat")))
+    # marked nondeterministic so the optimizer keeps the call in this one
+    # projection: otherwise a join's inferred isnotnull(tile_cell) filter is
+    # pushed below it with the UDF inlined, and an un-cached frame runs the
+    # UDF twice (two ArrowEvalPython nodes)
+    out = images.withColumn("_xy", _proj.asNondeterministic()(F.col("lon"), F.col("lat")))
     return out.withColumn("x", F.col("_xy.x")).withColumn("y", F.col("_xy.y")).drop("_xy")
 
 

@@ -1,8 +1,8 @@
 """Similarity search over the `embeddings` table (array<float> column).
 
 brute_force_topk  exact cosine top-k per query — the correctness baseline,
-                  expressed with built-in higher-order functions
-                  (zip_with/aggregate → JVM, no Python in the hot path)
+                  one Arrow pass per corpus partition that keeps only its
+                  top-k per query
 ann_lsh_topk      the scale path: sign-random-projection LSH buckets; queries
                   probe only their bucket (+ multiprobe neighbors), then exact
                   re-rank inside the candidate set. Recall measured in tests.
@@ -19,24 +19,20 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import cosine_expr
-
 
 def _seq_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """Row-wise dot products with STRICT left-to-right summation order —
-    bit-identical to the interpreted F.aggregate fold (and to DuckDB's
-    list_dot_product loop), unlike BLAS matmul whose pairwise/FMA summation
-    can drift below the 1e-6 rounding the oracles compare at. cumsum is
-    sequential by definition; vectorized across rows."""
+    bit-identical to DuckDB's list_dot_product loop, unlike BLAS matmul
+    whose pairwise/FMA summation can drift below the 1e-6 rounding the
+    oracles compare at. cumsum is sequential by definition; vectorized
+    across rows."""
     return np.cumsum(a * b, axis=1)[:, -1]
 
 
 def cosine6_udf():
-    """Vectorized Arrow twin of ``F.round(cosine_expr(a, b), 6)``: the
-    higher-order zip_with/aggregate lambdas are interpreted (no codegen) and
-    were evaluated per candidate PAIR; one numpy pass per batch does the
-    same arithmetic in the same order (sequential product sums, double
-    sqrt, round-6)."""
+    """Cosine of two array columns, rounded to 6 places, in one numpy pass
+    per Arrow batch: sequential product sums, double sqrt, round-6 — the
+    arithmetic and order of the DuckDB oracle's list_dot_product form."""
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
@@ -64,8 +60,8 @@ def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5) -> D
     old formulation broadcast it, same bound).
 
     Arithmetic parity: per-pair dots/norms are sequential cumsum sums and
-    round-6, identical to cosine6_udf / the interpreted fold / the DuckDB
-    oracle's list_dot_product loop."""
+    round-6, identical to cosine6_udf and the DuckDB oracle's
+    list_dot_product loop."""
     from pyspark.sql import types as T
 
     q_rows = queries.select("query_id", "embedding").collect()
@@ -123,28 +119,11 @@ def _projection_matrix(dim: int, n_bits: int, seed: int = 42) -> list[list[float
     return rng.normal(size=(n_bits, dim)).round(6).tolist()
 
 
-def lsh_bucket_expr(emb_col, planes: list[list[float]]):
-    """Sign-random-projection bucket id (int) from literal hyperplanes —
-    pure built-in expressions (NB: higher-order lambdas are interpreted;
-    prefer lsh_bucket_udf on batch paths)."""
-    bucket = F.lit(0)
-    for i, plane in enumerate(planes):
-        arr = F.array(*[F.lit(float(v)) for v in plane])
-        dot = F.aggregate(
-            F.zip_with(emb_col, arr, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bucket = bucket + F.when(dot >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return bucket
-
-
 def lsh_bucket_udf(planes: list[list[float]]):
-    """Vectorized Arrow twin of lsh_bucket_expr: one numpy pass per batch,
-    with the plane dots summed in the SAME left-to-right order as the
-    interpreted fold (cumsum) so a near-zero dot can never flip sign
-    between the two formulations (the oracle reproduces the sequential
-    order too)."""
+    """Sign-random-projection bucket id (int) per embedding, one numpy pass
+    per Arrow batch. The plane dots are summed left to right (cumsum), the
+    order the DuckDB oracle uses, so a near-zero dot cannot flip sign
+    between the two engines."""
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 

@@ -6,8 +6,8 @@ aggregations the engine additionally provides *explicit* salting: the group
 key is widened with a salt derived from a uniform hash, partials are
 aggregated per (key, salt), then finals per key — two shuffles, both uniform.
 
-`salted_agg` works for any algebraic aggregate list; `merged_layer` applies
-the pattern to the geometry-union aggregation A1 (clean_data.py:282-303):
+`salted_count` applies the pattern to count(*), `merged_layer` to the
+geometry-union aggregation A1 (clean_data.py:282-303):
 ring lists combine per (category, access, salt), then concatenate per
 (category, access) — unions of disjoint per-cell geometry are exact
 concatenations, so the two-stage result equals the single-stage one.
@@ -15,7 +15,7 @@ concatenations, so the two-stage result equals the single-stage one.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_SALT_BUCKETS = 16
@@ -32,16 +32,6 @@ def salted_count(df: DataFrame, key_cols: list[str], n_buckets: int = DEFAULT_SA
     salted = with_salt(df, n_buckets)
     partial = salted.groupBy(*key_cols, "_salt").agg(F.count("*").alias("_partial"))
     return partial.groupBy(*key_cols).agg(F.sum("_partial").alias("n"))
-
-
-def salted_agg(df: DataFrame, key_cols: list[str], partial_aggs: list[Column], final_aggs: list[Column], n_buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:
-    """Generic two-stage aggregation: partial per (key, salt), final per key.
-
-    partial_aggs aggregate raw columns → intermediate names; final_aggs
-    combine the intermediates."""
-    salted = with_salt(df, n_buckets)
-    partial = salted.groupBy(*key_cols, "_salt").agg(*partial_aggs)
-    return partial.groupBy(*key_cols).agg(*final_aggs)
 
 
 def merged_layer(layer: DataFrame, n_buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:

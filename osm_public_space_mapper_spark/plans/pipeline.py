@@ -62,15 +62,6 @@ def classify_stage(elements: DataFrame) -> DataFrame:
     return classify.set_traffic_space_type(classify.interpret_tags(df))
 
 
-def _assume_access_col():
-    return (
-        F.when(F.col("space_type").isin(classify.SPACE_TYPES_WITH_ACCESS), "yes")
-        .when(F.col("space_type").isin(classify.SPACE_TYPES_RESTRICTED), "restricted")
-        .when(F.col("space_type").isin(classify.SPACE_TYPES_NO_ACCESS), "no")
-        .otherwise("unknown")
-    )
-
-
 def _role_records(df: DataFrame, roles: list[tuple]) -> DataFrame:
     """One record per (row, role whose condition holds) in one projection.
 
@@ -148,7 +139,7 @@ def build_overlay_records(classified: DataFrame, region: RegionalConfig | None =
     element = P.is_poly_like() & st.isNotNull()
     from_rest = _role_records(rest, [
         ("barrier_inacc", P.is_barrier() & F.col("access").eqNullSafe("no") & line, None, None, 0.0, "square"),
-        ("element", element, F.col("space_category"), _assume_access_col(), 0.0, "square"),
+        ("element", element, F.col("space_category"), classify.assumed_access(), 0.0, "square"),
         ("platform", element & st.eqNullSafe("public transport stop"), None, None, 0.0, "square"),
     ])
 
@@ -203,17 +194,9 @@ def overlay_stage(records: DataFrame, cfg: OverlayConfig, overlay_res: int = OVE
         ),
     ).drop("_bbox")
 
-    bbox_ring_list = cfg.bbox_ring.tolist() if cfg.bbox_ring is not None else None
-    px, mg, bbox, pw = cfg.px, cfg.margin, cfg.bbox, cfg.pedestrian_width
-
     def _run(pdf: pd.DataFrame) -> pd.DataFrame:
         cell = int(pdf["overlay_cell"].iloc[0])
         xmin, ymin, xmax, ymax = (float(v[0]) for v in cell_bbox_np(np.array([cell])))
-        kcfg = OverlayConfig(
-            px=px, margin=mg, bbox=bbox,
-            bbox_ring=np.asarray(bbox_ring_list, np.float64) if bbox_ring_list is not None else None,
-            pedestrian_width=pw,
-        )
         recs_list = [
             ElementRecord(
                 element_id=int(row["element_id"]),
@@ -228,7 +211,7 @@ def overlay_stage(records: DataFrame, cfg: OverlayConfig, overlay_res: int = OVE
             )
             for _, row in pdf.iterrows()
         ]
-        result = run_overlay(recs_list, (xmin, ymin, xmax, ymax), kcfg)
+        result = run_overlay(recs_list, (xmin, ymin, xmax, ymax), cfg)
         out = {
             "overlay_cell": [], "space_category": [], "access": [], "geom": [],
             "area": [], "core_area": [], "completeness_gap": [],

@@ -81,7 +81,7 @@ def classified(spark):
     # building rows carry their stamp; the write-once stages keep it
     both = classify_stage(elements_to_spark(spark))
     both = classify.set_missing_space_types(both)
-    both = classify.assume_access_based_on_space_type(both)
+    both = both.withColumn("access", F.coalesce("access", classify.assumed_access()))
     both = classify.set_space_category(both)
     rows = both.select("element_id", "space_type", "access", "space_category").collect()
     return {r.element_id: (r.space_type, r.access, r.space_category) for r in rows}
@@ -280,12 +280,14 @@ def test_pipeline_pedestrian_width_reaches_overlay_kernel(spark):
 
 
 def test_clean_chain_metrics(spark):
-    from osm_public_space_mapper_spark.operators.clean import clean_chain_with_metrics
+    from osm_public_space_mapper_spark.operators.clean import clean_chain, clean_chain_with_metrics
 
     df, obs = clean_chain_with_metrics(elements_to_spark(spark))
-    df.count()  # trigger action so the observation materializes
+    rows = sorted(map(repr, df.collect()))  # the action materializes the observation
     m = obs.get
     assert m["n_invalid"] == 3
     assert m["n_empty"] == 4
     assert m["n_untagged"] == 60
     assert m["n_input"] == 150  # 147 + 3 multi-kind rows (r02)
+    # the metrics variant is the plain chain plus an observation
+    assert rows and rows == sorted(map(repr, clean_chain(elements_to_spark(spark)).collect()))

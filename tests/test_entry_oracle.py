@@ -28,8 +28,7 @@ def _duck():
 def _canon(pdf):
     """Mirror the driver's canonicalizer: pandas sort_values over every
     column (which, like the driver, raises TypeError on list-typed cells —
-    r05's pq_codes crash must reproduce locally, not be papered over by
-    str())."""
+    such a crash must reproduce locally, not be papered over by str())."""
     cols = sorted(pdf.columns.str.lower())
     pdf = pdf.copy()
     pdf.columns = pdf.columns.str.lower()
@@ -62,12 +61,10 @@ def _cell(v):
     return f"s:{v}"
 
 
-_KNOWN_DRIVER_DEFECTS = {
-    # Reproduces an r05 driver failure. Its fix changes the declared query
-    # output, so it stays xfail with the driver-matching semantics instead
-    # of being silently normalized away.
-    "pq_codes": "array<int> output column crashes the (pandas) canonicalizer",
-}
+# name → reason for a reproduced driver failure whose fix would change the
+# declared query output: it stays a strict xfail with the driver-matching
+# semantics instead of being silently normalized away. None is open.
+_KNOWN_DRIVER_DEFECTS: dict[str, str] = {}
 
 _ORACLED = [
     pytest.param(

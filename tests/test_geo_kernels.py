@@ -137,93 +137,3 @@ def test_cells_roundtrip_hierarchy():
     cov = cover_bbox(xmin[0], ymin[0], xmax[0] - 1e-9, ymax[0] - 1e-9, 14)
     assert len(cov) == 128 * 128  # 2048/16 per axis
 
-
-def test_clip_ring_convex_analytic():
-    """Sutherland–Hodgman against a convex window: exact areas, exact
-    vertices (no raster anywhere)."""
-    import numpy as np
-
-    from osm_public_space_mapper_spark.geo.kernels import clip_ring_convex, ring_signed_area
-
-    win = np.array([[0.0, 0.0], [10.0, 0.0], [10.0, 10.0], [0.0, 10.0]])
-    # square half inside → clipped to exactly the inside half
-    sq = np.array([[-5.0, 2.0], [5.0, 2.0], [5.0, 8.0], [-5.0, 8.0], [-5.0, 2.0]])
-    c = clip_ring_convex(sq, win)
-    assert abs(abs(ring_signed_area(c)) - 5 * 6) < 1e-9
-    assert c[:, 0].min() == 0.0  # cut exactly at the window edge
-    # fully inside → unchanged area, same vertex set
-    tri = np.array([[1.0, 1.0], [4.0, 1.0], [2.0, 3.0], [1.0, 1.0]])
-    c2 = clip_ring_convex(tri, win)
-    assert abs(abs(ring_signed_area(c2)) - abs(ring_signed_area(tri))) < 1e-12
-    # fully outside → empty
-    far = tri + 100.0
-    assert len(clip_ring_convex(far, win)) == 0
-    # CW window winding must behave identically
-    c3 = clip_ring_convex(sq, win[::-1])
-    assert abs(abs(ring_signed_area(c3)) - 30.0) < 1e-9
-    # non-axis-aligned window (rotated square) — exact area of overlap with
-    # a big covering ring equals the window's own area
-    th = 0.3
-    R = np.array([[np.cos(th), -np.sin(th)], [np.sin(th), np.cos(th)]])
-    rwin = (win - 5.0) @ R.T + 5.0
-    big = np.array([[-50.0, -50.0], [50.0, -50.0], [50.0, 50.0], [-50.0, 50.0], [-50.0, -50.0]])
-    c4 = clip_ring_convex(big, rwin)
-    assert abs(abs(ring_signed_area(c4)) - 100.0) < 1e-9
-
-
-def test_clip_path_convex_analytic():
-    import numpy as np
-
-    from osm_public_space_mapper_spark.geo.kernels import clip_path_convex
-
-    win = np.array([[0.0, 0.0], [10.0, 0.0], [10.0, 10.0], [0.0, 10.0]])
-    # path crossing the window: one merged sub-path, endpoints on the border
-    path = np.array([[-5.0, 5.0], [5.0, 5.0], [15.0, 5.0]])
-    subs = clip_path_convex(path, win)
-    assert len(subs) == 1
-    s = subs[0]
-    np.testing.assert_allclose(s[0], [0.0, 5.0])
-    np.testing.assert_allclose(s[-1], [10.0, 5.0])
-    # path leaving and re-entering → two sub-paths
-    zig = np.array([[2.0, 2.0], [2.0, 15.0], [8.0, 15.0], [8.0, 2.0]])
-    subs2 = clip_path_convex(zig, win)
-    assert len(subs2) == 2
-    total = sum(np.hypot(*np.diff(s, axis=0).T).sum() for s in subs2)
-    assert abs(total - (8.0 + 8.0)) < 1e-9  # 2-..10 vertical runs survive
-    # fully outside → nothing
-    assert clip_path_convex(path + 100.0, win) == []
-
-
-def test_st_clip_convex_udf(spark):
-    """Column-level exact clip: polygon-with-hole clipped to a half-window
-    keeps the hole's surviving part (distributivity over exterior∖holes);
-    line rows split into sub-paths."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from osm_public_space_mapper_spark.functions.geometry import st_area, st_clip_convex_udf
-
-    win = [[0.0, 0.0], [10.0, 0.0], [10.0, 10.0], [0.0, 10.0]]
-    ext = [[-10.0, 0.0], [10.0, 0.0], [10.0, 10.0], [-10.0, 10.0], [-10.0, 0.0]]
-    # hole wound CW (engine convention: exterior CCW, holes CW — st_area's
-    # signed-ring sum subtracts it); clip_ring_convex preserves winding
-    hole = [[-2.0, 4.0], [-2.0, 6.0], [2.0, 6.0], [2.0, 4.0], [-2.0, 4.0]]
-    line = [[-5.0, 5.0], [15.0, 5.0]]
-    df = spark.createDataFrame(
-        pd.DataFrame({
-            "gid": [1, 2],
-            "geom_kind": ["polygon", "linestring"],
-            "geom": [[ext, hole], [line]],
-        })
-    )
-    clip = st_clip_convex_udf(win)
-    out = {r.gid: r for r in df.withColumn("cg", clip(F.col("geom"), F.col("geom_kind")))
-           .withColumn("carea", st_area(F.col("cg"))).collect()}
-    # exterior∩win = 10×10 = 100; hole∩win = 2×2 = 4 → even-odd area 96
-    assert abs(out[1].carea - 96.0) < 1e-9
-    assert len(out[1].cg) == 2  # exterior + surviving hole part
-    # the line row clips to the in-window sub-path
-    seg = np.asarray(out[2].cg[0])
-    np.testing.assert_allclose(seg[0], [0.0, 5.0])
-    np.testing.assert_allclose(seg[-1], [10.0, 5.0])

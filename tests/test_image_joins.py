@@ -281,6 +281,26 @@ def test_jpeg_rows_hold_lossy_invariant(spark):
     assert len(feats) == 50
 
 
+def test_project_points_udf_runs_once_uncached(spark):
+    # on an un-cached image frame both mask-join plans must evaluate
+    # project_points' pandas UDF in ONE node: the join's inferred
+    # isnotnull(tile_cell) filter must not carry a second copy of it
+    # below the projection
+    from osm_public_space_mapper_spark.streaming.geofence import pip_join_expr
+
+    images = joins.with_cells(joins.project_points(joins.with_geotag(
+        images_to_spark(spark, generate_images(200, seed=7, with_pixels=False))
+    )))
+    masks = spark.createDataFrame(
+        [(13 << 58, "park", "yes", bytes([255]), 2, 4, 0.0, 0.0, 0.5)],
+        "tile_cell long, space_category string, access string, mask binary,"
+        " mask_w int, mask_h int, ox double, oy double, px double",
+    )
+    for out in (pip_join_expr(images, masks), joins.pip_join_raster(images, masks, tile_res=13, group_res=13)):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("ArrowEvalPython") == 1, plan
+
+
 def test_cell_expr_matches_encode_cells(spark):
     # r06: the pure-Catalyst cell encoder must be bit-identical to the
     # numpy encode_cells the pandas UDF wrapped — including negative

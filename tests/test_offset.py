@@ -8,6 +8,8 @@ dilation is a closed-form bigger square) and against containment bounds
 import numpy as np
 import pytest
 
+from osm_public_space_mapper_spark.geo.arrowgeom import np_parts
+from osm_public_space_mapper_spark.geo.kernels import polygon_area
 from osm_public_space_mapper_spark.geo.offset import (
     boundary_band_pieces,
     buffer_line_pieces,
@@ -147,13 +149,18 @@ def test_vector_line_join_styles_nested():
     assert mitre.sum() >= rnd.sum()    # mitre covers the arc + spike
 
 
+def _area(geom):
+    """Even-odd area of a collected geometry (abs of the signed ring sum)."""
+    return polygon_area(np_parts(geom))
+
+
 def test_st_buffer_udf_line_and_polygon(spark):
     """Column-level st_buffer: line square-cap buffer area ≈ analytic;
     polygon positive/negative buffers grow/shrink by the band."""
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from osm_public_space_mapper_spark.functions.geometry import st_area, st_buffer_udf
+    from osm_public_space_mapper_spark.functions.geometry import st_buffer_udf
 
     line = [[[5.0, 20.0], [25.0, 20.0]]]                       # 20 m segment
     square = [[[10.0, 10.0], [30.0, 10.0], [30.0, 30.0], [10.0, 30.0]]]
@@ -165,18 +172,16 @@ def test_st_buffer_udf_line_and_polygon(spark):
         })
     )
     buf = st_buffer_udf(2.0, cap_style="square", join_style="mitre", px=0.1)
-    out = df.withColumn("bgeom", buf(F.col("geom"), F.col("geom_kind"))).withColumn(
-        "barea", st_area(F.col("bgeom"))
-    ).collect()
-    areas = {r.gid: r.barea for r in out}
+    out = df.withColumn("bgeom", buf(F.col("geom"), F.col("geom_kind"))).collect()
+    areas = {r.gid: _area(r.bgeom) for r in out}
     assert abs(areas[1] - 24 * 4) < 2.0            # (20+2+2) × 4 square caps
     assert abs(areas[2] - 24 * 24) < 3.0           # mitre dilation of square
 
     neg = st_buffer_udf(-3.0, join_style="mitre", px=0.1)
     out2 = df.filter(F.col("gid") == 2).withColumn(
         "bgeom", neg(F.col("geom"), F.col("geom_kind"))
-    ).withColumn("barea", st_area(F.col("bgeom"))).collect()
-    assert abs(out2[0].barea - 14 * 14) < 3.0      # erosion by 3
+    ).collect()
+    assert abs(_area(out2[0].bgeom) - 14 * 14) < 3.0      # erosion by 3
 
 
 def test_st_buffer_udf_batch_scratch_reuse_no_crosstalk(spark):
@@ -187,7 +192,7 @@ def test_st_buffer_udf_batch_scratch_reuse_no_crosstalk(spark):
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from osm_public_space_mapper_spark.functions.geometry import st_area, st_buffer_udf
+    from osm_public_space_mapper_spark.functions.geometry import st_buffer_udf
 
     def square(cx, cy, half):
         return [[[cx - half, cy - half], [cx + half, cy - half],
@@ -208,6 +213,7 @@ def test_st_buffer_udf_batch_scratch_reuse_no_crosstalk(spark):
         })
     ).coalesce(1)  # one partition → one Arrow batch → buffers actually reused
     buf = st_buffer_udf(2.0, join_style="mitre", px=0.1)
-    out = df.withColumn("barea", st_area(buf(F.col("geom"), F.col("geom_kind")))).collect()
+    out = df.withColumn("bgeom", buf(F.col("geom"), F.col("geom_kind"))).collect()
     for r in out:
-        assert abs(r.barea - r.expect_side ** 2) < 3.0, (r.gid, r.barea, r.expect_side ** 2)
+        barea = _area(r.bgeom)
+        assert abs(barea - r.expect_side ** 2) < 3.0, (r.gid, barea, r.expect_side ** 2)
