@@ -78,54 +78,22 @@ _LAYER_CACHE: dict[str, DataFrame] = {}
 
 def _polygon_layer(spark: SparkSession) -> DataFrame:
     """Classified public-space polygon layer from the deterministic
-    Vienna-shaped fixture (cached per session)."""
+    Vienna-shaped fixture, built once per session and pinned (one
+    persistent RDD, which `spark.catalog.clearCache()` leaves alone)."""
     from osm_public_space_mapper_spark.fixtures.elements import BBOX_4326, elements_to_spark
     from osm_public_space_mapper_spark.operators.overlay_core import OverlayConfig
-    from osm_public_space_mapper_spark.plans.pipeline import (
-        projected_bbox_ring,
-        release_overlay_records,
-        run_pipeline,
-    )
-
-    import os
-    import tempfile
+    from osm_public_space_mapper_spark.plans.pipeline import projected_bbox_ring, run_pipeline
+    from osm_public_space_mapper_spark.session import pin, release
 
     _ensure_pyfiles(spark)
     key = spark.sparkContext.applicationId
     if key not in _LAYER_CACHE:
-        # deterministic fixture layer → persist once per machine (content is
-        # a pure function of the seed/config; benches reuse across sessions).
-        # Cache key is a fingerprint of every engine source file so any code
-        # change invalidates it; OSPM_LAYER_CACHE=0 disables entirely.
-        import hashlib
-
-        pkg = os.path.join(os.path.dirname(os.path.abspath(__file__)), "osm_public_space_mapper_spark")
-        hasher = hashlib.sha1()
-        for d, _, files in sorted(os.walk(pkg)):
-            for fn in sorted(files):
-                if fn.endswith(".py"):
-                    with open(os.path.join(d, fn), "rb") as fh:
-                        hasher.update(os.path.relpath(os.path.join(d, fn), pkg).encode() + fh.read())
-        tag = hasher.hexdigest()[:10]
-        cache_path = os.path.join(tempfile.gettempdir(), f"ospm_layer_{tag}.parquet")
-        if os.environ.get("OSPM_LAYER_CACHE", "1") == "0":
-            cache_path = None
-        if cache_path and os.path.exists(os.path.join(cache_path, "_SUCCESS")):
-            layer = spark.read.parquet(cache_path).cache()
-        else:
-            ring = projected_bbox_ring(BBOX_4326["left"], BBOX_4326["bottom"], BBOX_4326["right"], BBOX_4326["top"])
-            env = (float(ring[:, 0].min()), float(ring[:, 1].min()), float(ring[:, 0].max()), float(ring[:, 1].max()))
-            cfg = OverlayConfig(px=0.25, margin=64.0, bbox=env, bbox_ring=ring)
-            layer = run_pipeline(elements_to_spark(spark), cfg, overlay_res=8)
-            if cache_path:
-                layer.write.mode("overwrite").parquet(cache_path)
-                # the re-read layer no longer needs the records' checkpoint;
-                # without a cache path the cached layer still recomputes
-                # from it if evicted, so it stays pinned
-                release_overlay_records(layer)
-                layer = spark.read.parquet(cache_path)
-            layer = layer.cache()
-        layer.count()
+        ring = projected_bbox_ring(BBOX_4326["left"], BBOX_4326["bottom"], BBOX_4326["right"], BBOX_4326["top"])
+        env = (float(ring[:, 0].min()), float(ring[:, 1].min()), float(ring[:, 0].max()), float(ring[:, 1].max()))
+        cfg = OverlayConfig(px=0.25, margin=64.0, bbox=env, bbox_ring=ring)
+        built = run_pipeline(elements_to_spark(spark), cfg, overlay_res=8)
+        layer = pin(built)
+        release(built)  # the pinned layer no longer reads the records
         # frames of an earlier (stopped) session are dead: keep only this one
         _LAYER_CACHE.clear()
         _LAYER_CACHE[key] = layer

@@ -196,6 +196,7 @@ def run_full() -> dict:
     from osm_public_space_mapper_spark.fixtures.elements import elements_to_spark
     from osm_public_space_mapper_spark.functions.geometry import st_buffer_udf
     from osm_public_space_mapper_spark.plans.pipeline import build_overlay_records, classify_stage
+    from osm_public_space_mapper_spark.session import release
 
     recs = build_overlay_records(classify_stage(elements_to_spark(spark)))
     # 25 large fixture geometries: spread one per task (the op is per-row
@@ -207,6 +208,7 @@ def run_full() -> dict:
         F.size(buf(F.col("geom"), F.col("geom_kind"))).alias("n_rings")
     ).agg(F.sum("n_rings")).collect()
     queries["st_buffer"] = round(time.time() - t, 3)
+    release(recs)
 
     # image-payload near-dup: decode → DCT pHash → banded hamming join over
     # 1k PNG/raw images + 100 guaranteed duplicates (r04 operator guard)

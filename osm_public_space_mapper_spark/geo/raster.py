@@ -8,9 +8,9 @@ vectorizes the result back to polygons — exactly the raster↔vector tiling
 operator the north rule asks for, and robust by construction.
 
 Reference behaviours mapped here:
-  buffer cap/join styles        → rasterize_lines width + morph disc/square
+  buffer cap/join styles        → rasterize_lines width + cap styles
     (analyse_traffic_area.py:167,208,228-230; helpers.py:6-22)
-  smoothing close/open          → binary close/open with disc/square kernels
+  smoothing buffer(+r).buffer(−r) → binary close with a disc kernel
     (analyse_traffic_area.py:192-199,278-282,285)
   union / difference / intersection → mask |, &~, &
     (clean_data.py:248,251,306-361; analyse_access.py:188,228,286,323)
@@ -156,13 +156,11 @@ def rasterize_lines(grid: Grid, paths: list[np.ndarray], width: float, cap_style
     return mask
 
 
-def _structuring(radius_px: float, shape: str = "disc") -> np.ndarray:
+def _structuring(radius_px: float) -> np.ndarray:
     r = int(np.ceil(radius_px))
     if r <= 0:
         return np.ones((1, 1), dtype=bool)
     yy, xx = np.mgrid[-r : r + 1, -r : r + 1]
-    if shape == "square":
-        return np.ones((2 * r + 1, 2 * r + 1), dtype=bool)
     return (xx * xx + yy * yy) <= radius_px * radius_px
 
 
@@ -189,10 +187,7 @@ def _dilate_1d(mask: np.ndarray, r: int, axis: int) -> np.ndarray:
     return win.any(axis=-1)
 
 
-def _dilate_small(mask: np.ndarray, radius_px: float, shape: str) -> np.ndarray:
-    if shape == "square":
-        r = int(np.ceil(radius_px))
-        return _dilate_1d(_dilate_1d(mask, r, 0), r, 1)
+def _dilate_small(mask: np.ndarray, radius_px: float) -> np.ndarray:
     # disc = union over dy of row-shifted horizontal segments of width rx(dy);
     # only rows with |dy| ≤ radius belong to the disc
     r = int(np.floor(radius_px))
@@ -210,35 +205,31 @@ def _dilate_small(mask: np.ndarray, radius_px: float, shape: str) -> np.ndarray:
 _FFT_RADIUS_CUTOFF = 24  # px; above this the FFT path wins
 
 
-def dilate(mask: np.ndarray, radius_px: float, shape: str = "disc") -> np.ndarray:
+def dilate(mask: np.ndarray, radius_px: float) -> np.ndarray:
     if radius_px <= 0 or not mask.any():
         return mask.copy()
     if radius_px <= _FFT_RADIUS_CUTOFF:
-        return _dilate_small(mask, radius_px, shape)
-    return _binary_conv(mask, _structuring(radius_px, shape)) > 0.5
+        return _dilate_small(mask, radius_px)
+    return _binary_conv(mask, _structuring(radius_px)) > 0.5
 
 
-def erode(mask: np.ndarray, radius_px: float, shape: str = "disc") -> np.ndarray:
+def erode(mask: np.ndarray, radius_px: float) -> np.ndarray:
     if radius_px <= 0:
         return mask.copy()
     if radius_px <= _FFT_RADIUS_CUTOFF:
-        return ~_dilate_small(~mask, radius_px, shape)
-    kern = _structuring(radius_px, shape)
+        return ~_dilate_small(~mask, radius_px)
+    kern = _structuring(radius_px)
     return _binary_conv(mask, kern) > kern.sum() - 0.5
 
 
-def close_open(mask: np.ndarray, close_r: float, open_r: float, shape: str = "disc") -> np.ndarray:
-    """Morphological close (buffer +r, −r) then open (−r, +r) — the smoothing
+def close(mask: np.ndarray, r: float) -> np.ndarray:
+    """Morphological close with a disc (buffer +r, −r) — the smoothing
     pattern at analyse_traffic_area.py:278-282.
 
     Pads by the radius first so dilation is not clipped at the tile border
     (otherwise the following erosion eats real area at the edges)."""
-    pad = int(np.ceil(max(close_r, open_r))) + 2
-    big = np.pad(mask, pad)
-    out = erode(dilate(big, close_r, shape), close_r, shape)
-    if open_r > 0:
-        out = dilate(erode(out, open_r, shape), open_r, shape)
-    return out[pad:-pad, pad:-pad]
+    pad = int(np.ceil(max(r, 0))) + 2
+    return erode(dilate(np.pad(mask, pad), r), r)[pad:-pad, pad:-pad]
 
 
 def mask_area(mask: np.ndarray, px: float) -> float:

@@ -45,28 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _pinned_ids(sc) -> set:
-    return {int(k) for k in sc._jsc.getPersistentRDDs().keys()}
-
-
-def _release_ids(sc, ids) -> None:
-    """Unpersist the JVM RDDs behind a set of persistent-RDD ids.
-
-    DataFrame.unpersist() is a no-op for localCheckpoint frames (the pinned
-    RDD lives outside the Dataset cache manager), so release goes through
-    the SparkContext's persistent-RDD registry explicitly."""
-    jmap = sc._jsc.getPersistentRDDs()
-    for k in list(jmap.keys()):
-        if int(k) in ids:
-            jmap[k].unpersist()
-
-
-def release_components(df: DataFrame) -> None:
-    """Release the eager localCheckpoint backing a `connected_components`
-    result once it has been consumed (the frame is unusable afterwards)."""
-    for sc, ids in getattr(df, "_cc_pinned", []):
-        _release_ids(sc, ids)
+from ..session import pin, release
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -126,19 +105,14 @@ def connected_components(
         .where(F.col("u") != F.col("v"))
         .distinct()
     )
-    sc = edges.sparkSession.sparkContext
-    before = _pinned_ids(sc)
-    state = canon.localCheckpoint(eager=True)
-    state_ids = _pinned_ids(sc) - before
+    state = pin(canon)
     prev_sig = None
     for _ in range(max_iter):
         nxt = _small_star(_large_star(state).withColumnRenamed("v", "_v_small"))
-        before = _pinned_ids(sc)
-        new_state = nxt.localCheckpoint(eager=True)
-        new_ids = _pinned_ids(sc) - before
+        new_state = pin(nxt)
         # superseded round — release immediately (kNN-escalation contract)
-        _release_ids(sc, state_ids)
-        state, state_ids = new_state, new_ids
+        release(state)
+        state = new_state
         # fixpoint test on the materialized checkpoint: (count, order-free
         # bit_xor-of-xxhash64 checksum — xor never overflows under ANSI mode
         # and the edge set is distinct so nothing self-cancels) — equal
@@ -159,20 +133,12 @@ def connected_components(
     # only on the small side — map them to themselves
     assign = state.select(F.col("u").alias("node"), F.col("v").alias("component"))
     roots = state.select(F.col("v").alias("node"), F.col("v").alias("component")).distinct()
-    before = _pinned_ids(sc)
-    result = (
-        assign.union(roots)
-        .groupBy("node")
-        .agg(F.min("component").alias("component"))
-        .localCheckpoint(eager=True)
-    )
-    result_ids = _pinned_ids(sc) - before
-    _release_ids(sc, state_ids)
+    result = pin(assign.union(roots).groupBy("node").agg(F.min("component").alias("component")))
+    release(state)
     # the ONE pinned RDD backing `result` is unavoidable (its lineage is
     # truncated); callers that need a zero-persistent-RDD session afterwards
-    # call release_components(result) once consumed — at cluster scale,
+    # call session.release(result) once consumed — at cluster scale,
     # commit the assignment to an Icelite table instead and return the scan
-    result._cc_pinned = [(sc, result_ids)]
     return result
 
 
@@ -197,7 +163,7 @@ def dup_clusters(
         .withColumn("cluster_size", F.count(F.lit(1)).over(Window.partitionBy("cluster_id")))
         .select("doc_id", "cluster_id", "cluster_size")
     )
-    out._cc_pinned = getattr(cc, "_cc_pinned", [])  # release_components(out) still works
+    out._pinned = cc._pinned  # session.release(out) frees the assignment's checkpoint
     return out
 
 

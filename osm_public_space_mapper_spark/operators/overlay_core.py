@@ -37,7 +37,7 @@ import numpy as np
 from ..geo.kernels import ring_signed_area
 from ..geo.raster import (
     Grid,
-    close_open,
+    close,
     dilate,
     erode,
     mask_area,
@@ -152,8 +152,8 @@ def run_overlay(
     # rail smoothing: buffer(+1, mitre).buffer(−1, mitre) → raster close.
     # A disc SE measures r02/r03 closer to the mitre result than a square SE
     # (square over-reaches r·√2 on Vienna's diagonal grid; mitre differs from
-    # round only at corner spikes the following open would trim anyway)
-    rail = close_open(rail, close_r=1.0 / px, open_r=0, shape="disc")
+    # round only at corner spikes)
+    rail = close(rail, 1.0 / px)
 
     ped_recs = by_role.get("pedestrian", [])
     ped_masks = [_raster_record(grid, r) for r in ped_recs]
@@ -267,11 +267,10 @@ def run_overlay(
             for path in r.parts:
                 bld_pieces.extend(buffer_line_pieces(path, ped_width, "round", "mitre"))
     croppers |= buildings | pieces_mask(grid, bld_pieces) | platforms
-    croppers_smooth = close_open(croppers, 0.3 / px, 0, "disc")
+    croppers_smooth = close(croppers, 0.3 / px)
     road_cropped = roads & ~croppers_smooth
     first_r = (ped_width / 2 + 0.2) / px
-    road_final = close_open(road_cropped, first_r, 0, "disc")
-    road_final = close_open(road_final, 0.3 / px, 0, "disc")
+    road_final = close(close(road_cropped, first_r), 0.3 / px)
 
     # --- assemble (category, access) masks [A1 merge] ------------------------
     merged: dict[tuple[str, str], np.ndarray] = {}

@@ -227,24 +227,8 @@ def ivf_topk(
     else:
         cents_list = seed_ivf_centroids(embeddings, n_lists)
 
-    def _list_ids(col: pd.Series, top: int) -> pd.Series:
-        # shared assignment kernel (also used by the persisted-index path,
-        # so build_ivf_index/ivf_topk_indexed can never drift from this)
-        return _ivf_assign_series(cents_list, col, top)
-
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql import types as T
-
-    @pandas_udf(T.IntegerType())
-    def corpus_list(col: pd.Series) -> pd.Series:
-        return _list_ids(col, 1).map(lambda a: int(a[0]))
-
-    @pandas_udf(T.ArrayType(T.IntegerType()))
-    def query_lists(col: pd.Series) -> pd.Series:
-        return _list_ids(col, nprobe)
-
-    corpus = embeddings.withColumn("list_id", corpus_list(F.col("embedding")))
-    q = queries.withColumn("probe", F.explode(query_lists(F.col("embedding"))))
+    corpus = embeddings.withColumn("list_id", corpus_list_udf(cents_list)(F.col("embedding")))
+    q = queries.withColumn("probe", F.explode(query_lists_udf(cents_list, nprobe)(F.col("embedding"))))
     j = q.alias("q").join(corpus.alias("c"), F.col("q.probe") == F.col("c.list_id"))
     scored = j.select(
         F.col("q.query_id").alias("query_id"),
@@ -344,9 +328,6 @@ def build_ivf_index(
     import json
     import os
 
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from ..tables.icelite import IceliteTable
 
     if train:
@@ -354,12 +335,8 @@ def build_ivf_index(
     else:
         cents_list = seed_ivf_centroids(embeddings, n_lists)
 
-    @pandas_udf(T.IntegerType())
-    def corpus_list(col: pd.Series) -> pd.Series:
-        return _ivf_assign_series(cents_list, col, 1).map(lambda a: int(a[0]))
-
     corpus = embeddings.select("vec_id", "embedding").withColumn(
-        "list_id", corpus_list(F.col("embedding"))
+        "list_id", corpus_list_udf(cents_list)(F.col("embedding"))
     )
     tbl = IceliteTable(path)
     snap = tbl.commit(corpus, "list_id", stage="ivf-build")
@@ -391,19 +368,10 @@ def ivf_topk_indexed(
     is collected to plan the pruning — queries are small by contract (the
     corpus side never moves, never broadcasts, never shuffles beyond the
     probe equi-join)."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from ..tables.icelite import IceliteTable
 
-    cents_list = load_ivf_centroids(path)
-
-    @pandas_udf(T.ArrayType(T.IntegerType()))
-    def query_lists(col: pd.Series) -> pd.Series:
-        return _ivf_assign_series(cents_list, col, nprobe)
-
     q = queries.select("query_id", "embedding").withColumn(
-        "probe", F.explode(query_lists(F.col("embedding")))
+        "probe", F.explode(query_lists_udf(load_ivf_centroids(path), nprobe)(F.col("embedding")))
     )
     # tiny driver action over the (small) query side: the distinct probed
     # list ids decide which manifest partitions to scan at all
@@ -421,8 +389,8 @@ def ivf_topk_indexed(
 
 def corpus_list_udf(cents_list: list[list[float]]):
     """Arrow UDF assigning each embedding its nearest-centroid list id —
-    the shared single-probe assignment kernel, exported as a factory so
-    other operators (semantic_dedup) bind their centroids to it."""
+    the one corpus-side assignment of every IVF path (ivf_topk, the
+    persisted indexes, semantic_dedup), so they cannot drift apart."""
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
@@ -431,6 +399,19 @@ def corpus_list_udf(cents_list: list[list[float]]):
         return _ivf_assign_series(cents_list, col, 1).map(lambda a: int(a[0]))
 
     return corpus_list
+
+
+def query_lists_udf(cents_list: list[list[float]], nprobe: int):
+    """Arrow UDF giving each query embedding its `nprobe` nearest list ids
+    (the probe side of the same assignment kernel)."""
+    from pyspark.sql import types as T
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf(T.ArrayType(T.IntegerType()))
+    def query_lists(col: pd.Series) -> pd.Series:
+        return _ivf_assign_series(cents_list, col, nprobe)
+
+    return query_lists
 
 
 # ---------------------------------------------------------------------------
@@ -626,10 +607,6 @@ def build_ivfpq_index(
     books = train_pq_codebooks(embeddings, m, ksub, sample, iters, seed)
     cb = np.asarray(books, dtype=np.float64)
 
-    @pandas_udf(T.IntegerType())
-    def corpus_list(col: pd.Series) -> pd.Series:
-        return _ivf_assign_series(cents_list, col, 1).map(lambda a: int(a[0]))
-
     @pandas_udf(T.ArrayType(T.IntegerType()))
     def enc(col: pd.Series) -> pd.Series:
         v = np.stack(col.to_numpy()).astype(np.float64)
@@ -638,7 +615,7 @@ def build_ivfpq_index(
 
     corpus = embeddings.select(
         "vec_id",
-        corpus_list(F.col("embedding")).alias("list_id"),
+        corpus_list_udf(cents_list)(F.col("embedding")).alias("list_id"),
         enc(F.col("embedding")).alias("codes"),
     )
     tbl = IceliteTable(path)
@@ -669,9 +646,6 @@ def ivfpq_topk(
     from functools import reduce
     from operator import add
 
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from ..tables.icelite import IceliteTable
 
     tbl = IceliteTable(path)
@@ -680,12 +654,8 @@ def ivfpq_topk(
         meta = _json.load(f)
     books, m, ksub = meta["codebooks"], meta["m"], meta["ksub"]
 
-    @pandas_udf(T.ArrayType(T.IntegerType()))
-    def query_lists(col: pd.Series) -> pd.Series:
-        return _ivf_assign_series(cents_list, col, nprobe)
-
     q = queries.select("query_id", "embedding").withColumn(
-        "probe", F.explode(query_lists(F.col("embedding")))
+        "probe", F.explode(query_lists_udf(cents_list, nprobe)(F.col("embedding")))
     )
     probes = sorted({int(r.probe) for r in q.select("probe").distinct().collect()})
     corpus = tbl.read(spark, partitions=[str(p) for p in probes])

@@ -34,8 +34,8 @@ from ..geo.arrowgeom import np_parts
 from ..geo.laea import laea_forward
 from ..operators import clean
 from ..operators.barriers import interpret_barriers
-from ..operators.graph import _pinned_ids, _release_ids
 from ..operators.overlay_core import ElementRecord, OverlayConfig, run_overlay
+from ..session import pin
 
 OVERLAY_RES_DEFAULT = 10  # 256 m cells
 
@@ -99,12 +99,10 @@ def build_overlay_records(classified: DataFrame, region: RegionalConfig | None =
     barrier join (`interpret_barriers`) is not checkpointed: it runs inside
     the job that consumes the records, so consume them once (e.g. one
     `overlay_stage` whose layer is cached) rather than re-reading them per
-    action. The pinned RDD lives until `release_overlay_records`; like any
-    localCheckpoint it sits on executor storage only (see there)."""
+    action. The pinned RDD lives until `session.release(records)` (see
+    `session.pin` for what a localCheckpoint gives up)."""
     region = region or VIENNA
-    sc = classified.sparkSession.sparkContext
-    before = _pinned_ids(sc)
-    classified = classified.localCheckpoint(eager=True)
+    classified = pin(classified)
 
     st = F.col("space_type")
     line = P.is_linestring()
@@ -144,23 +142,8 @@ def build_overlay_records(classified: DataFrame, region: RegionalConfig | None =
     ])
 
     records = from_classified.unionByName(from_rest)
-    records._overlay_pinned = [(sc, _pinned_ids(sc) - before)]
+    records._pinned = classified._pinned
     return records
-
-
-def release_overlay_records(df: DataFrame) -> None:
-    """Release the eager localCheckpoint behind a `build_overlay_records`
-    frame (or a `run_pipeline` layer built from one).
-
-    Call it only once everything derived from the records has been
-    materialized somewhere that does not read them back (e.g. the layer
-    written to parquet and re-read): the frame and every frame derived
-    from it are unusable afterwards. Even before release, a
-    localCheckpoint lives on executor storage only, so losing an executor
-    loses its blocks and fails the next action on these frames — at
-    cluster scale commit the records to a table instead."""
-    for sc, ids in getattr(df, "_overlay_pinned", []):
-        _release_ids(sc, ids)
 
 
 _OVERLAY_OUT = T.StructType(
@@ -248,5 +231,5 @@ def run_pipeline(
 
         cfg = dataclasses.replace(cfg, pedestrian_width=region.pedestrian_way_default_width)
     layer = overlay_stage(records, cfg, overlay_res)
-    layer._overlay_pinned = records._overlay_pinned  # release_overlay_records(layer) works too
+    layer._pinned = records._pinned  # session.release(layer) frees the records
     return layer

@@ -9,7 +9,7 @@ from __future__ import annotations
 import os
 import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app: str = "osm-public-space-mapper-spark", cores: int | str = "*", shuffle_partitions: int | None = None) -> SparkSession:
@@ -41,3 +41,35 @@ def get_spark(app: str = "osm-public-space-mapper-spark", cores: int | str = "*"
         )
     )
     return builder.getOrCreate()
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """Materialize `df` with an eager `localCheckpoint` and return the
+    checkpointed frame, with the persistent-RDD ids it created recorded as
+    `_pinned` so `release` can free them.
+
+    A localCheckpoint truncates lineage and keeps its blocks on executor
+    storage only: losing an executor loses its blocks and fails the next
+    action on the frame (and on every frame derived from it) for good. At
+    cluster scale commit the data to a table instead."""
+    sc = df.sparkSession.sparkContext
+    before = _persistent_ids(sc)
+    out = df.localCheckpoint(eager=True)
+    out._pinned = [(sc, _persistent_ids(sc) - before)]
+    return out
+
+
+def release(df: DataFrame) -> None:
+    """Unpersist the checkpoints recorded on `df` by `pin` (or carried
+    forward from a pinned frame). The frame and every frame derived from it
+    are unusable afterwards. `DataFrame.unpersist()` is a no-op here: the
+    pinned RDD lives outside the Dataset cache manager."""
+    for sc, ids in getattr(df, "_pinned", []):
+        jmap = sc._jsc.getPersistentRDDs()
+        for k in list(jmap.keys()):
+            if int(k) in ids:
+                jmap[k].unpersist()
+
+
+def _persistent_ids(sc) -> set:
+    return {int(k) for k in sc._jsc.getPersistentRDDs().keys()}

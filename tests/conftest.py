@@ -18,10 +18,10 @@ def spark():
 
 @pytest.fixture(scope="session")
 def fixture_layer(spark):
-    """The classified fixture layer, built ONCE per session (and cached to a
-    fingerprint-keyed parquet across sessions by the entry helper). Module
-    `layer` fixtures delegate here — the pipeline build is the most
-    expensive fixture in the suite and every module used identical config."""
+    """The classified fixture layer, built ONCE per session and pinned by
+    the entry helper. Module `layer` fixtures delegate here — the pipeline
+    build is the most expensive fixture in the suite and every module used
+    identical config."""
     import __spark_entry__ as E
 
     return E._polygon_layer(spark)

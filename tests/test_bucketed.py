@@ -5,11 +5,8 @@ Python node, and its output equals the shuffle path exactly."""
 import pytest
 from pyspark.sql import functions as F
 
-from osm_public_space_mapper_spark.fixtures.elements import BBOX_4326, elements_to_spark
 from osm_public_space_mapper_spark.fixtures.images import synth_images_spark
 from osm_public_space_mapper_spark.operators import joins, tiling
-from osm_public_space_mapper_spark.operators.overlay_core import OverlayConfig
-from osm_public_space_mapper_spark.plans.pipeline import projected_bbox_ring, run_pipeline
 from osm_public_space_mapper_spark.tables.bucketed import images_with_tile_cell, save_bucketed
 
 # physical-plan node names of every Python-worker operator

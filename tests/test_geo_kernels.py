@@ -12,7 +12,7 @@ from osm_public_space_mapper_spark.geo.kernels import (
 )
 from osm_public_space_mapper_spark.geo.raster import (
     Grid,
-    close_open,
+    close,
     dilate,
     erode,
     mask_area,
@@ -103,7 +103,7 @@ def test_raster_roundtrip_and_morphology():
     areas = sorted(abs(ring_signed_area(r)) for r in polys[0])
     assert abs(areas[1] - 6400) < 64 and abs(areas[0] - 400) < 16
     # closing fills the 20m hole when radius ≥ 10m
-    closed = close_open(m, close_r=11 / 0.5, open_r=0)
+    closed = close(m, 11 / 0.5)
     assert abs(mask_area(closed, 0.5) - 6400.0) < 120
     # erode ∘ dilate identity-ish on large mask
     m2 = erode(dilate(m, 4), 4)

@@ -9,8 +9,8 @@ from osm_public_space_mapper_spark.operators.graph import (
     cluster_survivors,
     connected_components,
     dup_clusters,
-    release_components,
 )
+from osm_public_space_mapper_spark.session import release
 
 
 def _uf_components(edges):
@@ -35,18 +35,22 @@ def _run(spark, edges):
     df = spark.createDataFrame(edges, "src long, dst long")
     res = connected_components(df, "src", "dst")
     got = {(r["node"], r["component"]) for r in res.collect()}
-    release_components(res)
+    release(res)
     exp = set(_uf_components(edges).items())
     assert got == exp
 
 
 @pytest.fixture(autouse=True)
 def _no_leftover_persistent_rdds(spark):
-    """Every test in this module must leave the session with zero persistent
-    RDDs (the later dedup/image-join suites assert ==0 globally)."""
+    """Every test in this module must leave the session without persistent
+    RDDs of its own. The ones it found stay: the session's pinned fixture
+    layer has no lineage to recompute from."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persistent().keys())
     yield
-    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        rdd.unpersist()
+    for k, rdd in persistent().items():
+        if k not in before:
+            rdd.unpersist()
 
 
 def test_cc_long_chain(spark):
@@ -108,11 +112,11 @@ def test_dup_clusters_transitive_closure(spark):
 def test_cc_single_pinned_checkpoint(spark):
     """The operator unpersists every superseded round state; after the run
     exactly ONE persistent RDD remains — the eager localCheckpoint backing
-    the returned assignment — and release_components() releases it."""
+    the returned assignment — and session.release() releases it."""
     base = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
     df = spark.createDataFrame([(i, i + 1) for i in range(30)], "src long, dst long")
     res = connected_components(df, "src", "dst")
     res.collect()
     assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == base + 1
-    release_components(res)
+    release(res)
     assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == base

@@ -24,9 +24,9 @@ from osm_public_space_mapper_spark.plans.pipeline import (
     classify_stage,
     overlay_stage,
     projected_bbox_ring,
-    release_overlay_records,
     run_pipeline,
 )
+from osm_public_space_mapper_spark.session import release
 
 
 def _frac_to_proj(fx, fy):
@@ -190,7 +190,7 @@ def test_layer_build_plans_have_no_python_eval(spark):
             plan = df._jdf.queryExecution().optimizedPlan().toString()
             assert plan.count("ArrowEvalPython") == 0, name
     finally:
-        release_overlay_records(records)
+        release(records)
 
 
 def test_release_overlay_records(spark, tmp_path):
@@ -201,9 +201,38 @@ def test_release_overlay_records(spark, tmp_path):
     layer = run_pipeline(elements_to_spark(spark), _overlay_cfg(1.0), overlay_res=8)
     assert jsc.getPersistentRDDs().size() == base + 1  # the records' localCheckpoint
     layer.write.parquet(str(tmp_path / "layer"))
-    release_overlay_records(layer)
+    release(layer)
     assert jsc.getPersistentRDDs().size() == base
     assert spark.read.parquet(str(tmp_path / "layer")).count() > 0
+
+
+def test_polygon_layer_is_one_pinned_session_build(spark, tmp_path, monkeypatch):
+    """The entry's fixture layer is built in the session and pinned: one
+    persistent RDD (the records behind it released), which survives
+    clearCache(), and no layer copy written under the temp dir."""
+    import tempfile
+
+    import __spark_entry__ as E
+
+    def ids():
+        return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keys()}
+
+    monkeypatch.setattr(E, "_LAYER_CACHE", {})
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    before = ids()
+    layer = E._polygon_layer(spark)
+    try:
+        # compare id sets, not counts: Spark's context cleaner can drop RDDs
+        # that earlier tests left unreferenced while the layer builds
+        new = ids() - before
+        assert len(new) == 1
+        spark.catalog.clearCache()
+        assert new <= ids()
+        assert layer.count() > 0
+        assert not list(tmp_path.glob("ospm_layer_*"))
+    finally:
+        release(layer)
+    assert not new & ids()
 
 
 def test_overlay_record_roles(spark):
@@ -213,7 +242,7 @@ def test_overlay_record_roles(spark):
     try:
         rows = records.select("element_id", "role").collect()
     finally:
-        release_overlay_records(records)
+        release(records)
     ids = {}
     for r in rows:
         ids.setdefault(r.role, []).append(r.element_id)

@@ -6,11 +6,8 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from osm_public_space_mapper_spark.fixtures.elements import BBOX_4326, elements_to_spark
 from osm_public_space_mapper_spark.fixtures.images import generate_images, images_to_spark
 from osm_public_space_mapper_spark.operators import joins, skew
-from osm_public_space_mapper_spark.operators.overlay_core import OverlayConfig
-from osm_public_space_mapper_spark.plans.pipeline import projected_bbox_ring, run_pipeline
 from osm_public_space_mapper_spark.sources.geojson import save_geojson
 from osm_public_space_mapper_spark.tables.icelite import IceliteTable
 
