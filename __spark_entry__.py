@@ -42,12 +42,19 @@ def _ensure_pyfiles(spark: SparkSession) -> None:
     key = spark.sparkContext.applicationId
     if key in _PYFILES_SENT:
         return
+    import atexit
     import os
+    import shutil
     import tempfile
     import zipfile
 
     pkg_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "osm_public_space_mapper_spark")
-    zpath = os.path.join(tempfile.gettempdir(), "osm_public_space_mapper_spark.zip")
+    # a fresh directory per session: sessions started at the same time from
+    # different checkouts must not overwrite each other's zip (Spark refuses
+    # a shipped file whose contents changed)
+    zdir = tempfile.mkdtemp(prefix="ospm_pyfiles_")
+    atexit.register(shutil.rmtree, zdir, True)
+    zpath = os.path.join(zdir, "osm_public_space_mapper_spark.zip")
     with zipfile.ZipFile(zpath, "w") as z:
         for root, _, files in os.walk(pkg_dir):
             for fn in files:

@@ -117,6 +117,7 @@ def _phase_builder(spark, name):
             buf = st_buffer_udf(1.8, cap_style="flat", join_style="mitre")
             return sub.select(F.size(buf(F.col("geom"), F.col("geom_kind"))).alias("n_rings")).agg(F.sum("n_rings"))
 
+        b._pinned = recs._pinned  # main releases the records after timing
         return b
     if name in ("image_phash_dups", "transcode_jpeg"):
         from osm_public_space_mapper_spark.operators.imageops import image_phash_dups, transcode_images
@@ -154,8 +155,11 @@ def main():
         name = sys.argv[2]
         trials = int(sys.argv[3]) if len(sys.argv) > 3 else 3
         plan_out = sys.argv[4] if len(sys.argv) > 4 else None
+        from osm_public_space_mapper_spark.session import release
+
         build = _phase_builder(spark, name)
         _time_df(spark, build, trials, plan_out, name)
+        release(build)
     spark.stop()
 
 

@@ -129,68 +129,80 @@ def pip_join(images: DataFrame, layer: DataFrame, res: int = JOIN_RES_DEFAULT) -
     return imgs.groupBy("cell").cogroup(polys.groupBy("cell")).applyInPandas(_refine, _PIP_OUT)
 
 
+_TILE_SCHEMA = T.StructType(
+    [
+        T.StructField("tile_cell", T.LongType()),
+        T.StructField("space_category", T.StringType()),
+        T.StructField("access", T.StringType()),
+        T.StructField("mask", T.BinaryType()),
+        T.StructField("mask_w", T.IntegerType()),
+        T.StructField("mask_h", T.IntegerType()),
+        T.StructField("ox", T.DoubleType()),
+        T.StructField("oy", T.DoubleType()),
+        T.StructField("px", T.DoubleType()),
+        T.StructField("mask_hash", T.StringType()),
+        T.StructField("area", T.DoubleType()),
+    ]
+)
+
+
 def subdivide_tiles(tiles: DataFrame, group_res: int) -> DataFrame:
-    """Split per-tile class masks into per-subcell mask slices at `group_res`.
+    """Cut each cell's class mask into its descendants' masks at `group_res`.
 
-    Parallelism of the raster PIP join is bounded by the number of groups;
-    coarse tiles (res 10 = 256 m) would cap it at a handful of tasks on a
-    small extent. Slicing each mask to its res-`group_res` descendants keeps
-    total payload constant while multiplying group count by 4^(Δres).
+    The one slicer from a mask row (``tile_cell``, class, ``mask``,
+    ``mask_w``, ``mask_h``, origin ``ox, oy``, ``px``) to tile rows: it cuts
+    the layer's kernel masks into tiles (``tiling.rasterize_tiles``) and the
+    tiles into the raster PIP join's groups. That join's parallelism is
+    bounded by its group count, so slicing res-10 tiles to res 13 multiplies
+    it by 4^3 at constant payload.
 
-    Each slice's pixel window is taken from its sub-cell's bounds, so when
-    `px` does not divide the sub-cell side the window also holds the pixels
-    that straddle its edges (they appear in both neighbouring slices)."""
-    out_schema = T.StructType(
-        [
-            T.StructField("tile_cell", T.LongType()),
-            T.StructField("space_category", T.StringType()),
-            T.StructField("access", T.StringType()),
-            T.StructField("mask", T.BinaryType()),
-            T.StructField("mask_w", T.IntegerType()),
-            T.StructField("mask_h", T.IntegerType()),
-            T.StructField("ox", T.DoubleType()),
-            T.StructField("oy", T.DoubleType()),
-            T.StructField("px", T.DoubleType()),
-        ]
-    )
+    A child cell [cx0, cx1) × [cy0, cy1) takes the pixel window
+    floor((cx0 − ox)/px) … ceil((cx1 − ox)/px), the same in y, relative to
+    the row's own origin. The window is zero-padded where it runs past the
+    source mask (a kernel mask is cropped to the analysis bbox), and when
+    `px` does not divide the child side it also holds the pixels that
+    straddle the child's edges (they appear in both neighbours). Empty
+    slices are dropped; each slice carries its ``mask_hash`` (sha1 of the
+    packed bytes) and ``area`` (m²)."""
 
     def _slice(batches):
+        import hashlib
+
         from ..cells.grid import cell_side, decode_cells, pack_cells
+        from ..geo.raster import mask_area
 
         side = cell_side(group_res)
         for pdf in batches:
-            out = {f.name: [] for f in out_schema.fields}
-            for _, row in pdf.iterrows():
-                w, h = int(row["mask_w"]), int(row["mask_h"])
-                mask = np.unpackbits(np.frombuffer(row["mask"], dtype=np.uint8), count=w * h).reshape(h, w)
-                res, ix, iy = decode_cells(np.array([row["tile_cell"]], dtype=np.int64))
+            out = []
+            for row in pdf.itertuples(index=False):
+                w, h, px = int(row.mask_w), int(row.mask_h), float(row.px)
+                mask = np.unpackbits(np.frombuffer(row.mask, dtype=np.uint8), count=w * h).reshape(h, w)
+                res, ix, iy = decode_cells(np.array([row.tile_cell], dtype=np.int64))
                 shift = group_res - int(res[0])
-                n = 1 << shift  # subcells per axis
-                edges = [int(np.floor(k * side / row["px"])) for k in range(n)]
-                ends = [int(np.ceil((k + 1) * side / row["px"])) for k in range(n)]
-                k = np.arange(n, dtype=np.int64)
-                sub_cells = pack_cells(group_res, (ix[0] << shift) | k[:, None], (iy[0] << shift) | k).tolist()
-                for sx in range(n):
-                    x0, x1 = edges[sx], min(w, ends[sx])
-                    for sy in range(n):
-                        y0, y1 = edges[sy], min(h, ends[sy])
-                        sub = mask[y0:y1, x0:x1]
-                        if not sub.any():
+                k = np.arange(1 << shift, dtype=np.int64)
+                gx, gy = (ix[0] << shift) | k, (iy[0] << shift) | k
+                x0s = np.floor((gx * side - row.ox) / px).astype(int)
+                x1s = np.ceil(((gx + 1) * side - row.ox) / px).astype(int)
+                y0s = np.floor((gy * side - row.oy) / px).astype(int)
+                y1s = np.ceil(((gy + 1) * side - row.oy) / px).astype(int)
+                for cx, x0, x1 in zip(gx, x0s, x1s):
+                    for cy, y0, y1 in zip(gy, y0s, y1s):
+                        ya, ye, xa, xe = max(y0, 0), min(y1, h), max(x0, 0), min(x1, w)
+                        if ye <= ya or xe <= xa or not mask[ya:ye, xa:xe].any():
                             continue
-                        out["tile_cell"].append(sub_cells[sx][sy])
-                        out["space_category"].append(row["space_category"])
-                        out["access"].append(row["access"])
-                        out["mask"].append(np.packbits(sub, axis=None).tobytes())
-                        out["mask_w"].append(x1 - x0)
-                        out["mask_h"].append(y1 - y0)
-                        out["ox"].append(row["ox"] + x0 * row["px"])
-                        out["oy"].append(row["oy"] + y0 * row["px"])
-                        out["px"].append(row["px"])
-            yield pd.DataFrame(out)
+                        sub = np.zeros((y1 - y0, x1 - x0), dtype=np.uint8)
+                        sub[ya - y0:ye - y0, xa - x0:xe - x0] = mask[ya:ye, xa:xe]
+                        packed = np.packbits(sub, axis=None).tobytes()
+                        out.append((
+                            int(pack_cells(group_res, cx, cy)), row.space_category, row.access, packed,
+                            int(x1 - x0), int(y1 - y0), row.ox + x0 * px, row.oy + y0 * px, px,
+                            hashlib.sha1(packed).hexdigest(), mask_area(sub, px),
+                        ))
+            yield pd.DataFrame(out, columns=_TILE_SCHEMA.fieldNames())
 
     return tiles.select(
         "tile_cell", "space_category", "access", "mask", "mask_w", "mask_h", "ox", "oy", "px"
-    ).mapInPandas(_slice, out_schema)
+    ).mapInPandas(_slice, _TILE_SCHEMA)
 
 
 def pip_join_raster(
@@ -216,10 +228,11 @@ def pip_join_raster(
     their stored partitioning and the unsalted join plans with zero
     Exchange (tests/test_bucketed.py asserts this).
 
-    The tile masks are rasterized from the SAME pixel lattice the vector
-    layer's rings trace, so a pixel lookup equals the vector PIP answer for
-    any point not exactly on a pixel-edge line (measure zero) — verified
-    against both the vector join and the numpy brute force in tests.
+    The tile masks are slices of the overlay kernel's class masks, the
+    rasters the vector layer's rings were traced from, so a pixel lookup
+    equals the vector PIP answer for any point not exactly on a pixel-edge
+    line (measure zero) — verified against both the vector join and the
+    numpy brute force in tests.
 
     Output: ``image_id`` (``id_col`` renamed), ``space_category, access,
     tile_cell``."""

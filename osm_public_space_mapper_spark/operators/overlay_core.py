@@ -83,9 +83,12 @@ class ElementRecord:
 @dataclass
 class OverlayResult:
     rows: list = field(default_factory=list)      # dicts: space_category, access, parts, area
-    masks: dict = field(default_factory=dict)     # (category, access) → bool mask (core window)
+    # (category, access) → bool mask over `grid`, empty outside core_slice;
+    # overlay_stage emits its core window as the layer row's mask, which
+    # the tiles are cut from
+    masks: dict = field(default_factory=dict)
     grid: Grid | None = None
-    core_slice: tuple | None = None
+    core_slice: tuple | None = None               # (r0, r1, c0, c1) in grid pixels
     metrics: dict = field(default_factory=dict)
 
 

@@ -13,8 +13,9 @@ Scale notes (SURVEY.md §3.2): stage boundaries are shuffles on
 touches, so the kernel is embarrassingly parallel over cells. The bbox and
 the cell cover are Catalyst expressions (functions/geometry.bbox_expr /
 cover_expr), and so is the LAEA projection (st_project), so the only Python
-in the layer build is the per-group kernels (barrier resolve, overlay,
-tiling). Line buffering is deferred into the kernel (raster): no vector buffer.
+in the layer build is the per-group kernels (barrier resolve, overlay) and
+the per-row mask slicer that cuts the tiles from the overlay's masks. Line
+buffering is deferred into the kernel (raster): no vector buffer.
 """
 
 from __future__ import annotations
@@ -155,12 +156,24 @@ _OVERLAY_OUT = T.StructType(
         T.StructField("area", T.DoubleType()),
         T.StructField("core_area", T.DoubleType()),
         T.StructField("completeness_gap", T.DoubleType()),
+        # the row's class mask over the kernel's core window (np.packbits,
+        # row-major), origin (ox, oy) on the global px lattice
+        T.StructField("mask", T.BinaryType()),
+        T.StructField("mask_w", T.IntegerType()),
+        T.StructField("mask_h", T.IntegerType()),
+        T.StructField("ox", T.DoubleType()),
+        T.StructField("oy", T.DoubleType()),
+        T.StructField("px", T.DoubleType()),
     ]
 )
 
 
 def overlay_stage(records: DataFrame, cfg: OverlayConfig, overlay_res: int = OVERLAY_RES_DEFAULT) -> DataFrame:
-    """Explode records onto overlay cells, run the kernel per cell."""
+    """Explode records onto overlay cells, run the kernel per cell.
+
+    Each layer row carries its vector rings (`geom`) and the raster mask
+    they trace (`mask` … `px`, cropped to the cell's core window): the one
+    raster the tiles are cut from (`tiling.rasterize_tiles`)."""
     margin = cfg.margin
     cover = cover_expr(overlay_res, halo=0)
     recs = records.withColumn("_bbox", bbox_expr(F.col("geom")))
@@ -195,19 +208,18 @@ def overlay_stage(records: DataFrame, cfg: OverlayConfig, overlay_res: int = OVE
             for _, row in pdf.iterrows()
         ]
         result = run_overlay(recs_list, (xmin, ymin, xmax, ymax), cfg)
-        out = {
-            "overlay_cell": [], "space_category": [], "access": [], "geom": [],
-            "area": [], "core_area": [], "completeness_gap": [],
-        }
+        out = []
+        if result.rows:
+            r0, r1, c0, c1 = result.core_slice
+            ox, oy = result.grid.ox + c0 * cfg.px, result.grid.oy + r0 * cfg.px
         for r in result.rows:
-            out["overlay_cell"].append(cell)
-            out["space_category"].append(r["space_category"])
-            out["access"].append(r["access"])
-            out["geom"].append([p.tolist() for p in r["parts"]])
-            out["area"].append(r["area"])
-            out["core_area"].append(result.metrics.get("core_area", 0.0))
-            out["completeness_gap"].append(result.metrics.get("completeness_gap", 0.0))
-        return pd.DataFrame(out)
+            mask = result.masks[(r["space_category"], r["access"])][r0:r1, c0:c1]
+            out.append((
+                cell, r["space_category"], r["access"], [p.tolist() for p in r["parts"]], r["area"],
+                result.metrics.get("core_area", 0.0), result.metrics.get("completeness_gap", 0.0),
+                np.packbits(mask, axis=None).tobytes(), c1 - c0, r1 - r0, ox, oy, cfg.px,
+            ))
+        return pd.DataFrame(out, columns=_OVERLAY_OUT.fieldNames())
 
     return recs.groupBy("overlay_cell").applyInPandas(_run, _OVERLAY_OUT)
 

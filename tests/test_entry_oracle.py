@@ -107,3 +107,21 @@ def test_entry_smoke(spark):
     assert len(rows) > 0
     assert set(df.columns) == {"space_category", "access", "n_images"}
     assert sum(r.n_images for r in rows) > 0
+
+
+def test_ensure_pyfiles_zips_per_session(monkeypatch, tmp_path):
+    """Each session ships the package from its own fresh zip, so sessions
+    started together from different checkouts never overwrite each other's
+    file."""
+    import tempfile
+    from types import SimpleNamespace
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(entrymod, "_PYFILES_SENT", set())
+    shipped = []
+    for app_id in ("app-a", "app-b"):
+        sc = SimpleNamespace(applicationId=app_id, addPyFile=shipped.append)
+        entrymod._ensure_pyfiles(SimpleNamespace(sparkContext=sc))
+    assert len(shipped) == 2 and shipped[0] != shipped[1]
+    assert str(tmp_path / "osm_public_space_mapper_spark.zip") not in shipped
+    assert all(os.path.isfile(p) for p in shipped)

@@ -76,12 +76,27 @@ def test_pip_raster_equals_vector(spark, layer_df, images_df):
     assert raster == vector
 
 
+def _fixture_layer_at(spark, px):
+    """The fixture layer built at `px` (the session's layer is at 0.25)."""
+    from osm_public_space_mapper_spark.fixtures.elements import BBOX_4326 as b, elements_to_spark
+    from osm_public_space_mapper_spark.operators.overlay_core import OverlayConfig
+    from osm_public_space_mapper_spark.plans.pipeline import projected_bbox_ring, run_pipeline
+
+    ring = projected_bbox_ring(b["left"], b["bottom"], b["right"], b["top"])
+    env = (float(ring[:, 0].min()), float(ring[:, 1].min()), float(ring[:, 0].max()), float(ring[:, 1].max()))
+    cfg = OverlayConfig(px=px, margin=64.0, bbox=env, bbox_ring=ring)
+    return run_pipeline(elements_to_spark(spark), cfg, overlay_res=8)
+
+
 @pytest.mark.parametrize("px", [0.3, 0.25])
 def test_subdivided_raster_join_equals_unsubdivided(spark, layer_df, images_df, px):
     """Slicing the tile masks to res-13 sub-cells loses and adds no
     assignment, also when px does not divide the 32 m sub-cell side
     (0.3 m: 106.67 pixels per sub-cell)."""
-    tiles = tiling.rasterize_tiles(layer_df, tile_res=10, px=px).cache()
+    from osm_public_space_mapper_spark.session import release
+
+    layer = layer_df if px == 0.25 else _fixture_layer_at(spark, px)
+    tiles = tiling.rasterize_tiles(layer, tile_res=10, px=px).cache()
     try:
         def assigned(**kw):
             out = joins.pip_join_raster(images_df, tiles, **kw).select("image_id", "space_category", "access")
@@ -92,6 +107,8 @@ def test_subdivided_raster_join_equals_unsubdivided(spark, layer_df, images_df, 
         assert assigned(tile_res=10, group_res=13) == whole
     finally:
         tiles.unpersist()
+        if layer is not layer_df:
+            release(layer)
 
 
 def test_pip_assignment_distribution(spark, layer_df, images_df):
@@ -213,14 +230,25 @@ def test_tiles_roundtrip_iou(spark, layer_df):
     by_key = {}
     for r in layer_rows:
         by_key.setdefault((r.space_category, r.access), []).append(r.geom)
-    for tr in tile_rows[:40]:
+    # the tiles are cut from the kernel's masks; re-rasterizing the layer's
+    # rings (traced from those masks) must give every tile back exactly
+    for tr in tile_rows:
         iou = tiling.mask_vector_iou(tr, by_key[(tr.space_category, tr.access)])
-        assert iou >= 0.99, (tr.space_category, tr.access, iou)
+        assert iou == 1.0, (tr.tile_cell, tr.space_category, tr.access, iou)
     # deterministic hashes: rerun and compare
     tiles2 = {(r.tile_cell, r.space_category, r.access): r.mask_hash
               for r in tiling.rasterize_tiles(layer_df, tile_res=10, px=0.25).collect()}
     tiles1 = {(r.tile_cell, r.space_category, r.access): r.mask_hash for r in tile_rows}
     assert tiles1 == tiles2
+
+
+def test_rasterize_tiles_rejects_foreign_px_and_coarser_res(spark, layer_df):
+    """Tiles are cut from the layer's own masks: another px, or a tile
+    coarser than the layer's overlay cell (res 8), cannot be cut."""
+    with pytest.raises(Exception, match="px 0.25"):
+        tiling.rasterize_tiles(layer_df, tile_res=10, px=0.5).collect()
+    with pytest.raises(Exception, match="overlay res 8"):
+        tiling.rasterize_tiles(layer_df, tile_res=7, px=0.25).collect()
 
 
 def test_image_invariants_and_features(spark):

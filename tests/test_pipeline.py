@@ -169,11 +169,13 @@ def test_parking_building_keeps_building_access(spark):
     }
 
 
-def test_layer_build_plans_have_no_python_eval(spark):
+def test_layer_build_plans_have_no_python_eval(spark, fixture_layer):
     """Projection, bbox and cell cover are Catalyst: the classified frame
     scans the elements once with no Python node, and past the checkpointed
     records the only Python in the overlay, tiling and PIP-explode plans is
-    their per-group kernels, never a scalar ArrowEvalPython node."""
+    their per-group kernels, never a scalar ArrowEvalPython node. Tiles are
+    cut from the stored layer's masks row by row: no shuffle, no grouped
+    kernel."""
     classified = classify_stage(elements_to_spark(spark))
     plan = classified._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ArrowEvalPython") == 0
@@ -191,6 +193,9 @@ def test_layer_build_plans_have_no_python_eval(spark):
             assert plan.count("ArrowEvalPython") == 0, name
     finally:
         release(records)
+    plan = tiling.rasterize_tiles(fixture_layer, tile_res=10, px=0.25)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 0
+    assert plan.count("FlatMapGroupsInPandas") == 0
 
 
 def test_release_overlay_records(spark, tmp_path):

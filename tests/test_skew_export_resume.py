@@ -143,23 +143,3 @@ def test_icelite_time_travel(spark, tmp_path):
     ids1 = {r.id for r in t.read(spark, snapshot_id=s1["snapshot_id"]).collect()}
     assert ids1 == {1, 2}
 
-
-def test_geom_union_agg_overlapping(spark):
-    """General union for OVERLAPPING geometries: two 10x10 squares with 50%
-    overlap union to area 150 (raster exactness at lattice-aligned edges);
-    disjoint pair unions to plain sum."""
-    from osm_public_space_mapper_spark.operators.skew import geom_union_agg
-
-    def rect(x0, y0, x1, y1):
-        return [[[x0, y0], [x1, y0], [x1, y1], [x0, y1]]]
-
-    rows = [
-        ("a", rect(0.0, 0.0, 10.0, 10.0)),
-        ("a", rect(5.0, 0.0, 15.0, 10.0)),   # overlaps the first
-        ("b", rect(0.0, 0.0, 10.0, 10.0)),
-        ("b", rect(20.0, 0.0, 30.0, 10.0)),  # disjoint
-    ]
-    df = spark.createDataFrame(rows, "k string, geom array<array<array<double>>>")
-    out = {r.k: r.area for r in geom_union_agg(df, ["k"], px=0.25).collect()}
-    assert abs(out["a"] - 150.0) < 1.0
-    assert abs(out["b"] - 200.0) < 1.0
