@@ -82,18 +82,18 @@ def _phase_builder(spark, name):
 
         layer = E._polygon_layer(spark)
         return lambda: tiling.rasterize_tiles(layer, tile_res=10, px=0.25)
-    tiles = E._tiles(spark)
     if name in ("pip_join", "pip_join_expr", "knn_join"):
         from bench import _images
 
         images = _images(spark, N_IMAGES)
         images.count()
         if name == "pip_join":
+            tiles = E._tiles(spark)
             return lambda: joins.pip_join_raster(images, tiles)
         if name == "pip_join_expr":
             from osm_public_space_mapper_spark.streaming.geofence import pip_join_expr
 
-            sub13 = joins.subdivide_tiles(tiles, 13).cache()
+            sub13 = joins.subdivide_tiles(E._tiles(spark), 13).cache()
             sub13.count()
             return lambda: pip_join_expr(images, sub13)
         layer = E._polygon_layer(spark)

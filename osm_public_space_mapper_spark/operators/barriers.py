@@ -25,18 +25,15 @@ from pyspark.sql import types as T
 from ..cells.grid import RES_FINE
 from ..functions import predicates as P
 from ..functions.geometry import bbox_expr, cover_expr
+from ..geo.arrowgeom import np_parts
 from ..geo.kernels import geoms_intersect, point_segment_dist
 
 _EPS = 1e-3  # metres; point-on-barrier tolerance (entrance nodes lie on the way)
 
 
-from ..geo.arrowgeom import np_parts
-
-
 def _intersects(parts_a, kind_a, parts_b, kind_b) -> bool:
-    """geoms_intersect with ε-tolerant point-vs-line (projection jitter)."""
-    parts_a = np_parts(parts_a)
-    parts_b = np_parts(parts_b)
+    """geoms_intersect with ε-tolerant point-vs-line (projection jitter), on
+    decoded parts (np_parts)."""
     pt_kinds = ("point", "multipoint")
     if kind_a in pt_kinds or kind_b in pt_kinds:
         if kind_b in pt_kinds:
@@ -69,17 +66,18 @@ _OUT_SCHEMA = T.StructType(
 
 def _resolve_barrier_group(pdf: pd.DataFrame) -> pd.DataFrame:
     bid = int(pdf["bid"].iloc[0])
-    bparts = pdf["bgeom"].iloc[0]
+    bparts = np_parts(pdf["bgeom"].iloc[0])
     bkind = pdf["bkind"].iloc[0]
     # deterministic entrance order + dedupe across cells
     pdf = pdf.drop_duplicates(subset=["eid"]).sort_values("eid")
     ents = []
-    for _, row in pdf.iterrows():
-        if _intersects(row["egeom"], row["ekind"], bparts, bkind):
-            eff = row["e_access"]
+    for row in pdf.itertuples(index=False):
+        eparts = np_parts(row.egeom)
+        if _intersects(eparts, row.ekind, bparts, bkind):
+            eff = row.e_access
             if eff is None or (isinstance(eff, float) and pd.isna(eff)):
-                eff = "no" if row["e_gate"] else "yes"  # analyse_access.py:79-83
-            ents.append((int(row["eid"]), eff, row["egeom"], row["ekind"]))
+                eff = "no" if row.e_gate else "yes"  # analyse_access.py:79-83
+            ents.append((int(row.eid), eff, eparts, row.ekind))
     if len(ents) == 0:
         access = "no"
     elif len(ents) == 1:

@@ -1,4 +1,4 @@
-"""Per-cell overlay kernel core (pure numpy — Spark-agnostic, unit-testable).
+"""Per-cell overlay kernel (numpy over one pandas group, no SparkSession).
 
 Executes the reference's whole geometry tail for ONE cell window on raster
 masks, turning 9 sequential global polygon-overlay passes into a single
@@ -20,25 +20,34 @@ space-type assumption. Only access-null elements are affected by the
 enclosed-area transfer — the reference's J6 "split" copies keep their
 already-set access, making the split a no-op for them.
 
-Inputs are pre-classified element records; outputs are (space_category,
-access) → vector polygons clipped to (cell core ∩ analysis bbox), plus the
-per-class raster masks (the raster↔vector tile payload).
+Input: one overlay cell's group frame, the `build_overlay_records` columns
+(element_id, role, geom_kind, geom, space_category, access_tags,
+assumed_access, buf_width, cap_style) plus `overlay_cell`. Output: that
+cell's layer rows in `LAYER_SCHEMA`, one per (space_category, access): the
+vector rings clipped to (cell core ∩ analysis bbox), their area, the cell's
+core area and completeness gap, and the class mask over the core window,
+which the tiles are cut from (tiling.rasterize_tiles). It needs no Spark
+session, so a test can call it on a hand-built frame.
 
-Determinism: records are sorted by element_id; all mask algebra is
+Determinism: records are sorted by (element_id, role); all mask algebra is
 order-independent; output is sorted by (category, access).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
+import pandas as pd
+from pyspark.sql import types as T
 
+from ..cells.grid import cell_bbox
+from ..functions.geometry import GEOM_TYPE
+from ..geo.arrowgeom import np_parts
 from ..geo.kernels import ring_signed_area
 from ..geo.raster import (
     Grid,
     close,
-    dilate,
     erode,
     mask_area,
     rasterize_lines,
@@ -67,34 +76,32 @@ class OverlayConfig:
     pedestrian_width: float = PEDESTRIAN_WIDTH
 
 
-@dataclass
-class ElementRecord:
-    element_id: int
-    role: str                     # element|building|road|rail|pedestrian|platform|passage|barrier_inacc
-    geom_kind: str
-    parts: list                   # list of (K,2) ndarrays, projected metres
-    space_category: str | None = None
-    access_tags: str | None = None
-    assumed_access: str | None = None
-    buf_width: float = 0.0        # full width for line buffering
-    cap_style: str = "square"
+LAYER_SCHEMA = T.StructType(
+    [
+        T.StructField("overlay_cell", T.LongType()),
+        T.StructField("space_category", T.StringType()),
+        T.StructField("access", T.StringType()),
+        T.StructField("geom", GEOM_TYPE),
+        T.StructField("area", T.DoubleType()),
+        T.StructField("core_area", T.DoubleType()),
+        T.StructField("completeness_gap", T.DoubleType()),
+        # the row's class mask over the kernel's core window (np.packbits,
+        # row-major), origin (ox, oy) on the global px lattice
+        T.StructField("mask", T.BinaryType()),
+        T.StructField("mask_w", T.IntegerType()),
+        T.StructField("mask_h", T.IntegerType()),
+        T.StructField("ox", T.DoubleType()),
+        T.StructField("oy", T.DoubleType()),
+        T.StructField("px", T.DoubleType()),
+    ]
+)
+_COLUMNS = LAYER_SCHEMA.fieldNames()
 
 
-@dataclass
-class OverlayResult:
-    rows: list = field(default_factory=list)      # dicts: space_category, access, parts, area
-    # (category, access) → bool mask over `grid`, empty outside core_slice;
-    # overlay_stage emits its core window as the layer row's mask, which
-    # the tiles are cut from
-    masks: dict = field(default_factory=dict)
-    grid: Grid | None = None
-    core_slice: tuple | None = None               # (r0, r1, c0, c1) in grid pixels
-    metrics: dict = field(default_factory=dict)
-
-
-def _raster_record(grid: Grid, rec: ElementRecord) -> np.ndarray:
+def _raster_record(grid: Grid, rec) -> np.ndarray:
+    """`rec` is a record row (itertuples) whose `geom` is decoded parts."""
     if rec.geom_kind in ("polygon", "multipolygon"):
-        return rasterize_polygon(grid, rec.parts)
+        return rasterize_polygon(grid, rec.geom)
     if rec.geom_kind in ("linestring", "multilinestring"):
         # multilinestring: parts are independent paths; rasterize_lines
         # already draws each part as its own path. NOTE the classify rules
@@ -102,16 +109,14 @@ def _raster_record(grid: Grid, rec: ElementRecord) -> np.ndarray:
         # geometry_element.py:95-96), so multilinestrings only reach here via
         # roles that admit them explicitly — then they render correctly
         # instead of silently dropping.
-        return rasterize_lines(grid, rec.parts, max(rec.buf_width, grid.px), rec.cap_style)
+        return rasterize_lines(grid, rec.geom, max(rec.buf_width, grid.px), rec.cap_style)
     return grid.empty()  # point/multipoint carry no area
 
 
-def run_overlay(
-    records: list[ElementRecord],
-    cell_bbox: tuple[float, float, float, float],
-    cfg: OverlayConfig,
-) -> OverlayResult:
-    cxmin, cymin, cxmax, cymax = cell_bbox
+def run_overlay(pdf: pd.DataFrame, cfg: OverlayConfig) -> pd.DataFrame:
+    """One overlay cell's record rows → its layer rows (`LAYER_SCHEMA`)."""
+    cell = int(pdf["overlay_cell"].iloc[0])
+    cxmin, cymin, cxmax, cymax = (float(v[0]) for v in cell_bbox(np.array([cell])))
     bxmin, bymin, bxmax, bymax = cfg.bbox
     # analysis window = (cell + margin) ∩ (bbox + margin)
     wxmin = max(cxmin - cfg.margin, bxmin - cfg.margin)
@@ -125,16 +130,16 @@ def run_overlay(
     wymin = np.floor(wymin / cfg.px) * cfg.px
     wxmax = np.ceil(wxmax / cfg.px) * cfg.px
     wymax = np.ceil(wymax / cfg.px) * cfg.px
-    res = OverlayResult()
     if wxmax <= wxmin or wymax <= wymin:
-        return res
+        return pd.DataFrame([], columns=_COLUMNS)
     grid = Grid.from_bbox(wxmin, wymin, wxmax, wymax, cfg.px)
-    res.grid = grid
     px = cfg.px
-    records = sorted(records, key=lambda r: (r.element_id, r.role))
+    pdf = pdf.sort_values(["element_id", "role"])
+    access = {c: pdf[c].where(pdf[c].notna(), None) for c in ("access_tags", "assumed_access")}
+    pdf = pdf.assign(geom=[np_parts(g) for g in pdf["geom"]], **access)
 
-    by_role: dict[str, list[ElementRecord]] = {}
-    for r in records:
+    by_role: dict[str, list] = {}
+    for r in pdf.itertuples(index=False):
         by_role.setdefault(r.role, []).append(r)
 
     # --- rasterize layers --------------------------------------------------
@@ -169,7 +174,7 @@ def run_overlay(
     # --- A7: inaccessible enclosed areas ------------------------------------
     barrier_lines = grid.empty()
     for r in by_role.get("barrier_inacc", ()):
-        barrier_lines |= rasterize_lines(grid, r.parts, max(0.002, px), "square")
+        barrier_lines |= rasterize_lines(grid, r.geom, max(0.002, px), "square")
     hull = barrier_lines | buildings
     enclosed_masks: list[np.ndarray] = []
     if hull.any():
@@ -184,10 +189,7 @@ def run_overlay(
 
     # --- J4-J6: access transfer to access-null elements ---------------------
     # (write-once: tags access wins; only null-access elements are affected)
-    poly_like = [
-        (r, m)
-        for r, m in list(zip(elem_recs, elem_masks)) + list(zip(ped_recs, ped_masks))
-    ]
+    poly_like = list(zip(elem_recs, elem_masks)) + list(zip(ped_recs, ped_masks))
     elem_access_no_portion: list[np.ndarray | None] = []
     dropped_enclosed: set[int] = set()
     for r, m in poly_like:
@@ -206,8 +208,6 @@ def run_overlay(
                 if ea > 0 and m_area > 0 and ia / ea >= OVERLAP_THRESHOLD and ia / m_area >= OVERLAP_THRESHOLD:
                     portion = m.copy()
                     dropped_enclosed.add(i)
-        elif r.access_tags is None and enclosed_union.any() and not m.any():
-            portion = None
         elem_access_no_portion.append(portion)
 
     # --- J7: crop surviving enclosed areas by element polygons --------------
@@ -264,10 +264,10 @@ def run_overlay(
     bld_pieces: list[np.ndarray] = []
     for r in by_role.get("building", ()):
         if r.geom_kind in ("polygon", "multipolygon"):
-            for ring in r.parts:
+            for ring in r.geom:
                 bld_pieces.extend(boundary_band_pieces(ring, ped_width, "mitre"))
         elif r.geom_kind in ("linestring", "multilinestring"):
-            for path in r.parts:
+            for path in r.geom:
                 bld_pieces.extend(buffer_line_pieces(path, ped_width, "round", "mitre"))
     croppers |= buildings | pieces_mask(grid, bld_pieces) | platforms
     croppers_smooth = close(croppers, 0.3 / px)
@@ -368,7 +368,7 @@ def run_overlay(
     c1 = min(grid.w, int(np.round(gx1[0])))
     r1 = min(grid.h, int(np.round(gy1[0])))
     if c1 <= c0 or r1 <= r0:
-        return res
+        return pd.DataFrame([], columns=_COLUMNS)
     core = grid.empty()
     core[r0:r1, c0:c1] = True
     if cfg.bbox_ring is not None:
@@ -392,28 +392,21 @@ def run_overlay(
             final[key] = undef
 
     # --- vectorize + emit ------------------------------------------------------
-    total_area = 0.0
-    for (c, a), m in sorted(final.items()):
-        polys = vectorize_mask(grid, m)
-        # NO lossy ring simplification here: neighboring categories share
-        # boundary chains, and per-ring DP would move the two sides
-        # independently — breaking the layer's partition-of-space invariant
-        # (overlaps/gaps at category seams). vectorize_mask's exact collinear
-        # collapse is the only safe reduction; vector kernels downstream
-        # prune edges per cell window instead (geo/kernels.py
-        # points_in_polygon edge filter).
-        rings = [ring for poly in polys for ring in poly]
-        area = mask_area(m, px)
-        total_area += area
-        res.rows.append({"space_category": c, "access": a, "parts": rings, "area": area})
-        res.masks[(c, a)] = m
-    res.core_slice = (r0, r1, c0, c1)
+    # NO lossy ring simplification here: neighboring categories share
+    # boundary chains, and per-ring DP would move the two sides
+    # independently — breaking the layer's partition-of-space invariant
+    # (overlaps/gaps at category seams). vectorize_mask's exact collinear
+    # collapse is the only safe reduction; vector kernels downstream
+    # prune edges per cell window instead (geo/kernels.py
+    # points_in_polygon edge filter).
+    classes = sorted(final.items())
+    areas = [mask_area(m, px) for _, m in classes]
     core_area = mask_area(core, px)
-    res.metrics = {
-        "core_area": core_area,
-        "covered_area": total_area,
-        "completeness_gap": core_area - total_area,  # A6: must be ~0
-        "n_enclosed": len(surviving_enclosed),
-        "n_records": len(records),
-    }
-    return res
+    gap = core_area - sum(areas)  # A6: must be ~0
+    ox, oy = grid.ox + c0 * px, grid.oy + r0 * px
+    rows = []
+    for ((c, a), m), area in zip(classes, areas):
+        rings = [ring.tolist() for poly in vectorize_mask(grid, m) for ring in poly]
+        mask = np.packbits(m[r0:r1, c0:c1], axis=None).tobytes()
+        rows.append((cell, c, a, rings, area, core_area, gap, mask, c1 - c0, r1 - r0, ox, oy, px))
+    return pd.DataFrame(rows, columns=_COLUMNS)

@@ -4,9 +4,12 @@ Mirrors the reference's single entry point
 (data_analysis/full_data_analysis.py:22-187) stage by stage, but as a lazy
 DataFrame program: classification is pure Catalyst expressions, the barrier
 join is a cell-bucketed equi-join (operators/barriers.py), and the entire
-geometry tail (J3-J11) runs as ONE per-cell grouped-map kernel
-(operators/overlay_core.py) — one shuffle on the overlay cell key instead of
-the reference's nine sequential global overlay passes.
+geometry tail (J3-J11) runs as ONE per-cell grouped-map kernel — one
+shuffle on the overlay cell key instead of the reference's nine sequential
+global overlay passes. `overlay_stage` hands each cell's group of record
+rows straight to operators/overlay_core.run_overlay, which returns the
+cell's layer rows in its own `LAYER_SCHEMA`; this module knows neither the
+kernel's record decoding nor its row layout.
 
 Scale notes (SURVEY.md §3.2): stage boundaries are shuffles on
 `overlay_cell`; elements are exploded onto the cells their buffered bbox
@@ -21,21 +24,17 @@ buffering is deferred into the kernel (raster): no vector buffer.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..cells.grid import cell_bbox as cell_bbox_np
 from ..config import VIENNA, RegionalConfig
 from ..functions import classify
 from ..functions import predicates as P
-from ..functions.geometry import GEOM_TYPE, bbox_expr, cover_expr
-from ..geo.arrowgeom import np_parts
+from ..functions.geometry import bbox_expr, cover_expr
 from ..geo.laea import laea_forward
 from ..operators import clean
 from ..operators.barriers import interpret_barriers
-from ..operators.overlay_core import ElementRecord, OverlayConfig, run_overlay
+from ..operators.overlay_core import LAYER_SCHEMA, OverlayConfig, run_overlay
 from ..session import pin
 
 OVERLAY_RES_DEFAULT = 10  # 256 m cells
@@ -147,29 +146,9 @@ def build_overlay_records(classified: DataFrame, region: RegionalConfig | None =
     return records
 
 
-_OVERLAY_OUT = T.StructType(
-    [
-        T.StructField("overlay_cell", T.LongType()),
-        T.StructField("space_category", T.StringType()),
-        T.StructField("access", T.StringType()),
-        T.StructField("geom", GEOM_TYPE),
-        T.StructField("area", T.DoubleType()),
-        T.StructField("core_area", T.DoubleType()),
-        T.StructField("completeness_gap", T.DoubleType()),
-        # the row's class mask over the kernel's core window (np.packbits,
-        # row-major), origin (ox, oy) on the global px lattice
-        T.StructField("mask", T.BinaryType()),
-        T.StructField("mask_w", T.IntegerType()),
-        T.StructField("mask_h", T.IntegerType()),
-        T.StructField("ox", T.DoubleType()),
-        T.StructField("oy", T.DoubleType()),
-        T.StructField("px", T.DoubleType()),
-    ]
-)
-
-
 def overlay_stage(records: DataFrame, cfg: OverlayConfig, overlay_res: int = OVERLAY_RES_DEFAULT) -> DataFrame:
-    """Explode records onto overlay cells, run the kernel per cell.
+    """Explode records onto overlay cells; `run_overlay` turns each cell's
+    group into its layer rows (`LAYER_SCHEMA`).
 
     Each layer row carries its vector rings (`geom`) and the raster mask
     they trace (`mask` … `px`, cropped to the cell's core window): the one
@@ -189,39 +168,7 @@ def overlay_stage(records: DataFrame, cfg: OverlayConfig, overlay_res: int = OVE
             )
         ),
     ).drop("_bbox")
-
-    def _run(pdf: pd.DataFrame) -> pd.DataFrame:
-        cell = int(pdf["overlay_cell"].iloc[0])
-        xmin, ymin, xmax, ymax = (float(v[0]) for v in cell_bbox_np(np.array([cell])))
-        recs_list = [
-            ElementRecord(
-                element_id=int(row["element_id"]),
-                role=row["role"],
-                geom_kind=row["geom_kind"],
-                parts=np_parts(row["geom"]),
-                space_category=row["space_category"],
-                access_tags=row["access_tags"] if isinstance(row["access_tags"], str) else None,
-                assumed_access=row["assumed_access"] if isinstance(row["assumed_access"], str) else None,
-                buf_width=float(row["buf_width"]),
-                cap_style=row["cap_style"],
-            )
-            for _, row in pdf.iterrows()
-        ]
-        result = run_overlay(recs_list, (xmin, ymin, xmax, ymax), cfg)
-        out = []
-        if result.rows:
-            r0, r1, c0, c1 = result.core_slice
-            ox, oy = result.grid.ox + c0 * cfg.px, result.grid.oy + r0 * cfg.px
-        for r in result.rows:
-            mask = result.masks[(r["space_category"], r["access"])][r0:r1, c0:c1]
-            out.append((
-                cell, r["space_category"], r["access"], [p.tolist() for p in r["parts"]], r["area"],
-                result.metrics.get("core_area", 0.0), result.metrics.get("completeness_gap", 0.0),
-                np.packbits(mask, axis=None).tobytes(), c1 - c0, r1 - r0, ox, oy, cfg.px,
-            ))
-        return pd.DataFrame(out, columns=_OVERLAY_OUT.fieldNames())
-
-    return recs.groupBy("overlay_cell").applyInPandas(_run, _OVERLAY_OUT)
+    return recs.groupBy("overlay_cell").applyInPandas(lambda pdf: run_overlay(pdf, cfg), LAYER_SCHEMA)
 
 
 def run_pipeline(

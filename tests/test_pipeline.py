@@ -257,3 +257,39 @@ def test_overlay_record_roles(spark):
     }
     assert set(ids["passage"]) <= set(ids["road"]) | set(ids["pedestrian"])
     assert set(ids["platform"]) <= set(ids["element"])
+
+
+def test_run_overlay_kernel_without_spark():
+    """The overlay kernel on a hand-built group frame, no Spark session: one
+    res-8 cell holding a 40 m building and a 6 m road line crossing it. Each
+    row's mask holds exactly its area, the masks partition the cell's core,
+    and the building keeps every pixel the road crosses."""
+    import pandas as pd
+
+    from osm_public_space_mapper_spark.cells.grid import cell_bbox, encode_cells
+    from osm_public_space_mapper_spark.operators.overlay_core import run_overlay
+
+    px = 1.0
+    cell = int(encode_cells(np.array([4_800_100.0]), np.array([2_800_100.0]), 8)[0])
+    x0, y0, x1, y1 = (float(v[0]) for v in cell_bbox(np.array([cell])))
+    cx, cy = (x0 + x1) / 2, (y0 + y1) / 2
+    square = [[cx - 20, cy - 20], [cx + 20, cy - 20], [cx + 20, cy + 20], [cx - 20, cy + 20], [cx - 20, cy - 20]]
+    base = dict(overlay_cell=cell, access_tags=None, assumed_access=None, cap_style="square")
+    pdf = pd.DataFrame([
+        dict(base, element_id=2, role="road", geom_kind="linestring", geom=[[[x0 + 100, cy], [x1 - 100, cy]]],
+             space_category="road", buf_width=6.0),
+        dict(base, element_id=1, role="building", geom_kind="polygon", geom=[square],
+             space_category="building", buf_width=0.0),
+    ])
+    rows = run_overlay(pdf, OverlayConfig(px=px, margin=16.0, bbox=(x0, y0, x1, y1)))
+    masks = {}
+    for r in rows.itertuples(index=False):
+        m = np.unpackbits(np.frombuffer(r.mask, np.uint8), count=r.mask_w * r.mask_h).reshape(r.mask_h, r.mask_w)
+        assert m.sum() * px * px == r.area
+        masks[(r.space_category, r.access)] = m.astype(bool)
+    building, road = masks[("building", "undefined")], masks[("traffic area", "no")]
+    assert (sum(m.astype(int) for m in masks.values()) <= 1).all()
+    assert rows["area"].sum() == rows["core_area"].iloc[0] == (x1 - x0) * (y1 - y0)
+    assert (rows["completeness_gap"] == 0).all()
+    assert building.sum() * px * px == 40 * 40
+    assert road.any() and not (building & road).any()
