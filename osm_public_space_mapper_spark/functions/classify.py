@@ -101,16 +101,6 @@ def set_traffic_space_type(df: DataFrame) -> DataFrame:
 
 from ..config import VIENNA, RegionalConfig  # noqa: E402  (regional width tables)
 
-# Back-compat aliases: the Vienna tables are also the reference's literal
-# constants; swap regions by passing a RegionalConfig, not by editing these.
-HIGHWAY_DEFAULT_WIDTHS = VIENNA.highway_default_widths
-CYCLEWAY_DEFAULT_WIDTHS = VIENNA.cycleway_default_widths
-HIGHWAY_TYPES_WITH_PARKING = list(VIENNA.highway_types_with_parking)
-DEFAULT_PARKING_WIDTH = VIENNA.default_parking_width
-PEDESTRIAN_WAY_DEFAULT_WIDTH = VIENNA.pedestrian_way_default_width
-TRAM_WIDTH = VIENNA.tram_width
-TRAIN_WIDTH = VIENNA.train_width
-
 
 def road_width(region: RegionalConfig | None = None) -> Column:
     """Estimated road width expression under `region`'s width tables

@@ -156,25 +156,6 @@ def rasterize_lines(grid: Grid, paths: list[np.ndarray], width: float, cap_style
     return mask
 
 
-def _structuring(radius_px: float) -> np.ndarray:
-    r = int(np.ceil(radius_px))
-    if r <= 0:
-        return np.ones((1, 1), dtype=bool)
-    yy, xx = np.mgrid[-r : r + 1, -r : r + 1]
-    return (xx * xx + yy * yy) <= radius_px * radius_px
-
-
-def _binary_conv(mask: np.ndarray, kern: np.ndarray) -> np.ndarray:
-    """FFT 'same' convolution count of true neighbours under the kernel."""
-    kh, kw = kern.shape
-    ph, pw = mask.shape[0] + kh - 1, mask.shape[1] + kw - 1
-    fa = np.fft.rfft2(mask.astype(np.float32), (ph, pw))
-    fb = np.fft.rfft2(kern.astype(np.float32), (ph, pw))
-    conv = np.fft.irfft2(fa * fb, (ph, pw))
-    oy, ox = kh // 2, kw // 2
-    return conv[oy : oy + mask.shape[0], ox : ox + mask.shape[1]]
-
-
 def _dilate_1d(mask: np.ndarray, r: int, axis: int) -> np.ndarray:
     """Binary dilation by a length-(2r+1) segment along `axis` (vectorized
     sliding-window OR)."""
@@ -187,12 +168,14 @@ def _dilate_1d(mask: np.ndarray, r: int, axis: int) -> np.ndarray:
     return win.any(axis=-1)
 
 
-def _dilate_small(mask: np.ndarray, radius_px: float) -> np.ndarray:
-    # disc = union over dy of row-shifted horizontal segments of width rx(dy);
-    # only rows with |dy| ≤ radius belong to the disc
+def dilate(mask: np.ndarray, radius_px: float) -> np.ndarray:
+    """Binary dilation by the disc dx² + dy² ≤ radius_px²: the union over
+    |dy| ≤ radius of row-shifted horizontal segments of half-width
+    floor(sqrt(radius² − dy²))."""
+    if radius_px <= 0 or not mask.any():
+        return mask.copy()
     r = int(np.floor(radius_px))
-    base = _dilate_1d(mask, int(np.floor(radius_px)), 1)  # dy = 0
-    out = base.copy()
+    out = _dilate_1d(mask, r, 1).copy()  # dy = 0
     h = mask.shape[0]
     for dy in range(1, r + 1):
         rx = np.sqrt(radius_px * radius_px - dy * dy)
@@ -202,24 +185,10 @@ def _dilate_small(mask: np.ndarray, radius_px: float) -> np.ndarray:
     return out
 
 
-_FFT_RADIUS_CUTOFF = 24  # px; above this the FFT path wins
-
-
-def dilate(mask: np.ndarray, radius_px: float) -> np.ndarray:
-    if radius_px <= 0 or not mask.any():
-        return mask.copy()
-    if radius_px <= _FFT_RADIUS_CUTOFF:
-        return _dilate_small(mask, radius_px)
-    return _binary_conv(mask, _structuring(radius_px)) > 0.5
-
-
 def erode(mask: np.ndarray, radius_px: float) -> np.ndarray:
     if radius_px <= 0:
         return mask.copy()
-    if radius_px <= _FFT_RADIUS_CUTOFF:
-        return ~_dilate_small(~mask, radius_px)
-    kern = _structuring(radius_px)
-    return _binary_conv(mask, kern) > kern.sum() - 0.5
+    return ~dilate(~mask, radius_px)
 
 
 def close(mask: np.ndarray, r: float) -> np.ndarray:

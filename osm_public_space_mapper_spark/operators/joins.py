@@ -26,6 +26,8 @@ from ..fixtures.elements import BBOX_4326
 from ..functions.geometry import bbox_expr, cover_expr
 from ..geo.arrowgeom import np_parts
 from ..geo.kernels import points_in_polygon
+from ..streaming.geofence import _mask_join
+from .tiling import subdivide_tiles
 
 JOIN_RES_DEFAULT = 12  # 64 m join buckets
 KNN_RES_DEFAULT = 9    # 512 m kNN candidate cells
@@ -49,8 +51,8 @@ def with_geotag(images: DataFrame) -> DataFrame:
     )
 
 
-def with_cells(images: DataFrame, res: int = JOIN_RES_DEFAULT, coarse_res: int = 7) -> DataFrame:
-    """Attach join cell + coarse partition-pruning cell (cell7).
+def with_cells(images: DataFrame, res: int = JOIN_RES_DEFAULT) -> DataFrame:
+    """Attach the join cell ``cell`` at `res`.
 
     Precondition: projected ``x, y`` are present (``project_points`` — every
     caller already runs it first). Encoding from x/y in pure Catalyst
@@ -59,11 +61,7 @@ def with_cells(images: DataFrame, res: int = JOIN_RES_DEFAULT, coarse_res: int =
     ArrowEvalPython node from every image-table build."""
     from ..functions.geometry import cell_expr
 
-    cell = cell_expr(res)
-    cell7 = cell_expr(coarse_res)
-    return images.withColumn("cell", cell(F.col("x"), F.col("y"))).withColumn(
-        "cell7", cell7(F.col("x"), F.col("y"))
-    )
+    return images.withColumn("cell", cell_expr(res)(F.col("x"), F.col("y")))
 
 
 def explode_layer_to_cells(layer: DataFrame, res: int = JOIN_RES_DEFAULT) -> DataFrame:
@@ -129,89 +127,12 @@ def pip_join(images: DataFrame, layer: DataFrame, res: int = JOIN_RES_DEFAULT) -
     return imgs.groupBy("cell").cogroup(polys.groupBy("cell")).applyInPandas(_refine, _PIP_OUT)
 
 
-_TILE_SCHEMA = T.StructType(
-    [
-        T.StructField("tile_cell", T.LongType()),
-        T.StructField("space_category", T.StringType()),
-        T.StructField("access", T.StringType()),
-        T.StructField("mask", T.BinaryType()),
-        T.StructField("mask_w", T.IntegerType()),
-        T.StructField("mask_h", T.IntegerType()),
-        T.StructField("ox", T.DoubleType()),
-        T.StructField("oy", T.DoubleType()),
-        T.StructField("px", T.DoubleType()),
-        T.StructField("mask_hash", T.StringType()),
-        T.StructField("area", T.DoubleType()),
-    ]
-)
-
-
-def subdivide_tiles(tiles: DataFrame, group_res: int) -> DataFrame:
-    """Cut each cell's class mask into its descendants' masks at `group_res`.
-
-    The one slicer from a mask row (``tile_cell``, class, ``mask``,
-    ``mask_w``, ``mask_h``, origin ``ox, oy``, ``px``) to tile rows: it cuts
-    the layer's kernel masks into tiles (``tiling.rasterize_tiles``) and the
-    tiles into the raster PIP join's groups. That join's parallelism is
-    bounded by its group count, so slicing res-10 tiles to res 13 multiplies
-    it by 4^3 at constant payload.
-
-    A child cell [cx0, cx1) × [cy0, cy1) takes the pixel window
-    floor((cx0 − ox)/px) … ceil((cx1 − ox)/px), the same in y, relative to
-    the row's own origin. The window is zero-padded where it runs past the
-    source mask (a kernel mask is cropped to the analysis bbox), and when
-    `px` does not divide the child side it also holds the pixels that
-    straddle the child's edges (they appear in both neighbours). Empty
-    slices are dropped; each slice carries its ``mask_hash`` (sha1 of the
-    packed bytes) and ``area`` (m²)."""
-
-    def _slice(batches):
-        import hashlib
-
-        from ..cells.grid import cell_side, decode_cells, pack_cells
-        from ..geo.raster import mask_area
-
-        side = cell_side(group_res)
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                w, h, px = int(row.mask_w), int(row.mask_h), float(row.px)
-                mask = np.unpackbits(np.frombuffer(row.mask, dtype=np.uint8), count=w * h).reshape(h, w)
-                res, ix, iy = decode_cells(np.array([row.tile_cell], dtype=np.int64))
-                shift = group_res - int(res[0])
-                k = np.arange(1 << shift, dtype=np.int64)
-                gx, gy = (ix[0] << shift) | k, (iy[0] << shift) | k
-                x0s = np.floor((gx * side - row.ox) / px).astype(int)
-                x1s = np.ceil(((gx + 1) * side - row.ox) / px).astype(int)
-                y0s = np.floor((gy * side - row.oy) / px).astype(int)
-                y1s = np.ceil(((gy + 1) * side - row.oy) / px).astype(int)
-                for cx, x0, x1 in zip(gx, x0s, x1s):
-                    for cy, y0, y1 in zip(gy, y0s, y1s):
-                        ya, ye, xa, xe = max(y0, 0), min(y1, h), max(x0, 0), min(x1, w)
-                        if ye <= ya or xe <= xa or not mask[ya:ye, xa:xe].any():
-                            continue
-                        sub = np.zeros((y1 - y0, x1 - x0), dtype=np.uint8)
-                        sub[ya - y0:ye - y0, xa - x0:xe - x0] = mask[ya:ye, xa:xe]
-                        packed = np.packbits(sub, axis=None).tobytes()
-                        out.append((
-                            int(pack_cells(group_res, cx, cy)), row.space_category, row.access, packed,
-                            int(x1 - x0), int(y1 - y0), row.ox + x0 * px, row.oy + y0 * px, px,
-                            hashlib.sha1(packed).hexdigest(), mask_area(sub, px),
-                        ))
-            yield pd.DataFrame(out, columns=_TILE_SCHEMA.fieldNames())
-
-    return tiles.select(
-        "tile_cell", "space_category", "access", "mask", "mask_w", "mask_h", "ox", "oy", "px"
-    ).mapInPandas(_slice, _TILE_SCHEMA)
-
-
 def pip_join_raster(
     images: DataFrame,
     tiles: DataFrame,
     tile_res: int = 10,
     group_res: int = 13,
     salt: int = 0,
-    id_col: str = "image_id",
 ) -> DataFrame:
     """J12 batch lane: assign images via per-subcell class-mask lookup.
 
@@ -234,14 +155,10 @@ def pip_join_raster(
     line (measure zero) — verified against both the vector join and the
     numpy brute force in tests.
 
-    Output: ``image_id`` (``id_col`` renamed), ``space_category, access,
-    tile_cell``."""
-    from ..streaming.geofence import _mask_join
-
+    Output: ``image_id, space_category, access, tile_cell``."""
     if group_res > tile_res:
         tiles = subdivide_tiles(tiles, group_res)
-    out = _mask_join(images, tiles, group_res, id_col, (), salt=salt)
-    return out.withColumnRenamed(id_col, "image_id")
+    return _mask_join(images, tiles, group_res, salt=salt)
 
 
 def project_points(images: DataFrame) -> DataFrame:

@@ -54,6 +54,7 @@ from ..geo.raster import (
     rasterize_polygon,
     vectorize_mask,
 )
+from .tiling import MASK_FIELDS, pack
 
 OVERLAP_THRESHOLD = 0.95          # analyse_access.py:245
 MIN_ENCLOSED_AREA = 2.0           # analyse_access.py:331
@@ -85,14 +86,8 @@ LAYER_SCHEMA = T.StructType(
         T.StructField("area", T.DoubleType()),
         T.StructField("core_area", T.DoubleType()),
         T.StructField("completeness_gap", T.DoubleType()),
-        # the row's class mask over the kernel's core window (np.packbits,
-        # row-major), origin (ox, oy) on the global px lattice
-        T.StructField("mask", T.BinaryType()),
-        T.StructField("mask_w", T.IntegerType()),
-        T.StructField("mask_h", T.IntegerType()),
-        T.StructField("ox", T.DoubleType()),
-        T.StructField("oy", T.DoubleType()),
-        T.StructField("px", T.DoubleType()),
+        # the row's class mask over the kernel's core window
+        *MASK_FIELDS,
     ]
 )
 _COLUMNS = LAYER_SCHEMA.fieldNames()
@@ -407,6 +402,5 @@ def run_overlay(pdf: pd.DataFrame, cfg: OverlayConfig) -> pd.DataFrame:
     rows = []
     for ((c, a), m), area in zip(classes, areas):
         rings = [ring.tolist() for poly in vectorize_mask(grid, m) for ring in poly]
-        mask = np.packbits(m[r0:r1, c0:c1], axis=None).tobytes()
-        rows.append((cell, c, a, rings, area, core_area, gap, mask, c1 - c0, r1 - r0, ox, oy, px))
+        rows.append((cell, c, a, rings, area, core_area, gap, pack(m[r0:r1, c0:c1]), c1 - c0, r1 - r0, ox, oy, px))
     return pd.DataFrame(rows, columns=_COLUMNS)

@@ -6,10 +6,9 @@ aggregations the engine additionally provides *explicit* salting: the group
 key is widened with a salt derived from a uniform hash, partials are
 aggregated per (key, salt), then finals per key — two shuffles, both uniform.
 
-`salted_count` applies the pattern to count(*), `merged_layer` to the
-geometry-union aggregation A1 (clean_data.py:282-303):
-ring lists combine per (category, access, salt), then concatenate per
-(category, access) — unions of disjoint per-cell geometry are exact
+`merged_layer` applies the pattern to the geometry-union aggregation A1
+(clean_data.py:282-303): ring lists combine per (category, access, salt),
+then concatenate per (category, access) — unions of disjoint per-cell geometry are exact
 concatenations, so the two-stage result equals the single-stage one.
 """
 
@@ -25,13 +24,6 @@ def with_salt(df: DataFrame, n_buckets: int = DEFAULT_SALT_BUCKETS, cols: list[s
     """Deterministic salt column from a hash of all (or given) columns."""
     basis = [F.col(c) for c in (cols or df.columns)]
     return df.withColumn("_salt", F.pmod(F.xxhash64(*basis), F.lit(n_buckets)))
-
-
-def salted_count(df: DataFrame, key_cols: list[str], n_buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:
-    """count(*) per key via salted two-stage aggregation."""
-    salted = with_salt(df, n_buckets)
-    partial = salted.groupBy(*key_cols, "_salt").agg(F.count("*").alias("_partial"))
-    return partial.groupBy(*key_cols).agg(F.sum("_partial").alias("n"))
 
 
 def merged_layer(layer: DataFrame, n_buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:

@@ -1,14 +1,20 @@
-"""Streaming surface — intentionally empty in v0.
+"""Structured Streaming surface.
 
 The reference is strictly one-shot batch (SURVEY.md §2.7: no watermarks,
-windows, or stateful operators exist anywhere in it), and the north rule's
-"resumable from checkpoint with per-partition lineage" maps to batch
-incremental processing, implemented in tables/icelite.py:
+windows, or stateful operators exist anywhere in it), so every module here is
+engine-side surface; tests/test_streaming.py drives each through an
+availableNow trigger:
 
-  - per-partition lineage (row count + content hash) in snapshot manifests
-  - `commit_resumable` anti-joins already-committed partitions → exact resume
+  ingest    image rows → geotag → project → res-7 cell bucket → Icelite append
+            (foreachBatch), with per-partition lineage
+  geofence  the J12 point-in-mask join (`pip_join_expr`); the same operator
+            runs on a batch or a streaming points frame
+  dedup     watermarked exact dedup, windowed unique counts and near-dup
+            tombstones over 64-bit fingerprints
+  windows   watermarked event-time window counts and stateful
+            sessionization
 
-A Structured Streaming ingest (readStream → cell-encode → Icelite append)
-would layer cleanly on top of the same partition keys; it is deferred until a
-streaming semantic actually exists to replicate.
+Batch resume ("resumable from checkpoint with per-partition lineage") stays
+in tables/icelite.py: `commit_resumable` anti-joins already-committed
+partitions.
 """

@@ -2,21 +2,21 @@
 
 Reference PIP semantics: ``data_analysis/analyse_traffic_area.py``
 point-in-space classification; see operators/joins.py header for the J-map.
-``_mask_join`` is the single mask-bit lookup behind both fast lanes:
+``_mask_join`` is the single mask-bit lookup, with one entry point per
+distribution:
 
-* ``pip_join_expr`` / ``geofence_stream`` broadcast the small subdivided
-  mask side (the latency lane and the streaming front); and
+* ``pip_join_expr`` broadcasts the small subdivided mask side (the latency
+  lane, batch or streaming); and
 * ``joins.pip_join_raster`` shuffle-hash joins on ``(tile_cell, _salt)``
   (the broadcast-free batch lane, zero Exchange on bucketed tables).
 
-The two differ only in how the one join is distributed. The bit test is
-``element_at``/``shiftrightunsigned`` over the packed mask as 64-bit words
-(``with_mask_words``), so:
+The bit test is ``element_at``/``shiftrightunsigned`` over the packed mask
+as 64-bit words (``with_mask_words``), so:
 
 * the join adds no Python node: over stored inputs the whole plan is
   whole-stage-codegen JVM code; and
-* the plan holds only stateless projections + one equi-join, so the SAME
-  operator runs unchanged under Structured Streaming: a stream of
+* the plan holds only stateless projections + one equi-join, so
+  ``pip_join_expr`` runs unchanged under Structured Streaming: a stream of
   geo-tagged image rows is geofenced against the classified public-space
   layer with no state store and no watermark.
 
@@ -27,24 +27,25 @@ tens of bytes). Each matched point row carries only its OWN cell's mask
 words through the join projection, so per-row payload is bounded by the
 subcell mask size, independent of polygon complexity.
 
-The bit indexing is the row-major, MSB-first ``np.packbits`` layout of
-``subdivide_tiles``: ``bit = mask[cy*mask_w + cx]`` with
-``cx = floor((x-ox)/px)``, ``cy = floor((y-oy)/px)``; it is checked against
-the vector ``pip_join`` in tests/test_image_joins.py.
+The bit indexing is the row-major, MSB-first layout of
+``operators/tiling.pack``: ``bit = mask[cy*mask_w + cx]`` with
+``cx = floor((x-ox)/px)``, ``cy = floor((y-oy)/px)``; it is checked pixel
+by pixel against ``tiling.pack`` in tests/test_streaming.py and against the
+vector ``pip_join`` in tests/test_image_joins.py.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-__all__ = ["mask_word_bit", "with_mask_words", "pip_join_expr", "geofence_stream"]
+from ..operators.tiling import MASK_COLS
 
-_MASK_COLS = ("tile_cell", "space_category", "access", "mask", "mask_w", "mask_h", "ox", "oy", "px")
+__all__ = ["mask_word_bit", "with_mask_words", "pip_join_expr"]
 
 
 def with_mask_words(tiles_sub: DataFrame) -> DataFrame:
     """Attach ``mask_words array<long>``: the packed mask bit stream as
-    big-endian 64-bit words (bit i of the row-major MSB-first np.packbits
+    big-endian 64-bit words (bit i of the row-major MSB-first ``tiling.pack``
     stream is bit ``63 - i%64`` of word ``i//64``; a short last word is
     zero-padded on the right), in one Catalyst projection.
 
@@ -94,14 +95,7 @@ def _with_pixel_coords(joined: DataFrame, x: str, y: str) -> DataFrame:
     ).withColumn("_cy", F.expr(f"cast(floor(({y} - oy) / px) AS int)"))
 
 
-def _mask_join(
-    points: DataFrame,
-    tiles_sub: DataFrame,
-    group_res: int,
-    id_col: str,
-    passthrough: tuple[str, ...],
-    salt: int | None,
-) -> DataFrame:
+def _mask_join(points: DataFrame, tiles_sub: DataFrame, group_res: int, salt: int | None) -> DataFrame:
     """The J12 mask-bit join: points' ``tile_cell`` (+ ``_salt``) equi-joined
     to mask rows at ``group_res``, filtered on ``mask_word_bit() == 1``.
 
@@ -110,65 +104,46 @@ def _mask_join(
     cell into ``salt`` sub-groups (points hash-distribute over ``_salt``,
     mask rows replicate once per salt id). ``_salt`` is int on both sides.
     A pre-existing ``tile_cell`` on ``points`` is reused, so tables bucketed
-    by it keep their stored partitioning (zero Exchange when unsalted)."""
+    by it keep their stored partitioning (zero Exchange when unsalted).
+
+    Output: one row per (point, matching class mask): ``image_id,
+    space_category, access, tile_cell`` (layer masks are disjoint, so in
+    practice exactly one row per covered point)."""
     from ..functions.geometry import cell_expr
 
     if "tile_cell" not in points.columns:
         points = points.withColumn("tile_cell", cell_expr(group_res)(F.col("x"), F.col("y")))
-    points = points.select(id_col, "x", "y", "tile_cell", *passthrough)
-    right = with_mask_words(tiles_sub.select(*_MASK_COLS)).drop("mask")
+    points = points.select("image_id", "x", "y", "tile_cell")
+    right = with_mask_words(tiles_sub.select(*MASK_COLS)).drop("mask")
     keys = ["tile_cell"]
     if salt is None:
         right = F.broadcast(right)
     else:
         if salt > 0:
-            points = points.withColumn("_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt)).cast("int"))
+            points = points.withColumn("_salt", F.pmod(F.xxhash64(F.col("image_id")), F.lit(salt)).cast("int"))
             right = right.withColumn("_salt", F.explode(F.array(*[F.lit(i).cast("int") for i in range(salt)])))
             keys = ["tile_cell", "_salt"]
         right = right.hint("shuffle_hash")
     joined = _with_pixel_coords(points.join(right, keys, "inner"), "x", "y")
     hit = joined.where(mask_word_bit() == 1)
-    return hit.select(id_col, "space_category", "access", "tile_cell", *passthrough)
+    return hit.select("image_id", "space_category", "access", "tile_cell")
 
 
-def pip_join_expr(
-    points: DataFrame,
-    tiles_sub: DataFrame,
-    group_res: int = 13,
-    id_col: str = "image_id",
-    passthrough: tuple[str, ...] = (),
-) -> DataFrame:
-    """Point-in-mask assignment with the mask side broadcast.
+def pip_join_expr(points: DataFrame, tiles_sub: DataFrame, group_res: int = 13) -> DataFrame:
+    """Point-in-mask assignment with the mask side broadcast, in batch or
+    under Structured Streaming.
 
-    ``points`` needs projected ``x, y`` (``project_points``); ``tile_cell``
-    is computed at ``group_res`` if absent.  ``tiles_sub`` must ALREADY be
-    at ``group_res`` granularity (``subdivide_tiles`` output — pass a
-    materialized/stored frame so streaming microbatches don't re-run the
-    subdivision kernel per trigger).
+    ``points`` (a batch or streaming frame) needs ``image_id`` and projected
+    ``x, y`` (``project_points``); ``tile_cell`` is computed at
+    ``group_res`` if absent. ``tiles_sub`` must ALREADY be at ``group_res``
+    granularity (``subdivide_tiles`` output — pass a materialized/stored
+    frame so streaming micro-batches don't re-run the subdivision kernel per
+    trigger). On a stream the join is stream-static and stateless, so any
+    output mode works and equals the batch output exactly
+    (tests/test_streaming.py asserts it through an availableNow memory
+    sink).
 
-    Output: one row per (point, matching class mask): ``id_col,
-    space_category, access, tile_cell`` + ``passthrough`` columns — the
-    same contract as ``pip_join_raster`` (layer masks are disjoint, so in
-    practice exactly one row per covered point).
+    Output: the ``_mask_join`` rows, the same contract as
+    ``joins.pip_join_raster``.
     """
-    return _mask_join(points, tiles_sub, group_res, id_col, passthrough, salt=None)
-
-
-def geofence_stream(
-    points_stream: DataFrame,
-    tiles_sub: DataFrame,
-    group_res: int = 13,
-    id_col: str = "image_id",
-    passthrough: tuple[str, ...] = ("event_time",),
-) -> DataFrame:
-    """Geofence a point stream against the classified layer.
-
-    ``points_stream``: streaming frame with projected ``x, y`` (+ any
-    ``passthrough`` columns, e.g. the event time).  ``tiles_sub``: STATIC
-    subdivided mask frame (read from a stored table; see pip_join_expr
-    note), broadcast like ``pip_join_expr``.  Returns a streaming frame of
-    class assignments — stateless, so any output mode works and batch
-    equality is exact (asserted vs batch ``pip_join_expr`` through an
-    availableNow memory sink in tests/test_streaming.py).
-    """
-    return _mask_join(points_stream, tiles_sub, group_res, id_col, passthrough, salt=None)
+    return _mask_join(points, tiles_sub, group_res, salt=None)

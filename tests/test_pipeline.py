@@ -268,6 +268,7 @@ def test_run_overlay_kernel_without_spark():
 
     from osm_public_space_mapper_spark.cells.grid import cell_bbox, encode_cells
     from osm_public_space_mapper_spark.operators.overlay_core import run_overlay
+    from osm_public_space_mapper_spark.operators.tiling import unpack
 
     px = 1.0
     cell = int(encode_cells(np.array([4_800_100.0]), np.array([2_800_100.0]), 8)[0])
@@ -284,9 +285,9 @@ def test_run_overlay_kernel_without_spark():
     rows = run_overlay(pdf, OverlayConfig(px=px, margin=16.0, bbox=(x0, y0, x1, y1)))
     masks = {}
     for r in rows.itertuples(index=False):
-        m = np.unpackbits(np.frombuffer(r.mask, np.uint8), count=r.mask_w * r.mask_h).reshape(r.mask_h, r.mask_w)
+        m = unpack(r)
         assert m.sum() * px * px == r.area
-        masks[(r.space_category, r.access)] = m.astype(bool)
+        masks[(r.space_category, r.access)] = m
     building, road = masks[("building", "undefined")], masks[("traffic area", "no")]
     assert (sum(m.astype(int) for m in masks.values()) <= 1).all()
     assert rows["area"].sum() == rows["core_area"].iloc[0] == (x1 - x0) * (y1 - y0)

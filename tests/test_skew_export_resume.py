@@ -17,14 +17,12 @@ def layer(fixture_layer):
     return fixture_layer
 
 
-def test_salted_count_equals_plain(spark):
+def test_image_fixture_is_skewed(spark):
+    """The image fixture really is skewed (its hotspot cells, FIXTURES.md):
+    the hottest join cell holds more than 5× the median cell's images."""
     imgs = images_to_spark(spark, generate_images(5000, seed=7, with_pixels=False))
     imgs = joins.with_cells(joins.project_points(joins.with_geotag(imgs)))
-    plain = {r.cell: r.n for r in imgs.groupBy("cell").agg(F.count("*").alias("n")).collect()}
-    salted = {r.cell: r.n for r in skew.salted_count(imgs, ["cell"]).collect()}
-    assert plain == salted
-    # the fixture really is skewed: hottest cell ≫ median
-    counts = sorted(plain.values())
+    counts = sorted(r.n for r in imgs.groupBy("cell").agg(F.count("*").alias("n")).collect())
     assert counts[-1] > 5 * counts[len(counts) // 2]
 
 

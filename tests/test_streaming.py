@@ -504,13 +504,46 @@ def test_mask_words_match_numpy_big_endian(spark):
     assert got[5] == [-(1 << 63)] and got[6] == [-1, -1] and got[7] == []
 
 
+def test_packed_mask_bits_match_catalyst_reader(spark):
+    """The mask row's writer (tiling.pack) and its per-point Catalyst reader
+    (_with_pixel_coords + mask_word_bit over with_mask_words) agree pixel by
+    pixel: every pixel centre of random masks at odd shapes reads back its
+    numpy bit (row-major, MSB first), a point just outside the window reads
+    NULL, and tiling.unpack inverts pack."""
+    import numpy as np
+    from types import SimpleNamespace
+
+    from osm_public_space_mapper_spark.operators.tiling import pack, unpack
+    from osm_public_space_mapper_spark.streaming.geofence import (
+        _with_pixel_coords, mask_word_bit, with_mask_words,
+    )
+
+    rng = np.random.default_rng(13)
+    ox, oy, px = 1000.0, -500.0, 0.25
+    masks = [rng.random((h, w)) < 0.5 for h, w in ((1, 1), (7, 9), (65, 3))]
+    rows, pts = [], []
+    for i, m in enumerate(masks):
+        h, w = m.shape
+        rows.append((i, pack(m), w, h, ox, oy, px))
+        assert (unpack(SimpleNamespace(mask=pack(m), mask_w=w, mask_h=h)) == m).all()
+        pts += [(i, r, c, ox + (c + 0.5) * px, oy + (r + 0.5) * px) for r in range(h) for c in range(w)]
+        pts += [(i, -1, w, ox + (w + 0.5) * px, oy + 0.5 * px)]
+    mrows = spark.createDataFrame(rows, "i int, mask binary, mask_w int, mask_h int, ox double, oy double, px double")
+    points = spark.createDataFrame(pts, "i int, r int, c int, x double, y double")
+    joined = _with_pixel_coords(points.join(with_mask_words(mrows), "i"), "x", "y")
+    got = {(q.i, q.r, q.c): q.bit for q in joined.select("i", "r", "c", mask_word_bit().alias("bit")).collect()}
+    assert len(got) == len(pts)
+    for (i, r, c), bit in got.items():
+        assert bit == (None if r < 0 else int(masks[i][r, c])), (i, r, c, bit)
+
+
 def test_geofence_stream_matches_batch(spark, fixture_layer, tmp_path):
     """The SAME expression plan under Structured Streaming (stream-static
     join, availableNow) emits the identical assignment set."""
     from pyspark.sql import types as T
 
     from osm_public_space_mapper_spark.operators import joins, tiling
-    from osm_public_space_mapper_spark.streaming.geofence import geofence_stream, pip_join_expr
+    from osm_public_space_mapper_spark.streaming.geofence import pip_join_expr
 
     pts = _geofence_points(spark, n=700, seed=29)
     src = tmp_path / "pts"
@@ -534,7 +567,7 @@ def test_geofence_stream_matches_batch(spark, fixture_layer, tmp_path):
         .option("recursiveFileLookup", "true")
         .parquet(str(src))
     )
-    out = geofence_stream(stream, sub, passthrough=())
+    out = pip_join_expr(stream, sub)
     q = (
         out.writeStream.format("memory")
         .queryName("geofence")
