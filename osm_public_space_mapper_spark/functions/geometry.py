@@ -147,7 +147,7 @@ def st_buffer_udf(dist: float, cap_style: str = "round", join_style: str = "roun
     (~2-4× fewer vertices in the shipped payload).
     """
     from ..geo.kernels import simplify_ring
-    from ..geo.offset import boundary_band_pieces, buffer_line_pieces, pieces_mask
+    from ..geo.offset import buffer_pieces, pieces_mask
     from ..geo.raster import Grid, rasterize_polygon, vectorize_mask
 
     half = abs(float(dist))
@@ -184,17 +184,11 @@ def st_buffer_udf(dist: float, cap_style: str = "round", join_style: str = "roun
             w64 = -(-max(1, int(np.ceil((xmax - xmin) / res))) // 64) * 64
             h64 = -(-max(1, int(np.ceil((ymax - ymin) / res))) // 64) * 64
             grid = Grid(xmin, ymin, res, w64, h64)
-            is_line = k in ("linestring", "multilinestring")
-            if is_line:
-                pieces = []
-                for r in rings:
-                    pieces.extend(buffer_line_pieces(r, half, cap_style, join_style))
+            pieces = buffer_pieces(k, rings, half, cap_style, join_style)
+            if k in ("linestring", "multilinestring"):
                 mask = pieces_mask(grid, pieces, out=get_buf(grid.h, grid.w, 0))
             else:
                 mask = rasterize_polygon(grid, rings, out=get_buf(grid.h, grid.w, 0))
-                pieces = []
-                for r in rings:
-                    pieces.extend(boundary_band_pieces(r, half, join_style))
                 band = pieces_mask(grid, pieces, out=get_buf(grid.h, grid.w, 1))
                 if dist > 0:
                     np.logical_or(mask, band, out=mask)

@@ -1,10 +1,13 @@
 """Vector polyline/polygon offset (buffer) kernel — numpy, from scratch.
 
-Closes the engine's last `partial` vs SURVEY.md §2.4: the reference buffers
-shapely-side with explicit cap/join styles (utils/helpers.py:6-22 —
-join_style='mitre' for building croppers; analyse_traffic_area.py:167,208,228
-— cap_style square/flat on road/rail/pedestrian lines), while the engine's
-raster line buffering only modeled round joins. A square/disc structuring
+The one place a geometry becomes a buffer mask (SURVEY.md §2.4). The
+reference buffers shapely-side with explicit cap/join styles
+(utils/helpers.py:6-22 — join_style='mitre' for building croppers;
+analyse_traffic_area.py:167,208,228 — cap_style square/flat on
+road/rail/pedestrian lines). `buffer_pieces` serves every caller: the
+overlay kernel's road/rail/pedestrian/passage line records (round joins),
+its A7 barrier lines and J8 building croppers (operators/overlay_core.py),
+and `st_buffer_udf` (functions/geometry.py). A square/disc structuring
 element approximates a mitre/round join band only for axis-aligned edges;
 Vienna's diagonal street grid made that the largest golden-parity gap
 (traffic area −2.7%, r02).
@@ -181,9 +184,25 @@ def boundary_band_pieces(
         if abs(crossz) < 1e-14:
             continue
         side = -1.0 if crossz > 0 else 1.0
-        v = pts[(i + 1) % len(pts)] if i + 1 < len(pts) else pts[0]
-        pieces.extend(_joint_pieces(v, side * nl[i], side * nl[j], dist, join_style, miter_limit))
+        pieces.extend(_joint_pieces(pts[i + 1], side * nl[i], side * nl[j], dist, join_style, miter_limit))
     return pieces
+
+
+def buffer_pieces(
+    kind: str,
+    parts: list[np.ndarray],
+    half: float,
+    cap_style: str,
+    join_style: str,
+    miter_limit: float = MITER_LIMIT_DEFAULT,
+) -> list[np.ndarray]:
+    """Convex pieces of one geometry's buffer by `half`: a line kind's paths
+    give `buffer_line_pieces` (the whole buffer); any other kind's rings give
+    `boundary_band_pieces` (the band a polygon's filled mask is united with
+    or cut by). A part whose vertices all coincide gives none."""
+    if kind in ("linestring", "multilinestring"):
+        return [q for p in parts for q in buffer_line_pieces(p, half, cap_style, join_style, miter_limit)]
+    return [q for r in parts for q in boundary_band_pieces(r, half, join_style, miter_limit)]
 
 
 def pieces_mask(grid, pieces: list[np.ndarray], out: "np.ndarray | None" = None) -> np.ndarray:
@@ -215,52 +234,3 @@ def pieces_mask(grid, pieces: list[np.ndarray], out: "np.ndarray | None" = None)
         inside = (cross <= 1e-9).all(axis=0)
         mask[ymin : ymax + 1, xmin : xmax + 1] |= inside
     return mask
-
-
-def dilate_rings_mask(
-    grid,
-    mask: np.ndarray,
-    rings: list[np.ndarray],
-    dist: float,
-    join_style: str = "mitre",
-    miter_limit: float = MITER_LIMIT_DEFAULT,
-) -> np.ndarray:
-    """mask ∪ vector-join boundary band — shapely buffer(+dist, join_style)
-    of the polygon whose filled raster is `mask` and whose rings are given
-    in vector form (so diagonal edges dilate by exactly `dist`, not the
-    r·√2 a square structuring element adds at 45°)."""
-    pieces: list[np.ndarray] = []
-    for r in rings:
-        pieces.extend(boundary_band_pieces(r, dist, join_style, miter_limit))
-    return mask | pieces_mask(grid, pieces)
-
-
-def erode_rings_mask(
-    grid,
-    mask: np.ndarray,
-    rings: list[np.ndarray],
-    dist: float,
-    join_style: str = "mitre",
-    miter_limit: float = MITER_LIMIT_DEFAULT,
-) -> np.ndarray:
-    """mask \\ vector-join boundary band — shapely buffer(−dist)."""
-    pieces: list[np.ndarray] = []
-    for r in rings:
-        pieces.extend(boundary_band_pieces(r, dist, join_style, miter_limit))
-    return mask & ~pieces_mask(grid, pieces)
-
-
-def rasterize_lines_vector(
-    grid,
-    paths: list[np.ndarray],
-    width: float,
-    cap_style: str = "flat",
-    join_style: str = "round",
-) -> np.ndarray:
-    """Vector-piece line buffering with explicit cap AND join styles; the
-    join-style-aware sibling of raster.rasterize_lines (which models
-    shapely's default round joins via vertex discs)."""
-    pieces: list[np.ndarray] = []
-    for p in paths:
-        pieces.extend(buffer_line_pieces(np.asarray(p), width / 2.0, cap_style, join_style))
-    return pieces_mask(grid, pieces)

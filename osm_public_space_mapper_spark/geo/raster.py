@@ -8,14 +8,16 @@ vectorizes the result back to polygons — exactly the raster↔vector tiling
 operator the north rule asks for, and robust by construction.
 
 Reference behaviours mapped here:
-  buffer cap/join styles        → rasterize_lines width + cap styles
-    (analyse_traffic_area.py:167,208,228-230; helpers.py:6-22)
   smoothing buffer(+r).buffer(−r) → binary close with a disc kernel
     (analyse_traffic_area.py:192-199,278-282,285)
   union / difference / intersection → mask |, &~, &
     (clean_data.py:248,251,306-361; analyse_access.py:188,228,286,323)
   interior-ring (enclosed area) detection → hole rings from vectorize_mask
     (analyse_access.py:176-198)
+
+Buffers with cap/join styles (analyse_traffic_area.py:167,208,228-230;
+helpers.py:6-22) are not here: geo/offset.py turns every buffered line and
+ring into convex pieces and rasterizes them (`pieces_mask`).
 
 All functions operate on boolean masks of shape (H, W); pixel (r, c) covers
 world rect [ox + c·px, ox + (c+1)·px) × [oy + r·px, oy + (r+1)·px).
@@ -89,70 +91,6 @@ def rasterize_polygon(grid: Grid, rings: list[np.ndarray], out: np.ndarray | Non
             hi = min(grid.w - 1, int(np.floor(xi[i + 1] - 0.5)))
             if hi >= lo:
                 mask[row, lo : hi + 1] = True
-    return mask
-
-
-def rasterize_lines(grid: Grid, paths: list[np.ndarray], width: float, cap_style: str = "flat") -> np.ndarray:
-    """Buffered-polyline mask: pixels whose center lies within width/2 of any
-    segment. cap 'round' uses true distance (round ends/joins); 'flat'/'square'
-    emulate Shapely caps: square extends each end segment by width/2.
-
-    Work is restricted to each segment's bbox window — O(Σ window) not O(H·W·S).
-    """
-    half = width / 2.0
-    rpix = half / grid.px
-    mask = grid.empty()
-    for path in paths:
-        path = np.asarray(path, dtype=np.float64)
-        if len(path) < 2:
-            continue
-        gx, gy = grid.world_to_pix(path[:, 0], path[:, 1])
-        pts = np.stack([gx, gy], axis=1)
-        if cap_style == "square":
-            d0 = pts[0] - pts[1]
-            n0 = np.linalg.norm(d0)
-            if n0 > 0:
-                pts[0] = pts[0] + d0 / n0 * rpix
-            d1 = pts[-1] - pts[-2]
-            n1 = np.linalg.norm(d1)
-            if n1 > 0:
-                pts[-1] = pts[-1] + d1 / n1 * rpix
-        for i in range(len(pts) - 1):
-            s0, s1 = pts[i], pts[i + 1]
-            xmin = max(0, int(np.floor(min(s0[0], s1[0]) - rpix - 1)))
-            xmax = min(grid.w - 1, int(np.ceil(max(s0[0], s1[0]) + rpix + 1)))
-            ymin = max(0, int(np.floor(min(s0[1], s1[1]) - rpix - 1)))
-            ymax = min(grid.h - 1, int(np.ceil(max(s0[1], s1[1]) + rpix + 1)))
-            if xmax < xmin or ymax < ymin:
-                continue
-            cy, cx = np.mgrid[ymin : ymax + 1, xmin : xmax + 1]
-            pxc = cx + 0.5
-            pyc = cy + 0.5
-            d = s1 - s0
-            len2 = float(d @ d)
-            if len2 == 0:
-                dist = np.hypot(pxc - s0[0], pyc - s0[1])
-            else:
-                t = ((pxc - s0[0]) * d[0] + (pyc - s0[1]) * d[1]) / len2
-                if cap_style in ("flat", "square"):
-                    # flat: no disc beyond segment ends (square already extended)
-                    t_end = t
-                    inb = (t_end >= 0.0) & (t_end <= 1.0)
-                    t = np.clip(t, 0.0, 1.0)
-                    projx = s0[0] + t * d[0]
-                    projy = s0[1] + t * d[1]
-                    dist = np.where(inb, np.hypot(pxc - projx, pyc - projy), np.inf)
-                    # interior joins still need round coverage between segments
-                    if 0 < i:  # disc at interior vertex s0
-                        dist = np.minimum(dist, np.hypot(pxc - s0[0], pyc - s0[1]))
-                    if i < len(pts) - 2:  # disc at interior vertex s1
-                        dist = np.minimum(dist, np.hypot(pxc - s1[0], pyc - s1[1]))
-                else:
-                    t = np.clip(t, 0.0, 1.0)
-                    projx = s0[0] + t * d[0]
-                    projy = s0[1] + t * d[1]
-                    dist = np.hypot(pxc - projx, pyc - projy)
-            mask[ymin : ymax + 1, xmin : xmax + 1] |= dist <= rpix
     return mask
 
 

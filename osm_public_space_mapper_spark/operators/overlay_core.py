@@ -42,15 +42,16 @@ import pandas as pd
 from pyspark.sql import types as T
 
 from ..cells.grid import cell_bbox
+from ..config import VIENNA
 from ..functions.geometry import GEOM_TYPE
 from ..geo.arrowgeom import np_parts
 from ..geo.kernels import ring_signed_area
+from ..geo.offset import buffer_pieces, pieces_mask
 from ..geo.raster import (
     Grid,
     close,
     erode,
     mask_area,
-    rasterize_lines,
     rasterize_polygon,
     vectorize_mask,
 )
@@ -58,7 +59,6 @@ from .tiling import MASK_FIELDS, pack
 
 OVERLAP_THRESHOLD = 0.95          # analyse_access.py:245
 MIN_ENCLOSED_AREA = 2.0           # analyse_access.py:331
-PEDESTRIAN_WIDTH = 1.8            # regional_defaults.py:55 Vienna default (OverlayConfig carries the live value)
 
 
 @dataclass
@@ -74,7 +74,7 @@ class OverlayConfig:
     # pedestrian_way_default_width (analyse_traffic_area.py:273), so a
     # non-Vienna RegionalConfig must reach the kernel, not just the
     # classify-stage width tables
-    pedestrian_width: float = PEDESTRIAN_WIDTH
+    pedestrian_width: float = VIENNA.pedestrian_way_default_width
 
 
 LAYER_SCHEMA = T.StructType(
@@ -98,13 +98,15 @@ def _raster_record(grid: Grid, rec) -> np.ndarray:
     if rec.geom_kind in ("polygon", "multipolygon"):
         return rasterize_polygon(grid, rec.geom)
     if rec.geom_kind in ("linestring", "multilinestring"):
-        # multilinestring: parts are independent paths; rasterize_lines
-        # already draws each part as its own path. NOTE the classify rules
-        # keep the reference's STRICT is_linestring (type==LineString,
-        # geometry_element.py:95-96), so multilinestrings only reach here via
-        # roles that admit them explicitly — then they render correctly
-        # instead of silently dropping.
-        return rasterize_lines(grid, rec.geom, max(rec.buf_width, grid.px), rec.cap_style)
+        # buffer(buf_width / 2, cap_style) with shapely's default round
+        # joins; at least one pixel wide. multilinestring: parts are
+        # independent paths. NOTE the classify rules keep the reference's
+        # STRICT is_linestring (type==LineString, geometry_element.py:95-96),
+        # so multilinestrings only reach here via roles that admit them
+        # explicitly — then they render correctly instead of silently
+        # dropping.
+        half = max(rec.buf_width, grid.px) / 2
+        return pieces_mask(grid, buffer_pieces(rec.geom_kind, rec.geom, half, rec.cap_style, "round"))
     return grid.empty()  # point/multipoint carry no area
 
 
@@ -167,9 +169,10 @@ def run_overlay(pdf: pd.DataFrame, cfg: OverlayConfig) -> pd.DataFrame:
         platforms |= _raster_record(grid, r)
 
     # --- A7: inaccessible enclosed areas ------------------------------------
-    barrier_lines = grid.empty()
+    barrier_pieces: list[np.ndarray] = []
     for r in by_role.get("barrier_inacc", ()):
-        barrier_lines |= rasterize_lines(grid, r.geom, max(0.002, px), "square")
+        barrier_pieces.extend(buffer_pieces(r.geom_kind, r.geom, max(0.002, px) / 2, "square", "round"))
+    barrier_lines = pieces_mask(grid, barrier_pieces)
     hull = barrier_lines | buildings
     enclosed_masks: list[np.ndarray] = []
     if hull.any():
@@ -253,17 +256,10 @@ def run_overlay(pdf: pd.DataFrame, cfg: OverlayConfig) -> pd.DataFrame:
     # analyse_traffic_area.py:273). The r02 square-structuring-element dilate
     # over-dilated every diagonal edge by up to (√2−1)·1.8 ≈ 0.75 m, cropping
     # thin strips off adjacent roads — the dominant golden traffic-area gap.
-    from ..geo.offset import boundary_band_pieces, buffer_line_pieces, pieces_mask
-
     ped_width = cfg.pedestrian_width
     bld_pieces: list[np.ndarray] = []
     for r in by_role.get("building", ()):
-        if r.geom_kind in ("polygon", "multipolygon"):
-            for ring in r.geom:
-                bld_pieces.extend(boundary_band_pieces(ring, ped_width, "mitre"))
-        elif r.geom_kind in ("linestring", "multilinestring"):
-            for path in r.geom:
-                bld_pieces.extend(buffer_line_pieces(path, ped_width, "round", "mitre"))
+        bld_pieces.extend(buffer_pieces(r.geom_kind, r.geom, ped_width, "round", "mitre"))
     croppers |= buildings | pieces_mask(grid, bld_pieces) | platforms
     croppers_smooth = close(croppers, 0.3 / px)
     road_cropped = roads & ~croppers_smooth

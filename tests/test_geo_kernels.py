@@ -16,7 +16,6 @@ from osm_public_space_mapper_spark.geo.raster import (
     dilate,
     erode,
     mask_area,
-    rasterize_lines,
     rasterize_polygon,
     vectorize_mask,
 )
@@ -108,17 +107,6 @@ def test_raster_roundtrip_and_morphology():
     # erode ∘ dilate identity-ish on large mask
     m2 = erode(dilate(m, 4), 4)
     assert abs(mask_area(m2, 0.5) - mask_area(m, 0.5)) < 150
-
-
-def test_rasterize_lines_cap_styles():
-    g = Grid.from_bbox(0, 0, 100, 100, 0.5)
-    path = [np.array([[20, 50], [80, 50]], float)]
-    flat = mask_area(rasterize_lines(g, path, 10.0, "flat"), 0.5)
-    square = mask_area(rasterize_lines(g, path, 10.0, "square"), 0.5)
-    round_ = mask_area(rasterize_lines(g, path, 10.0, "round"), 0.5)
-    assert abs(flat - 600) < 12
-    assert abs(square - 700) < 14
-    assert abs(round_ - (600 + np.pi * 25)) < 14
 
 
 def test_cells_roundtrip_hierarchy():

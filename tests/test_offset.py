@@ -13,10 +13,7 @@ from osm_public_space_mapper_spark.geo.kernels import polygon_area
 from osm_public_space_mapper_spark.geo.offset import (
     boundary_band_pieces,
     buffer_line_pieces,
-    dilate_rings_mask,
-    erode_rings_mask,
     pieces_mask,
-    rasterize_lines_vector,
 )
 from osm_public_space_mapper_spark.geo.raster import Grid, rasterize_polygon
 
@@ -83,7 +80,7 @@ def test_mitre_dilation_of_rotated_square(angle_deg):
     base = np.array([[-s / 2, -s / 2], [s / 2, -s / 2], [s / 2, s / 2], [-s / 2, s / 2]])
     ring = base @ R.T + 20.0
     mask = rasterize_polygon(grid, [ring])
-    dil = dilate_rings_mask(grid, mask, [ring], r, "mitre")
+    dil = mask | pieces_mask(grid, boundary_band_pieces(ring, r, "mitre"))
     px_area = 0.25 * 0.25
     want_area = (s + 2 * r) ** 2
     # same-lattice oracle: rasterize the analytic outer square, so pixel
@@ -98,7 +95,7 @@ def test_mitre_dilation_of_rotated_square(angle_deg):
     gx, gy = grid.world_to_pix(np.array([corner_pt[0]]), np.array([corner_pt[1]]))
     assert dil[int(gy[0]), int(gx[0])]
     # a round dilation would NOT cover it
-    dil_round = dilate_rings_mask(grid, mask, [ring], r, "round")
+    dil_round = mask | pieces_mask(grid, boundary_band_pieces(ring, r, "round"))
     assert not dil_round[int(gy[0]), int(gx[0])]
     assert abs(dil_round.sum() * px_area - (s ** 2 + 4 * s * r + np.pi * r * r)) / want_area < 0.02
 
@@ -111,15 +108,15 @@ def test_mitre_erosion_of_rotated_square():
     base = np.array([[-s / 2, -s / 2], [s / 2, -s / 2], [s / 2, s / 2], [-s / 2, s / 2]])
     ring = base @ R.T + 20.0
     mask = rasterize_polygon(grid, [ring])
-    er = erode_rings_mask(grid, mask, [ring], r, "mitre")
+    er = mask & ~pieces_mask(grid, boundary_band_pieces(ring, r, "mitre"))
     px_area = 0.25 * 0.25
     want = (s - 2 * r) ** 2
     assert abs(er.sum() * px_area - want) / want < 0.015
     # close (dilate then erode on the dilated rings' analytic form) is
     # identity for a convex polygon: dilate's band subtracted back
-    dil = dilate_rings_mask(grid, mask, [ring], r, "mitre")
+    dil = mask | pieces_mask(grid, boundary_band_pieces(ring, r, "mitre"))
     outer = base * ((s + 2 * r) / s) @ R.T + 20.0
-    closed = erode_rings_mask(grid, dil, [outer], r, "mitre")
+    closed = dil & ~pieces_mask(grid, boundary_band_pieces(outer, r, "mitre"))
     assert (closed ^ mask).sum() * px_area < 0.6  # px-film only
 
 
@@ -130,7 +127,7 @@ def test_hole_ring_band_shrinks_hole():
     ext = np.array([[5.0, 5.0], [35.0, 5.0], [35.0, 35.0], [5.0, 35.0]])
     hole = np.array([[15.0, 15.0], [25.0, 15.0], [25.0, 25.0], [15.0, 25.0]])
     mask = rasterize_polygon(grid, [ext, hole])
-    dil = dilate_rings_mask(grid, mask, [ext, hole], 2.0, "mitre")
+    dil = mask | pieces_mask(grid, boundary_band_pieces(ext, 2.0, "mitre") + boundary_band_pieces(hole, 2.0, "mitre"))
     cy, cx = grid.world_to_pix(np.array([20.0]), np.array([16.0]))[0], None
     gx, gy = grid.world_to_pix(np.array([20.0, 20.0]), np.array([16.0, 20.0]))
     assert dil[int(gy[0]), int(gx[0])]  # 1 m into the old hole now covered
@@ -141,9 +138,9 @@ def test_vector_line_join_styles_nested():
     grid = _grid()
     path = np.array([[8.0, 8.0], [20.0, 24.0], [32.0, 10.0]])
     w = 4.0
-    bevel = rasterize_lines_vector(grid, [path], w, "flat", "bevel")
-    mitre = rasterize_lines_vector(grid, [path], w, "flat", "mitre")
-    rnd = rasterize_lines_vector(grid, [path], w, "flat", "round")
+    bevel = pieces_mask(grid, buffer_line_pieces(path, w / 2, "flat", "bevel"))
+    mitre = pieces_mask(grid, buffer_line_pieces(path, w / 2, "flat", "mitre"))
+    rnd = pieces_mask(grid, buffer_line_pieces(path, w / 2, "flat", "round"))
     assert not (bevel & ~mitre).any()  # bevel ⊆ mitre
     assert not (bevel & ~rnd).any()    # bevel ⊆ round
     assert mitre.sum() >= rnd.sum()    # mitre covers the arc + spike

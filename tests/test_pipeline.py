@@ -294,3 +294,33 @@ def test_run_overlay_kernel_without_spark():
     assert (rows["completeness_gap"] == 0).all()
     assert building.sum() * px * px == 40 * 40
     assert road.any() and not (building & road).any()
+
+
+@pytest.mark.parametrize("px", [1.0, 0.5, 0.25])
+@pytest.mark.parametrize("angle_deg", [0, 20, 45, 60])
+def test_barrier_ring_encloses_its_interior(angle_deg, px):
+    """A7 on a hand-built group frame, no Spark session: one closed 60 m
+    square barrier_inacc ring, turned off the pixel axes. The buffered line
+    (one pixel wide, square caps) must close at every corner, so the
+    enclosed 'undefined space' / 'no' row holds the (60 − px)² interior.
+    The square sits off the pixel lattice: an edge lying exactly on pixel
+    edges ties with two pixel columns, which both take it."""
+    import pandas as pd
+
+    from osm_public_space_mapper_spark.cells.grid import cell_bbox, encode_cells
+    from osm_public_space_mapper_spark.operators.overlay_core import run_overlay
+
+    cell = int(encode_cells(np.array([4_800_100.0]), np.array([2_800_100.0]), 8)[0])
+    x0, y0, x1, y1 = (float(v[0]) for v in cell_bbox(np.array([cell])))
+    cx, cy = (x0 + x1) / 2 + 0.13, (y0 + y1) / 2 + 0.37
+    a = np.deg2rad(angle_deg)
+    rot = np.array([[np.cos(a), -np.sin(a)], [np.sin(a), np.cos(a)]])
+    corners = np.array([[-30.0, -30.0], [30.0, -30.0], [30.0, 30.0], [-30.0, 30.0], [-30.0, -30.0]])
+    ring = (corners @ rot.T + [cx, cy]).tolist()
+    pdf = pd.DataFrame([dict(
+        overlay_cell=cell, element_id=1, role="barrier_inacc", geom_kind="linestring", geom=[ring],
+        space_category=None, access_tags=None, assumed_access=None, buf_width=0.0, cap_style="square",
+    )])
+    rows = run_overlay(pdf, OverlayConfig(px=px, margin=16.0, bbox=(cx - 50, cy - 50, cx + 50, cy + 50)))
+    area = rows.set_index(["space_category", "access"])["area"]
+    assert abs(area[("undefined space", "no")] / (60 - px) ** 2 - 1) < 0.005
