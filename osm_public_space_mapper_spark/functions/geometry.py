@@ -185,15 +185,15 @@ def st_buffer_udf(dist: float, cap_style: str = "round", join_style: str = "roun
             h64 = -(-max(1, int(np.ceil((ymax - ymin) / res))) // 64) * 64
             grid = Grid(xmin, ymin, res, w64, h64)
             pieces = buffer_pieces(k, rings, half, cap_style, join_style)
-            if k in ("linestring", "multilinestring"):
-                mask = pieces_mask(grid, pieces, out=get_buf(grid.h, grid.w, 0))
-            else:
-                mask = rasterize_polygon(grid, rings, out=get_buf(grid.h, grid.w, 0))
-                band = pieces_mask(grid, pieces, out=get_buf(grid.h, grid.w, 1))
+            mask = pieces_mask(grid, pieces, out=get_buf(grid.h, grid.w, 0))
+            if k not in ("linestring", "multilinestring"):
+                # a polygon's pieces are its boundary band: the buffer is
+                # fill ∪ band (dist > 0) or fill ∖ band (dist < 0)
+                fill = rasterize_polygon(grid, rings, out=get_buf(grid.h, grid.w, 1))
                 if dist > 0:
-                    np.logical_or(mask, band, out=mask)
+                    np.logical_or(mask, fill, out=mask)
                 else:
-                    np.logical_and(mask, ~band, out=mask)
+                    np.logical_and(fill, ~mask, out=mask)
             polys = vectorize_mask(grid, mask)
             tol = 0.45 * res
             out.append(

@@ -194,15 +194,14 @@ def buffer_pieces(
     half: float,
     cap_style: str,
     join_style: str,
-    miter_limit: float = MITER_LIMIT_DEFAULT,
 ) -> list[np.ndarray]:
     """Convex pieces of one geometry's buffer by `half`: a line kind's paths
     give `buffer_line_pieces` (the whole buffer); any other kind's rings give
     `boundary_band_pieces` (the band a polygon's filled mask is united with
     or cut by). A part whose vertices all coincide gives none."""
     if kind in ("linestring", "multilinestring"):
-        return [q for p in parts for q in buffer_line_pieces(p, half, cap_style, join_style, miter_limit)]
-    return [q for r in parts for q in boundary_band_pieces(r, half, join_style, miter_limit)]
+        return [q for p in parts for q in buffer_line_pieces(p, half, cap_style, join_style)]
+    return [q for r in parts for q in boundary_band_pieces(r, half, join_style)]
 
 
 def pieces_mask(grid, pieces: list[np.ndarray], out: "np.ndarray | None" = None) -> np.ndarray:

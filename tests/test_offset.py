@@ -13,6 +13,7 @@ from osm_public_space_mapper_spark.geo.kernels import polygon_area
 from osm_public_space_mapper_spark.geo.offset import (
     boundary_band_pieces,
     buffer_line_pieces,
+    buffer_pieces,
     pieces_mask,
 )
 from osm_public_space_mapper_spark.geo.raster import Grid, rasterize_polygon
@@ -144,6 +145,18 @@ def test_vector_line_join_styles_nested():
     assert not (bevel & ~mitre).any()  # bevel ⊆ mitre
     assert not (bevel & ~rnd).any()    # bevel ⊆ round
     assert mitre.sum() >= rnd.sum()    # mitre covers the arc + spike
+
+
+def test_zero_length_path_has_no_pieces():
+    """A path whose vertices all coincide buffers to nothing, whatever its
+    cap style (shapely gives a disc for round caps, a square for square caps): such a
+    road/rail/pedestrian/barrier record draws no pixel in the overlay."""
+    grid = _grid()
+    point_path = np.array([[20.0, 20.0], [20.0, 20.0], [20.0, 20.0]])
+    for cap in ("round", "square", "flat"):
+        pieces = buffer_pieces("linestring", [point_path], 3.0, cap, "round")
+        assert pieces == []
+        assert not pieces_mask(grid, pieces).any()
 
 
 def _area(geom):
