@@ -199,7 +199,16 @@ def generate_elements() -> list[dict]:
 
 
 def elements_to_spark(spark, rows: list[dict] | None = None):
-    """Build the `elements` DataFrame with the engine schema (SURVEY.md §1.3)."""
+    """Build the `elements` DataFrame with the engine schema (SURVEY.md §1.3).
+
+    The rows go through a pandas frame, as in `images_to_spark`. In a
+    session with Arrow enabled (`get_spark`'s) the frame is a
+    `LocalRelation`: a scan starts no Python worker, and Catalyst's
+    `ConvertToLocalRelation` folds the whole `classify_stage` projection
+    into one `LocalTableScan` at optimization time, so no classify code is
+    generated. A source that is not local (PBF, parquet) still runs that
+    projection per row. Each `tags` map keeps its dict's insertion order."""
+    import pandas as pd
     from pyspark.sql import types as T
 
     if rows is None:
@@ -212,6 +221,4 @@ def elements_to_spark(spark, rows: list[dict] | None = None):
             T.StructField("tags", T.MapType(T.StringType(), T.StringType()), False),
         ]
     )
-    return spark.createDataFrame(
-        [(r["element_id"], r["geom_kind"], r["geom"], r["tags"]) for r in rows], schema
-    )
+    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.fieldNames()), schema)

@@ -32,13 +32,13 @@ RESTRICTED_ACCESS_KEYS = ["fee", "opening_hours", "max_age", "min_age", "female"
 
 def _set_once(df: DataFrame, col: str, value: Column, source: Column | None = None, source_col: str = "access_derived_from") -> DataFrame:
     """first-writer-wins assignment; optionally stamps the provenance column
-    (also write-once) when this stage is the writer."""
+    (also write-once) when this stage is the writer. Both are one projection:
+    the stamp reads `col` before this assignment, and `value` must not read
+    `source_col`."""
+    cols = {col: F.coalesce(F.col(col), value)}
     if source is not None:
-        df = df.withColumn(
-            source_col,
-            F.coalesce(F.col(source_col), F.when(F.col(col).isNull() & value.isNotNull(), source)),
-        )
-    return df.withColumn(col, F.coalesce(F.col(col), value))
+        cols[source_col] = F.coalesce(F.col(source_col), F.when(F.col(col).isNull() & value.isNotNull(), source))
+    return df.withColumns(cols)
 
 
 def _has_restriction_tag() -> Column:
@@ -86,15 +86,12 @@ def set_traffic_space_type(df: DataFrame) -> DataFrame:
     # the ONLY access overwrite in the pipeline: parking polygons force 'no';
     # the reference splits buildings off before this stage, so they keep theirs
     parking = is_parking_polygon() & ~F.col("space_type").eqNullSafe("building")
-    df = df.withColumn(
-        "access", F.when(parking, "no").otherwise(F.col("access"))
-    ).withColumn(
-        "access_derived_from",
-        F.when(parking, F.coalesce(F.col("access_derived_from"), F.lit("space type"))).otherwise(
-            F.col("access_derived_from")
-        ),
-    )
-    return df
+    return df.withColumns({
+        "access": F.when(parking, "no").otherwise(F.col("access")),
+        "access_derived_from": F.when(
+            parking, F.coalesce(F.col("access_derived_from"), F.lit("space type"))
+        ).otherwise(F.col("access_derived_from")),
+    })
 
 
 # --- road width estimation (analyse_traffic_area.py:94-161 + regional_defaults.py) ---

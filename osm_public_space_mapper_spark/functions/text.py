@@ -198,10 +198,12 @@ def _top_bigram_kernel(df, id_col: str, text_col: str):
     schema = T.StructType(
         [T.StructField("doc_id", schema[0].dataType)] + list(schema)[1:]
     )
+    # the kernel is row-independent: a round-robin spread over the cores,
+    # not a key, decides which task a text goes to
     n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     return (
         df.select(F.col(id_col), F.col(text_col))
-        .repartition(n_part, id_col)
+        .repartition(n_part)
         .mapInPandas(_top, schema)
     )
 

@@ -139,18 +139,11 @@ def interpret_barriers(df: DataFrame, res: int = RES_FINE) -> DataFrame:
     # value; 'barrier' is the engine's explicit stamp for that path (never
     # exported — final layer features carry only category+access).
     barrier_written = F.col("access").isNull() & P.is_barrier()
-    out = (
-        out.withColumn(
-            "access_derived_from",
-            F.when(barrier_written, F.lit("barrier")).otherwise(F.col("access_derived_from")),
-        )
-        .withColumn(
-            "access",
-            F.coalesce(
-                F.col("access"),
-                F.when(P.is_barrier(), F.coalesce(F.col("barrier_access"), F.lit("no"))),
-            ),
-        )
-        .drop("barrier_access")
-    )
-    return out
+    # one projection: the stamp reads `access` before it is resolved
+    return out.withColumns({
+        "access_derived_from": F.when(barrier_written, F.lit("barrier")).otherwise(F.col("access_derived_from")),
+        "access": F.coalesce(
+            F.col("access"),
+            F.when(P.is_barrier(), F.coalesce(F.col("barrier_access"), F.lit("no"))),
+        ),
+    }).drop("barrier_access")

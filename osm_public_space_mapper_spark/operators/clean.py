@@ -18,10 +18,9 @@ from ..functions.geometry import st_project
 def init_attribute_columns(df: DataFrame) -> DataFrame:
     """Adds the nullable pipeline attribute columns (GeometryElement schema,
     reference utils/geometry_element.py:11-31)."""
-    for col in ("space_type", "access", "access_derived_from", "space_category"):
-        if col not in df.columns:
-            df = df.withColumn(col, F.lit(None).cast("string"))
-    return df
+    have = set(df.columns)
+    cols = ("space_type", "access", "access_derived_from", "space_category")
+    return df.withColumns({c: F.lit(None).cast("string") for c in cols if c not in have})
 
 
 def drop_invalid_geometries(df: DataFrame) -> DataFrame:
@@ -46,9 +45,8 @@ def drop_points_apart_from_entrances(df: DataFrame) -> DataFrame:
 
 def drop_irrelevant_elements_based_on_tags(df: DataFrame) -> DataFrame:
     """reference clean_data.py:129-236: non-groundlevel, then three tag passes
-    from which buildings are exempt (split/union-back = when(is_building, keep))."""
-    df = df.filter(~P.is_non_groundlevel())
-
+    from which buildings are exempt (split/union-back = when(is_building, keep)),
+    as one filter."""
     building = P.is_building()
     relevant_keys = [
         "highway", "public_transport", "railway", "barrier", "amenity", "leisure",
@@ -58,10 +56,6 @@ def drop_irrelevant_elements_based_on_tags(df: DataFrame) -> DataFrame:
     has_relevant = F.lit(False)
     for k in relevant_keys:
         has_relevant = has_relevant | P.has(k)
-    df = df.filter(building | has_relevant)
-
-    df = df.filter(building | ~P.has("boundary"))
-
     relevant_amenity = ["fountain", "shelter", "parking", "parking_space", "bus_station",
                         "grave_yard", "biergarten", "motorcycle_parking", "public_bath"]
     irrelevant_values = {
@@ -75,7 +69,12 @@ def drop_irrelevant_elements_based_on_tags(df: DataFrame) -> DataFrame:
     for k, vals in irrelevant_values.items():
         exclude = exclude | P.tin(k, *vals)
     exclude = exclude | (P.has("amenity") & ~P.tin("amenity", *relevant_amenity))
-    return df.filter(building | ~exclude)
+    return df.filter(
+        ~P.is_non_groundlevel()
+        & (building | has_relevant)
+        & (building | ~P.has("boundary"))
+        & (building | ~exclude)
+    )
 
 
 def clean_geometries(df: DataFrame) -> DataFrame:
@@ -95,9 +94,11 @@ def clean_geometries(df: DataFrame) -> DataFrame:
             F.element_at(F.col("geom"), 1),
         ).otherwise(F.concat(F.element_at(F.col("geom"), 1), F.array(F.element_at(F.col("geom"), 1)[0])))
     )
-    df = df.withColumn("geom", F.when(false_poly, closed_ring).otherwise(F.col("geom")))
-    df = df.withColumn("geom_kind", F.when(false_poly, "linestring").otherwise(F.col("geom_kind")))
-    return df
+    # one projection: both read the relabelled geom_kind; the geom_kind rewrite does not read geom
+    return df.withColumns({
+        "geom": F.when(false_poly, closed_ring).otherwise(F.col("geom")),
+        "geom_kind": F.when(false_poly, "linestring").otherwise(F.col("geom_kind")),
+    })
 
 
 def project_geometries(df: DataFrame) -> DataFrame:

@@ -485,6 +485,15 @@ def simhash64(documents: DataFrame, bits: int = 64) -> DataFrame:
     return simhash_kernel_frame(documents, bits)
 
 
+def _block_pairs(spark, nb: int) -> DataFrame:
+    """The upper-triangle block-pair table (bi ≤ bj < nb, both int), built in
+    Catalyst: no Python rows to pickle and no Python worker on a scan."""
+    bi = F.col("id").cast("int")
+    return spark.range(nb).select(
+        bi.alias("bi"), F.explode(F.sequence(bi, F.lit(nb - 1))).alias("bj")
+    )
+
+
 def embedding_dups(
     embeddings: DataFrame,
     threshold: float = 0.95,
@@ -530,12 +539,10 @@ def embedding_dups(
             by_bytes,
         )
     nb = n_blocks
-    spark = embeddings.sparkSession
     e = embeddings.select("vec_id", "embedding").withColumn(
         "blk", F.pmod(F.xxhash64("vec_id"), F.lit(nb)).cast("int")
     )
-    pair_rows = [(i, j) for i in range(nb) for j in range(i, nb)]
-    pairs = spark.createDataFrame(pair_rows, "bi int, bj int")
+    pairs = _block_pairs(embeddings.sparkSession, nb)
     lhs = e.join(F.broadcast(pairs), e.blk == pairs.bi).select(
         "bi", "bj", F.lit(0).alias("role"), "vec_id", "embedding"
     )

@@ -100,7 +100,11 @@ def build_overlay_records(classified: DataFrame, region: RegionalConfig | None =
     the job that consumes the records, so consume them once (e.g. one
     `overlay_stage` whose layer is cached) rather than re-reading them per
     action. The pinned RDD lives until `session.release(records)` (see
-    `session.pin` for what a localCheckpoint gives up)."""
+    `session.pin` for what a localCheckpoint gives up).
+
+    Over local elements (`elements_to_spark`) Catalyst folds the whole
+    classification into that one scan at optimization time, so the
+    checkpoint job only copies rows."""
     region = region or VIENNA
     classified = pin(classified)
 

@@ -13,6 +13,17 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app: str = "osm-public-space-mapper-spark", cores: int | str = "*", shuffle_partitions: int | None = None) -> SparkSession:
+    """The engine's local[cores] session.
+
+    PySpark's DataFrame origin capture is off
+    (`spark.python.sql.dataFrameDebugging.enabled=false`): with it on, every
+    `F.*` / `Column` / `DataFrame` call walks the Python stack and makes about
+    six extra py4j round trips to record its call site, which is most of the
+    Python-side cost of building the classify and records plans. What is lost is
+    only the Python call-site lines in the "DataFrame" query context of a
+    runtime error (e.g. an ANSI cast failure); the error itself still raises
+    with its message and the SQL context. It is a static conf, so it holds
+    only for a session this factory creates, not one already running."""
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = (
@@ -31,6 +42,7 @@ def get_spark(app: str = "osm-public-space-mapper-spark", cores: int | str = "*"
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # managed (bucketed) tables land in tmp, never the repo working dir
         .config(
             "spark.sql.warehouse.dir",

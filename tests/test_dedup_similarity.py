@@ -189,6 +189,15 @@ def test_no_persistent_rdds_after_dedup_queries(spark, docs):
     assert after - before == set()
 
 
+def test_embedding_block_pairs_upper_triangle(spark):
+    """embedding_dups' block-pair table is every (bi, bj) with bi <= bj < nb,
+    as two int columns."""
+    for nb in (1, 2, 5):
+        pairs = DD._block_pairs(spark, nb)
+        assert pairs.dtypes == [("bi", "int"), ("bj", "int")]
+        assert sorted(map(tuple, pairs.collect())) == [(i, j) for i in range(nb) for j in range(i, nb)]
+
+
 def test_minhash_pairs_plan_reuses_exchange(spark, docs):
     """Both self-join sides are one subplan: the physical plan must contain a
     ReusedExchange (signature kernel runs once) and, being fully declarative,

@@ -169,18 +169,25 @@ def test_parking_building_keeps_building_access(spark):
     }
 
 
-def test_layer_build_plans_have_no_python_eval(spark, fixture_layer):
+def test_layer_build_plans_have_no_python_eval(spark, fixture_layer, tmp_path):
     """Projection, bbox and cell cover are Catalyst: the classified frame
-    scans the elements once with no Python node, and past the checkpointed
-    records the only Python in the overlay, tiling and PIP-explode plans is
-    their per-group kernels, never a scalar ArrowEvalPython node. Tiles are
-    cut from the stored layer's masks row by row: no shuffle, no grouped
+    scans the elements once with no Python node. Over the local fixture
+    frame Catalyst folds the whole classify stage into its one
+    LocalTableScan; over the same rows stored as parquet (the scale path,
+    which does not fold) it is one file scan. Past the checkpointed records
+    the only Python in the overlay, tiling and PIP-explode plans is their
+    per-group kernels, never a scalar ArrowEvalPython node. Tiles are cut
+    from the stored layer's masks row by row: no shuffle, no grouped
     kernel."""
-    classified = classify_stage(elements_to_spark(spark))
-    plan = classified._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 0
-    assert plan.count("Scan ExistingRDD") == 1
-    records = build_overlay_records(classified)
+    local = elements_to_spark(spark)
+    local.write.parquet(str(tmp_path / "elements"))
+    stored = spark.read.parquet(str(tmp_path / "elements"))
+    for source, scan in ((local, "LocalTableScan"), (stored, "FileScan parquet")):
+        plan = classify_stage(source)._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("ArrowEvalPython") == 0, scan
+        assert plan.count("Scan ExistingRDD") == 0, scan
+        assert plan.count(scan) == 1, scan
+    records = build_overlay_records(classify_stage(local))
     try:
         layer = overlay_stage(records, _overlay_cfg(0.5), overlay_res=8)
         plans = {
@@ -196,6 +203,50 @@ def test_layer_build_plans_have_no_python_eval(spark, fixture_layer):
     plan = tiling.rasterize_tiles(fixture_layer, tile_res=10, px=0.25)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 0
     assert plan.count("FlatMapGroupsInPandas") == 0
+
+
+def test_elements_frame_is_a_local_relation(spark):
+    """The fixture frame goes through Arrow into a LocalRelation (no Python
+    RDD to scan) and holds the generated rows; `tags` compares as a dict,
+    since a map's entry order is not part of its value."""
+    df = elements_to_spark(spark)
+    assert df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName() == "LocalRelation"
+    got = [(r.element_id, r.geom_kind, r.geom, dict(r.tags)) for r in df.collect()]
+    assert got == [(r["element_id"], r["geom_kind"], r["geom"], r["tags"]) for r in generate_elements()]
+
+
+def test_session_has_origin_capture_off(spark):
+    """`get_spark` turns PySpark's per-call origin capture off (see its
+    docstring for what that gives up)."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+# py4j commands Python sends for elements_to_spark → classify_stage →
+# build_overlay_records on the fixture: 7.1 k measured with origin capture off
+# and the withColumn chains merged; 21.6 k with capture on and the elements
+# built as a Python RDD (4 cores)
+RECORDS_PY4J_BUDGET = 14_000
+
+
+def test_records_build_py4j_budget(spark, monkeypatch):
+    """Building the fixture's overlay records stays on the JVM: the number of
+    py4j commands Python sends stays under RECORDS_PY4J_BUDGET."""
+    import py4j.clientserver
+
+    sent = []
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counted(self, *args, **kwargs):
+        sent.append(1)
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counted)
+    records = build_overlay_records(classify_stage(elements_to_spark(spark)))
+    monkeypatch.undo()
+    try:
+        assert len(sent) <= RECORDS_PY4J_BUDGET
+    finally:
+        release(records)
 
 
 def test_release_overlay_records(spark, tmp_path):
